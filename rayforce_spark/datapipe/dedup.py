@@ -15,6 +15,9 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -783,406 +786,6 @@ def minhash_lsh_pairs(
     return _minhash_verify(cand, texts, threshold)
 
 
-#: On-disk format versions of the persisted index families. Bumped when
-#: a change alters what the data legs CONTAIN (not how they're computed):
-#: minhash is at 2 because r10 switched band-bucket values from 32-bit
-#: hash() to xxhash64 — probing a format-1 index with format-2 code would
-#: compute buckets that never match the stored values and SILENTLY return
-#: an empty pair set (the failure mode is wrong-empty, not an error).
-#: Readers raise on any mismatch, including a missing field (an index
-#: written before versioning existed is by definition format-unknown).
-_MINHASH_INDEX_FORMAT = 2
-_SIMHASH_INDEX_FORMAT = 1
-_JACCARD_INDEX_FORMAT = 1
-
-
-def _check_index_format(meta_row, expected: int, family: str,
-                        path: str) -> None:
-    """Raise unless the _meta sidecar's format matches this build's —
-    mismatched on-disk hash/bucket families don't error at probe time,
-    they return empty results, so the version gate is the only loud
-    failure available."""
-    got = meta_row.asDict().get("format")
-    if got != expected:
-        raise ValueError(
-            f"{family} index at {path} has on-disk format {got!r} but "
-            f"this build reads format {expected}: its stored buckets/"
-            "prefixes were computed by an incompatible hash family, and "
-            "probing it would silently return empty or incomplete pairs. "
-            f"Rebuild it into a fresh path with set_{family}_index.")
-
-
-def _lease(spark, path: str):
-    """(fs, jpath) of the index's compaction lease marker."""
-    from rayforce_spark.sources._sidecar import _fs_path
-
-    fs, _ = _fs_path(spark, path)
-    return fs, spark._jvm.org.apache.hadoop.fs.Path(f"{path}/_compacting")
-
-
-def _check_compaction_lease(spark, path: str, family: str) -> None:
-    """Raise if a compaction lease is held on the index — the ENFORCED
-    form of the compact_*_index concurrency contract (r11 verdict #2:
-    streaming ingest extends continuously, which is exactly the
-    deployment that wants compaction most, so a doc-only "don't run
-    concurrently" is weakest where it matters). Compaction writes
-    ``_compacting`` before snapshotting a leg's file list and removes
-    it only after the old files are deleted; inside that window an
-    extend would have its fresh rows read by the rewrite AND kept
-    (double-counted until the next compaction) and a probe can plan
-    against files the rewrite then deletes (FileNotFoundException
-    mid-job, or silently dropped rows under
-    spark.sql.files.ignoreMissingFiles). A lease left behind by a
-    CRASHED compaction keeps these failing loudly until the compaction
-    is re-run — it is duplicate-tolerant and completes the interrupted
-    rewrite (see _compact_leg's crash-safety note); the auto-compaction
-    hook in streaming ingest self-heals this way. NB the check is
-    advisory-at-the-edges: a probe that passes the check while
-    compaction starts a moment later still races — schedule external
-    probes/extends away from compaction windows; the lease turns the
-    overlap from silent corruption into a loud error in the common
-    case."""
-    fs, jp = _lease(spark, path)
-    if fs.exists(jp):
-        raise RuntimeError(
-            f"{family} index at {path} holds a compaction lease "
-            "(_compacting): a compact_*_index run is in progress or "
-            "crashed mid-rewrite. Re-run the compaction to completion "
-            "(it is duplicate-tolerant and clears the lease), then "
-            "retry this extend/probe.")
-
-
-def stamp_index_format(spark, path: str, family: str) -> None:
-    """One-shot ``_meta`` migration for a PRE-VERSIONING simhash or
-    jaccard index: those families' on-disk leg content is identical to
-    format 1 (only minhash actually changed content, in the r10
-    32-bit→xxhash64 bucket-key switch), so an index written before
-    format versioning existed can be stamped format-1 in place instead
-    of paying a full rebuild for bytes that didn't change (r11 ADVICE).
-    Refuses minhash (its unversioned content is format-0 by definition
-    — rebuild with set_minhash_index) and refuses an already-versioned
-    sidecar. The sidecar overwrite is not atomic — run this as the
-    one-shot maintenance op it is, not concurrently with readers."""
-    fmts = {"simhash": _SIMHASH_INDEX_FORMAT, "jaccard": _JACCARD_INDEX_FORMAT}
-    if family not in fmts:
-        raise ValueError(
-            f"stamp_index_format supports simhash/jaccard, not {family!r}: "
-            "an unversioned minhash index predates the r10 bucket-hash "
-            "change and its stored buckets ARE incompatible — rebuild it "
-            "with set_minhash_index.")
-    meta = spark.read.parquet(f"{path}/_meta")
-    row = meta.collect()[0]
-    if row.asDict().get("format") is not None:
-        raise ValueError(
-            f"{family} index at {path} already carries on-disk format "
-            f"{row['format']} — nothing to migrate.")
-    # materialize the row driver-side BEFORE overwriting the files it
-    # reads, and drop the stale file-listing cache afterwards (an
-    # overwritten path otherwise serves FileNotFound from the cache)
-    out = spark.createDataFrame([row], meta.schema)
-    (out.drop("format").withColumn("format", F.lit(fmts[family]))
-     .coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta"))
-    spark.catalog.refreshByPath(f"{path}/_meta")
-
-
-def _minhash_parts(df: DataFrame, text_col: str, id_col: str, *,
-                   num_perm: int, bands: int, shingle_k: int,
-                   sig_impl: str) -> tuple[DataFrame, DataFrame]:
-    """(shingles, buckets) for a batch — the two persisted legs of the
-    MinHash index, derived from ONE materialized shingle pass: the two
-    legs feed two independent Spark jobs (two writes, or a write and a
-    join), and recomputing the shingles per job would persist
-    INCONSISTENT legs for a non-deterministic input (sampled /
-    rand-keyed / mutated-between-jobs sources) — a silent corruption of
-    the exact-Jaccard verify, not an error. The lazy localCheckpoint
-    materializes the shingled frame on first use and serves every later
-    consumer from executor-local blocks."""
-    shingled = with_shingle_hashes(
-        fanout(df).select(F.col(id_col).alias("__id"),
-                          F.col(text_col).alias("__t")),
-        "__t", shingle_k, "__bh",
-    ).select("__id", "__bh").localCheckpoint(eager=False)
-    sig = _minhash_sig(shingled, num_perm=num_perm, sig_impl=sig_impl)
-    return shingled, _band_buckets(sig, num_perm=num_perm, bands=bands)
-
-
-def set_minhash_index(corpus: DataFrame, path: str, text_col: str,
-                      id_col: str, *, num_perm: int = 64, bands: int = 16,
-                      shingle_k: int = 3, sig_impl: str = "expr") -> None:
-    """Persist a MinHash-LSH dedup INDEX — the continuous-ingestion
-    twin of :func:`minhash_lsh_pairs` (reference analog: the dedup
-    workflows its docs build from pair output, run incrementally as a
-    corpus grows; same shape as similarity.set_ivf's train-once/
-    probe-many layout). Writes under ``path``:
-
-    - ``_meta``      — the banding parameters plus the on-disk format
-      version (probes and extensions MUST band identically or buckets
-      don't line up; they read this sidecar rather than trusting
-      call-site kwargs, and raise on a format mismatch — see
-      _check_index_format),
-    - ``buckets``    — (__id, __bucket), bands rows per doc, 16 bytes
-      each: the slim candidate-join side,
-    - ``shingles``   — (__id, __bh shingle-hash array): the exact-
-      Jaccard verify side.
-
-    Scale: a new batch joins the on-disk bucket table and re-reads
-    NOTHING else of the old corpus — no re-shingling, no re-signing,
-    no corpus shuffle; index bytes are O(corpus × bands) longs plus
-    the shingle sets. Ids must be unique across all batches ever
-    written (the same contract as packing's join-back id).
-
-    The params sidecar is written LAST — the commit marker: a build
-    into a FRESH path that dies mid-way leaves no sidecar, so probes
-    fail loudly (missing _meta) instead of banding against a
-    half-built index. Rebuilding IN PLACE with different params is
-    inherently non-atomic under either write order (some window pairs
-    old params with new data or vice versa, and mismatched banding
-    silently returns empty duplicate sets) — rebuild into a fresh
-    path and switch readers over, or delete the old index first."""
-    shingled, buckets = _minhash_parts(
-        corpus, text_col, id_col, num_perm=num_perm, bands=bands,
-        shingle_k=shingle_k, sig_impl=sig_impl)
-    buckets.write.mode("overwrite").parquet(f"{path}/buckets")
-    shingled.write.mode("overwrite").parquet(f"{path}/shingles")
-    corpus.sparkSession.createDataFrame(
-        [(int(num_perm), int(bands), int(shingle_k), str(sig_impl),
-          _MINHASH_INDEX_FORMAT)],
-        "num_perm int, bands int, shingle_k int, sig_impl string,"
-        " format int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
-
-
-def _read_minhash_meta(spark, path: str) -> dict:
-    r = spark.read.parquet(f"{path}/_meta").collect()[0]
-    _check_index_format(r, _MINHASH_INDEX_FORMAT, "minhash", path)
-    return {"num_perm": r["num_perm"], "bands": r["bands"],
-            "shingle_k": r["shingle_k"], "sig_impl": r["sig_impl"]}
-
-
-def extend_minhash_index(new_df: DataFrame, path: str, text_col: str,
-                         id_col: str) -> None:
-    """Append a new batch to a persisted MinHash index (banding
-    parameters come from the index's own ``_meta`` sidecar). The
-    existing index files are untouched — this is the ingest step of
-    the dedup-then-extend loop."""
-    _check_compaction_lease(new_df.sparkSession, path, "minhash")
-    meta = _read_minhash_meta(new_df.sparkSession, path)
-    shingled, buckets = _minhash_parts(new_df, text_col, id_col, **meta)
-    # VERIFY leg (shingles) first, CANDIDATE leg (buckets) second: a
-    # crash between the two appends must not leave bucket rows whose
-    # pairs silently vanish at the verify join — with this order a torn
-    # extend leaves orphan shingle rows (the doc is merely invisible to
-    # candidates, as if never ingested), and the retry re-appends both
-    # legs; the duplicate shingle rows only multiply verify-join rows,
-    # which minhash_index_pairs' pair-key dedup collapses
-    shingled.write.mode("append").parquet(f"{path}/shingles")
-    buckets.write.mode("append").parquet(f"{path}/buckets")
-
-
-def _compact_leg(spark, leg_path: str) -> tuple[int, int]:
-    """Compact ONE index leg directory in place: read it, collapse
-    exact-duplicate rows (only torn/replayed appends produce them —
-    every index-leg row kind is semantically idempotent, and the probes
-    already pair-dedup, so collapsing is safe), rewrite as
-    size-targeted files APPENDED to the same directory, then delete the
-    pre-existing data files. Returns (files_before, files_after).
-
-    Crash-safe by the same argument the extends use: a crash AFTER the
-    append but before the deletes leaves every row present twice
-    (probes tolerate duplicates by construction; re-running compaction
-    collapses them and finishes), and a crash mid-delete leaves every
-    row present at least once. No window loses rows, so a
-    compact-then-crash is always recoverable by re-running. The
-    eager localCheckpoint severs the read's lineage from the files
-    being replaced (executor-local MEMORY_AND_DISK blocks hold the leg
-    during the rewrite — on a real cluster the leg is spilled, not
-    driver-collected)."""
-    from rayforce_spark.sources._sidecar import _fs_path
-
-    fs, p = _fs_path(spark, leg_path)
-    # data files only: Spark ignores _*/.* (markers, _SUCCESS), and the
-    # append below REwrites _SUCCESS at the same name — deleting it from
-    # the before-list would remove the fresh one
-    stats = [
-        f for f in fs.listStatus(p)
-        if f.isFile() and not f.getPath().getName().startswith(("_", "."))
-    ]
-    before = [f.getPath() for f in stats]
-    total_bytes = sum(f.getLen() for f in stats)
-    # ~128 MB per output file, floor 1 — NO parallelism floor: parquet
-    # is row-group splittable, so a probe scan of few large files still
-    # fans out to maxPartitionBytes-sized splits, while a parallelism
-    # floor would UNDO compaction for any leg smaller than
-    # cores x 128 MB (measured: it re-fragmented toy legs)
-    target_files = int(total_bytes // (128 << 20)) + 1
-    data = (spark.read.parquet(leg_path).dropDuplicates()
-            .repartition(target_files)
-            .localCheckpoint(eager=True))
-    data.write.mode("append").parquet(leg_path)
-    for f in before:
-        fs.delete(f, False)
-    after = sum(
-        1 for f in fs.listStatus(p)
-        if f.isFile() and not f.getPath().getName().startswith(("_", "."))
-    )
-    return len(before), after
-
-
-def _compact_index(spark, path: str, legs: list[str], read_meta) -> dict:
-    """Shared compaction driver: checks the _meta sidecar first (loud
-    failure on a half-built or stale-format index), takes the
-    compaction LEASE (``_compacting`` — extends and probes raise while
-    it is held, see _check_compaction_lease), compacts each leg, then
-    releases the lease. The lease is deliberately NOT released on
-    failure: a crashed compaction leaves legs mid-rewrite, and the
-    lease keeps readers loudly out until a re-run (idempotent,
-    duplicate-tolerant) finishes the job. Returns {leg:
-    {"files_before": n, "files_after": m}} for observability."""
-    read_meta(spark, path)  # format + existence gate
-    fs, jp = _lease(spark, path)
-    fs.mkdirs(jp)  # idempotent — a re-run after a crash re-takes it
-    out = {
-        leg: dict(zip(("files_before", "files_after"),
-                      _compact_leg(spark, f"{path}/{leg}")))
-        for leg in legs
-    }
-    fs.delete(jp, True)
-    return out
-
-
-def compact_minhash_index(spark, path: str) -> dict:
-    """Compact a persisted MinHash index's appended legs into
-    size-targeted files — the maintenance op continuous ingestion needs
-    (r10 verdict: streaming extends append up-to-parallelism parquet
-    fragments per micro-batch forever; after thousands of batches the
-    probe-side file listing and tiny-split scan dominate, a cost the
-    single-process mmap reference never meets). Safe to run between
-    ingest batches; probe results are IDENTICAL before and after
-    (pinned by test_index_compaction_*). Do not run CONCURRENTLY with
-    an extend OR a probe: an extend landing mid-window has its files
-    read by the rewrite AND kept (double-counted rows until the next
-    compaction collapses them — correct, just not smaller), and a
-    probe DataFrame planned before the rewrite but executed after the
-    deletes hits FileNotFoundException mid-job (or silently loses rows
-    under spark.sql.files.ignoreMissingFiles). Enforced, not just
-    advised (r12): compaction holds a ``_compacting`` lease for the
-    window and extends/probes raise while it is held — see
-    _check_compaction_lease; streaming ingest gets safe periodic
-    compaction via ``compact_every`` (serial micro-batches can't
-    overlap their own compaction)."""
-    return _compact_index(spark, path, ["shingles", "buckets"],
-                          _read_minhash_meta)
-
-
-def compact_simhash_index(spark, path: str) -> dict:
-    """SimHash twin of :func:`compact_minhash_index` (one leg:
-    ``banded``)."""
-    return _compact_index(spark, path, ["banded"], _read_simhash_meta)
-
-
-def compact_jaccard_index(spark, path: str) -> dict:
-    """Jaccard twin of :func:`compact_minhash_index` (legs ``docs`` and
-    ``prefixes``; ``dfreq`` is written once at build — frozen order —
-    and never appended, so it needs no compaction)."""
-    return _compact_index(spark, path, ["docs", "prefixes"],
-                          _read_jaccard_meta)
-
-
-def _probe_output(verified: DataFrame, mode: str) -> DataFrame:
-    """Shared output shaping for the index probes. ``mode="pairs"``
-    emits every qualifying (new_id, index_id, score) row — pair-key
-    deduped LAST so probes tolerate torn appends (duplicate index rows
-    emit duplicate pairs; the dedup collapses them at the cost of one
-    shuffle over the verified output). ``mode="reps"`` is the
-    PAIR-FREE mode for dense corpora (r10 verdict: a 10x template-dense
-    probe spent 358 s materializing 52.85M pairs a dedup consumer
-    immediately collapses): one row (new_id, rep_id) per new doc that
-    has any qualifying match, rep_id = its SMALLEST matching index id.
-    The min aggregate is idempotent over duplicate rows (torn-append
-    tolerance for free) and map-side combines, so the O(dups²) pair set
-    collapses inside the scan stage and never crosses the shuffle.
-
-    When the indexed corpus is canonical (already deduplicated — the
-    standing day-2 invariant: you extend the index with SURVIVORS) and
-    ids grow monotonically across batches, rep_id IS the cluster
-    representative dedup_clusters∘pairs would assign (each new doc's
-    component contains exactly one index doc — its rep; pinned by
-    test_index_probe_reps_mode). Against a non-canonical index it is
-    still the correct dedup target (the smallest indexed duplicate),
-    just not a component label — multi-hop labeling stays
-    dedup_clusters' job."""
-    if mode == "reps":
-        return verified.groupBy("new_id").agg(
-            F.min("index_id").alias("rep_id"))
-    if mode != "pairs":
-        raise ValueError(f"unknown mode: {mode!r} "
-                         "(expected 'pairs' or 'reps')")
-    return verified.dropDuplicates(["new_id", "index_id"])
-
-
-def minhash_index_pairs(path: str, new_df: DataFrame,
-                        text_col: str, id_col: str, *,
-                        threshold: float = 0.7,
-                        mode: str = "pairs") -> DataFrame:
-    """Near-duplicate pairs of a NEW batch against a persisted MinHash
-    index (see :func:`set_minhash_index`): returns (new_id, index_id,
-    jaccard) with jaccard >= threshold — or, with ``mode="reps"``, one
-    (new_id, rep_id) row per matched new doc (pair-free output for
-    dense corpora; see :func:`_probe_output`) — exact-verified, identical
-    family and banding as the index (read from ``_meta``), so a doc
-    re-probed against an index containing itself pairs with exactly
-    its true near-duplicates (self-pairs on equal ids are excluded).
-
-    Plan: the batch's bucket rows join the on-disk bucket table (slim
-    16-byte rows; AQE broadcasts the smaller side), candidate pairs
-    dedup across bands, then exact Jaccard verifies via ONE join to the
-    batch's shingle sets and ONE to the persisted ones. The indexed
-    corpus is never re-shingled; intra-batch pairs are
-    minhash_lsh_pairs(new_df)'s job."""
-    spark = new_df.sparkSession
-    _check_compaction_lease(spark, path, "minhash")
-    meta = _read_minhash_meta(spark, path)
-    shingled, buckets = _minhash_parts(new_df, text_col, id_col, **meta)
-    # fanout the INDEX leg scan: a small/fresh index arrives as few
-    # parquet splits, and with the batch side broadcast the candidate
-    # join's entire emission runs on those splits' task count — measured
-    # single-task at the 10x corpus (the leg was ONE file). Round-robin
-    # widening is skew-free here (index-side hot buckets spread across
-    # tasks; the broadcast batch reaches all of them) and a no-op at
-    # real scale, where index legs always carry more splits than cores.
-    idx = fanout(spark.read.parquet(f"{path}/buckets"))
-    cand = (
-        buckets.alias("n")
-        .join(idx.alias("o"), "__bucket")
-        .select(F.col("n.__id").alias("new_id"),
-                F.col("o.__id").alias("index_id"))
-        .filter(F.col("new_id") != F.col("index_id"))
-        .dropDuplicates(["new_id", "index_id"])
-    )
-    old_sh = spark.read.parquet(f"{path}/shingles")
-    s1 = cand.join(
-        shingled.select(F.col("__id").alias("new_id"),
-                        F.col("__bh").alias("__sa")), "new_id")
-    s2 = s1.join(
-        old_sh.select(F.col("__id").alias("index_id"),
-                      F.col("__bh").alias("__sb")), "index_id")
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
-    uni = (F.size("__sa") + F.size("__sb")).cast("double") - inter
-    return _probe_output(
-        s2.withColumn("jaccard", F.try_divide(inter, uni))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "index_id", "jaccard"),
-        # pair-key dedup (or the reps-mode min) LAST: a crash-torn
-        # extend (append committed, marker not — see
-        # streaming.ops.stream_minhash_index_ingest) leaves duplicate
-        # index rows for a batch, and the verify joins would emit one
-        # identical row per duplicate; jaccard is functionally
-        # determined by the pair, so both output modes absorb torn
-        # appends — see _probe_output
-        mode,
-    )
-
-
 def _plain_emission_sampled(df: DataFrame, text_col: str, id_col: str,
                             shingle_k: int, hot: DataFrame | None,
                             p: float = 0.05) -> int:
@@ -1653,231 +1256,6 @@ def simhash(df: DataFrame, text_col: str, id_col: str, *, bits: int = 63,
         id_col, F.expr(f"cast({fp} as bigint) as simhash"))
 
 
-def _jaccard_batch_toks(df: DataFrame, text_col: str, id_col: str,
-                        shingle_k: int) -> DataFrame:
-    """Exploded (__id, tok) shingle-hash stream for the Jaccard index
-    legs, materialized once (localCheckpoint) so the df/docs/prefix
-    legs stay consistent for non-deterministic inputs — the same
-    contract as _minhash_parts."""
-    return with_shingle_hashes(
-        fanout(df).select(F.col(id_col).alias("__id"),
-                          F.col(text_col).alias("__t")),
-        "__t", shingle_k, "__sh",
-    ).select("__id", F.explode("__sh").alias("tok")) \
-        .localCheckpoint(eager=False)
-
-
-def _jaccard_sorted_docs(toks: DataFrame, dfreq: DataFrame,
-                         max_doc_freq: int | None) -> DataFrame:
-    """(__id, __toks, sz) with each doc's tokens sorted rarest-first
-    under the (df, tok) total order of ``dfreq``. A LEFT join: tokens
-    absent from dfreq (probe-side tokens unseen at index build) rank
-    df = 0 — they extend the frozen total order without reordering any
-    stored prefix, which is what keeps incremental probes EXACT (the
-    AllPairs/PPJoin prefix theorem needs only that both sides sort
-    under one consistent total order; stored docs contain no unseen
-    tokens, so their build-time sort already agrees with the extended
-    order). ``max_doc_freq`` drops tokens whose FROZEN df exceeds the
-    cutoff — dfreq must be the UNfiltered table so a probe can tell
-    build-time-hot tokens (dropped, everywhere consistently) from
-    unseen ones (df 0, kept); sizes are computed over the reduced sets
-    so numerator and denominator stay consistent. sz is LONG — the
-    filters multiply it by the 1e6-grain threshold rationals and int32
-    would overflow under ANSI."""
-    joined = (toks.join(dfreq, "tok", "left")
-              .withColumn("__df", F.coalesce(F.col("__df"), F.lit(0))))
-    if max_doc_freq is not None:
-        joined = joined.filter(F.col("__df") <= max_doc_freq)
-    return (
-        joined
-        .groupBy("__id")
-        .agg(F.array_sort(F.collect_list(F.struct("__df", "tok")))
-             .alias("__st"))
-        .select(
-            "__id",
-            F.transform("__st", lambda s: s["tok"]).alias("__toks"),
-            F.size("__st").cast("long").alias("sz"),
-        )
-    )
-
-
-def set_jaccard_index(corpus: DataFrame, path: str, text_col: str,
-                      id_col: str, *, shingle_k: int = 1,
-                      threshold: float = 0.8,
-                      max_doc_freq: int | None = None) -> None:
-    """Persist an exact n-gram-Jaccard dedup INDEX — the
-    continuous-ingestion twin of :func:`jaccard_dup_pairs`
-    (prefix_filter path), completing the persisted-index family
-    (minhash / simhash / IVF). Writes under ``path``:
-
-    - ``_meta``     — (shingle_k, threshold, max_doc_freq, format);
-      written LAST (commit marker, same convention as
-      set_minhash_index),
-    - ``dfreq``     — the corpus (tok, df) table: the FROZEN total
-      order every later probe and extension sorts under,
-    - ``docs``      — (__id, __toks sorted rarest-first, sz): the
-      exact-verify side,
-    - ``prefixes``  — (__id, sz, pos, tok) AllPairs prefix rows at the
-      stored threshold: the slim candidate-join side.
-
-    Exactness under incremental use: the prefix theorem requires only
-    ONE consistent total order across both join sides — it is frozen
-    here as (df-at-build, tok). Probe-side tokens unseen at build rank
-    df = 0 (they extend the order; no stored array reorders), and a
-    probe threshold >= the stored one keeps stored prefixes a superset
-    of what that threshold needs. What DOES drift as the corpus grows
-    is prefix EFFECTIVENESS, not correctness: a token that was rare at
-    build time but becomes corpus-hot generates ever more candidates
-    (all still exactly verified). Rebuild the index periodically — into
-    a fresh path — when probe cost creeps; ``max_doc_freq`` is likewise
-    frozen at build (stored df decides which tokens are dropped
-    everywhere, so numerator and denominator stay consistent)."""
-    toks = _jaccard_batch_toks(corpus, text_col, id_col, shingle_k)
-    # dfreq persists UNfiltered — probes need the frozen df of every
-    # token the build saw, including the hot ones max_doc_freq drops
-    # (otherwise a probe would mistake a build-time-hot token for an
-    # unseen rare one and sort it FIRST)
-    toks.groupBy("tok").agg(F.count("*").alias("__df")) \
-        .write.mode("overwrite").parquet(f"{path}/dfreq")
-    spark = corpus.sparkSession
-    stored_df = spark.read.parquet(f"{path}/dfreq")
-    docs = _jaccard_sorted_docs(toks, stored_df, max_doc_freq) \
-        .localCheckpoint(eager=False)
-    docs.write.mode("overwrite").parquet(f"{path}/docs")
-    num = int(threshold * _JAC_DEN)
-    _prefix_rows(docs, num, _JAC_DEN).write.mode("overwrite").parquet(
-        f"{path}/prefixes")
-    spark.createDataFrame(
-        [(int(shingle_k), float(threshold),
-          None if max_doc_freq is None else int(max_doc_freq),
-          _JACCARD_INDEX_FORMAT)],
-        "shingle_k int, threshold double, max_doc_freq int, format int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
-
-
-def _read_jaccard_meta(spark, path: str) -> dict:
-    r = spark.read.parquet(f"{path}/_meta").collect()[0]
-    _check_index_format(r, _JACCARD_INDEX_FORMAT, "jaccard", path)
-    return {"shingle_k": r["shingle_k"], "threshold": r["threshold"],
-            "max_doc_freq": r["max_doc_freq"]}
-
-
-def _jaccard_probe_parts(new_df: DataFrame, path: str, text_col: str,
-                         id_col: str, meta: dict,
-                         num: int) -> tuple[DataFrame, DataFrame]:
-    """(docs, prefixes) of a new batch under the index's FROZEN token
-    order (stored dfreq; unseen tokens df=0; stored max_doc_freq drops
-    the same tokens the build dropped)."""
-    spark = new_df.sparkSession
-    toks = _jaccard_batch_toks(new_df, text_col, id_col,
-                               meta["shingle_k"])
-    stored_df = spark.read.parquet(f"{path}/dfreq")
-    docs = _jaccard_sorted_docs(toks, stored_df, meta["max_doc_freq"]) \
-        .localCheckpoint(eager=False)
-    return docs, _prefix_rows(docs, num, _JAC_DEN)
-
-
-def extend_jaccard_index(new_df: DataFrame, path: str, text_col: str,
-                         id_col: str) -> None:
-    """Append a new batch to a persisted Jaccard index under its frozen
-    token order and stored threshold (both from ``_meta``). Existing
-    files are untouched; dfreq is NOT updated (the frozen order is the
-    exactness contract — see set_jaccard_index's drift note)."""
-    spark = new_df.sparkSession
-    _check_compaction_lease(spark, path, "jaccard")
-    meta = _read_jaccard_meta(spark, path)
-    num = int(meta["threshold"] * _JAC_DEN)
-    docs, pref = _jaccard_probe_parts(new_df, path, text_col, id_col,
-                                      meta, num)
-    # VERIFY leg (docs) first, CANDIDATE leg (prefixes) second — same
-    # torn-extend argument as extend_minhash_index: orphan docs rows
-    # are invisible-but-consistent; orphan prefix rows would lose pairs
-    # silently at the verify join
-    docs.write.mode("append").parquet(f"{path}/docs")
-    pref.write.mode("append").parquet(f"{path}/prefixes")
-
-
-def jaccard_index_pairs(path: str, new_df: DataFrame, text_col: str,
-                        id_col: str, *,
-                        threshold: float | None = None,
-                        mode: str = "pairs") -> DataFrame:
-    """EXACT Jaccard near-dup pairs of a NEW batch against a persisted
-    Jaccard index: returns (new_id, index_id, jaccard) with jaccard >=
-    threshold — or, with ``mode="reps"``, one (new_id, rep_id) row per
-    matched new doc (pair-free output for dense corpora, where the
-    exact pair set is O(dups²); see :func:`_probe_output`) — the same
-    result a full jaccard_dup_pairs run over
-    index-corpus ∪ batch would emit for cross pairs, by the frozen-
-    order prefix argument (see set_jaccard_index). ``threshold``
-    defaults to the index's; any override >= the stored value stays
-    exact (stored prefixes are a superset of what a higher threshold
-    needs); lower raises — the stored prefixes are too short for it.
-
-    Plan: the batch's prefix rows join the on-disk prefix table on tok
-    with the size + positional filters in the join condition, candidate
-    pairs dedup, then one join to the batch's sorted docs and one to
-    the stored docs verifies with exact array_intersect. The indexed
-    corpus is never re-shingled or re-sorted; intra-batch pairs are
-    jaccard_dup_pairs(new_df)'s job."""
-    spark = new_df.sparkSession
-    _check_compaction_lease(spark, path, "jaccard")
-    meta = _read_jaccard_meta(spark, path)
-    if threshold is None:
-        threshold = meta["threshold"]
-    if threshold < meta["threshold"]:
-        raise ValueError(
-            f"probe threshold {threshold} is below the index's "
-            f"{meta['threshold']}: stored prefixes are too short for it "
-            "(recall loss) — rebuild the index at the lower threshold")
-    num = int(threshold * _JAC_DEN)
-    den = _JAC_DEN
-    docs, pref = _jaccard_probe_parts(new_df, path, text_col, id_col,
-                                      meta, num)
-    # fanout the index prefix scan — same single-task-emission hazard
-    # as minhash_index_pairs (see there); on a template-dense corpus
-    # the quadratic candidate emission otherwise runs on ONE task
-    # (r11: the 10x probe was single-core for minutes)
-    idx_pref = fanout(spark.read.parquet(f"{path}/prefixes"))
-    # the batch pref side inherits the sorted-docs aggregate's
-    # AQE-coalesced partitioning (ONE partition for a small batch) —
-    # if AQE broadcasts the index side instead, the batch becomes the
-    # stream and the emission single-cores; an unconditional
-    # repartition is batch-sized, slim rows, and AQE-immune
-    pref = pref.repartition(spark.sparkContext.defaultParallelism)
-    cand = (
-        pref.alias("a")
-        .join(
-            idx_pref.alias("b"),
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.__id") != F.col("b.__id"))
-            & _size_ok(num, den) & _pos_ok(num, den),
-        )
-        .select(F.col("a.__id").alias("new_id"),
-                F.col("b.__id").alias("index_id"))
-        .distinct()
-    )
-    idx_docs = spark.read.parquet(f"{path}/docs")
-    out = (
-        cand
-        .join(docs.select(F.col("__id").alias("new_id"),
-                          F.col("__toks").alias("__ta"),
-                          F.col("sz").alias("sz_a")), "new_id")
-        .join(idx_docs.select(F.col("__id").alias("index_id"),
-                              F.col("__toks").alias("__tb"),
-                              F.col("sz").alias("sz_b")), "index_id")
-        .withColumn("inter", F.size(F.array_intersect("__ta", "__tb")))
-        .withColumn(
-            "jaccard",
-            F.try_divide(F.col("inter"),
-                         F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "index_id", "jaccard")
-    )
-    # same torn-append tolerance as minhash_index_pairs (both modes)
-    return _probe_output(out, mode)
-
-
 def _simhash_chunk(col: Column, b: int, chunk: int) -> Column:
     """b-th ``chunk``-bit slice of a 64-bit fingerprint column."""
     return (F.shiftrightunsigned(col, b * chunk)
@@ -2041,123 +1419,6 @@ def simhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
                 fp.sparkSession.sparkContext.defaultParallelism,
                 "band", "key")
     return _simhash_join(banded, bands, max_hamming)
-
-
-def set_simhash_index(corpus: DataFrame, path: str, text_col: str,
-                      id_col: str, *, max_hamming: int = 3,
-                      bands: int | None = None,
-                      token_hash: str = "xxhash64") -> None:
-    """Persist a SimHash dedup INDEX — the continuous-ingestion twin of
-    :func:`simhash_dup_pairs`, completing the persisted-index family
-    (minhash: :func:`set_minhash_index`; IVF: similarity.set_ivf) so
-    day-2 ingestion never re-fingerprints the corpus for ANY near-dup
-    path. Writes under ``path``:
-
-    - ``_meta``   — (max_hamming, bands, token_hash, format); probes
-      and extensions read this sidecar rather than trusting call-site
-      kwargs, so they can't silently band against the wrong slicing,
-    - ``banded``  — (__id, simhash, band, key): ``bands`` rows per doc
-      carrying the full fingerprint, so a probe join verifies hamming
-      in the join projection with no second lookup.
-
-    The ``_meta`` sidecar is written LAST — the same commit-marker
-    convention as set_minhash_index: a build into a fresh path that
-    dies mid-way leaves no sidecar and probes fail loudly. Rebuild
-    with different params into a fresh path, never in place. Ids must
-    be unique across all batches ever written."""
-    if bands is None:
-        bands = max_hamming + 1
-    _simhash_validate(max_hamming, bands)
-    fp = (simhash(corpus, text_col, id_col, token_hash=token_hash)
-          .withColumnRenamed(id_col, "__id"))
-    _simhash_banded(fp, bands).write.mode("overwrite").parquet(
-        f"{path}/banded")
-    corpus.sparkSession.createDataFrame(
-        [(int(max_hamming), int(bands), str(token_hash),
-          _SIMHASH_INDEX_FORMAT)],
-        "max_hamming int, bands int, token_hash string, format int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
-
-
-def _read_simhash_meta(spark, path: str) -> dict:
-    r = spark.read.parquet(f"{path}/_meta").collect()[0]
-    _check_index_format(r, _SIMHASH_INDEX_FORMAT, "simhash", path)
-    return {"max_hamming": r["max_hamming"], "bands": r["bands"],
-            "token_hash": r["token_hash"]}
-
-
-def extend_simhash_index(new_df: DataFrame, path: str, text_col: str,
-                         id_col: str) -> None:
-    """Append a new batch to a persisted SimHash index (fingerprint and
-    banding parameters come from the index's own ``_meta`` sidecar).
-    Existing index files are untouched — the ingest step of the
-    dedup-then-extend loop."""
-    _check_compaction_lease(new_df.sparkSession, path, "simhash")
-    meta = _read_simhash_meta(new_df.sparkSession, path)
-    fp = (simhash(new_df, text_col, id_col, token_hash=meta["token_hash"])
-          .withColumnRenamed(id_col, "__id"))
-    _simhash_banded(fp, meta["bands"]).write.mode("append").parquet(
-        f"{path}/banded")
-
-
-def simhash_index_pairs(path: str, new_df: DataFrame, text_col: str,
-                        id_col: str, *,
-                        max_hamming: int | None = None,
-                        mode: str = "pairs") -> DataFrame:
-    """Near-dup pairs of a NEW batch against a persisted SimHash index
-    (see :func:`set_simhash_index`): returns (new_id, index_id,
-    hamming) with hamming <= max_hamming — or one (new_id, rep_id) row
-    per matched new doc with ``mode="reps"`` (see :func:`_probe_output`)
-    — exact recall by the same
-    pigeonhole argument as simhash_dup_pairs — banding comes from the
-    index's ``_meta``, so buckets line up by construction.
-    ``max_hamming`` defaults to the index's; any override BELOW the
-    stored ``bands`` keeps exact recall (the pigeonhole bound depends
-    only on bands), while >= bands raises — the stored banding can no
-    longer guarantee a shared band there.
-
-    Plan: the batch's banded fingerprints join the on-disk banded
-    table on (band, key) — 28-byte rows either side, AQE broadcasts
-    the batch when it's small — with hamming + canonical-band
-    (exactly-once) filters inside the join projection; the indexed
-    corpus is never re-fingerprinted. Self-pairs on equal ids are
-    excluded; intra-batch pairs are simhash_dup_pairs(new_df)'s job."""
-    spark = new_df.sparkSession
-    _check_compaction_lease(spark, path, "simhash")
-    meta = _read_simhash_meta(spark, path)
-    bands = meta["bands"]
-    if max_hamming is None:
-        max_hamming = meta["max_hamming"]
-    _simhash_validate(max_hamming, bands)
-    fp = (simhash(new_df, text_col, id_col,
-                  token_hash=meta["token_hash"])
-          .withColumnRenamed(id_col, "__id"))
-    banded = _simhash_banded(fp, bands)
-    # fanout: same index-leg scan-parallelism guard as
-    # minhash_index_pairs / jaccard_index_pairs
-    idx = fanout(spark.read.parquet(f"{path}/banded"))
-    xor = F.col("n.simhash").bitwiseXOR(F.col("o.simhash"))
-    hamming = F.bit_count(xor)
-    verified = (
-        banded.alias("n")
-        .join(
-            idx.alias("o"),
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.key") == F.col("o.key"))
-            & (F.col("n.__id") != F.col("o.__id")),
-        )
-        .filter((F.col("n.band") == _simhash_first_band(xor, bands))
-                & (hamming <= F.lit(max_hamming)))
-        .select(F.col("n.__id").alias("new_id"),
-                F.col("o.__id").alias("index_id"),
-                hamming.alias("hamming"))
-    )
-    # canonical-band makes emission exactly-once against a CLEAN
-    # index; a re-run extend (duplicate banded rows) would emit per
-    # copy — the pair-key dedup (or reps-mode min) keeps probes
-    # insensitive to that, same tolerance as minhash_index_pairs /
-    # jaccard_index_pairs
-    return _probe_output(verified, mode)
 
 
 #: fixed-point unit for cross-engine-exact cosine: products are rounded
@@ -2582,3 +1843,833 @@ def dedup_keep_canonical(df: DataFrame, pairs: DataFrame, *,
     losers = (clusters.filter(F.col("doc_id") != F.col("cluster_id"))
               .select(F.col("doc_id").alias(id_col)))
     return df.join(losers, id_col, "left_anti")
+
+
+# -- persisted dedup indexes: one core, one _IndexFamily spec per family ----
+
+
+@dataclass(frozen=True)
+class _IndexFamily:
+    """What one persisted-index family supplies to the shared core.
+
+    ``format`` is the on-disk format version, bumped when the legs'
+    CONTENT changes (minhash is at 2: r10 switched band buckets from
+    32-bit hash() to xxhash64, and a format-1 index probed by format-2
+    code SILENTLY returns no pairs); readers raise on any mismatch,
+    including a missing field. ``meta_schema`` is the DDL of the build
+    parameters in ``_meta`` (``format int`` follows them); ``legs`` are
+    the appended leg directories, VERIFY leg first. The functions:
+    ``batch_legs(df, text_col, id_col, path, params) -> {leg: frame}``
+    (params = the stored meta for a build or append, the resolved probe
+    params for a probe — only Jaccard's prefix length follows a probe
+    override); ``probe_params(meta, **overrides)`` resolves and
+    validates call-site overrides; ``probe(spark, path, legs, params)``
+    returns verified (new_id, index_id, metric) rows; and
+    ``intra_pairs(batch, text_col, id_col, params, legs)`` returns the
+    batch's own (id_a, id_b, metric) pairs for the ingest."""
+
+    name: str
+    format: int
+    meta_schema: str
+    legs: tuple[str, ...]
+    metric: str
+    batch_legs: Callable
+    probe_params: Callable
+    probe: Callable
+    intra_pairs: Callable
+
+
+_META_CASTS = {"int": int, "double": float, "string": str}
+
+
+def _read_meta(spec: _IndexFamily, spark, path: str) -> dict:
+    """The stored build parameters, behind the format gate: mismatched
+    on-disk hash/bucket families don't error at probe time, they return
+    empty results, so the version check is the only loud failure."""
+    meta = spark.read.parquet(f"{path}/_meta").collect()[0].asDict()
+    got = meta.pop("format", None)
+    if got != spec.format:
+        raise ValueError(
+            f"{spec.name} index at {path} has on-disk format {got!r} but "
+            f"this build reads format {spec.format}: its stored buckets/"
+            "prefixes were computed by an incompatible hash family, and "
+            "probing it would silently return empty or incomplete pairs. "
+            f"Rebuild it into a fresh path with set_{spec.name}_index.")
+    return meta
+
+
+def _write_meta(spec: _IndexFamily, spark, path: str, params: dict) -> None:
+    """Write the ``_meta`` sidecar: the build parameters plus the
+    family's on-disk format version, one row, one file."""
+    fields = [f.split() for f in spec.meta_schema.split(",")]
+    row = tuple(None if params[n] is None else _META_CASTS[t](params[n])
+                for n, t in fields) + (spec.format,)
+    (spark.createDataFrame([row], f"{spec.meta_schema}, format int")
+     .coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta"))
+
+
+def _write_legs(spec: _IndexFamily, path: str, legs: dict,
+                mode: str) -> None:
+    """Write a batch's legs in the family's order — VERIFY leg first,
+    CANDIDATE leg second: a crash between two appends must not leave
+    candidate rows whose pairs silently vanish at the verify join. With
+    this order a torn extend leaves orphan verify rows (the doc is
+    merely invisible to candidates, as if never ingested), and the retry
+    re-appends both legs; the duplicate verify rows only multiply
+    verify-join rows, which _probe_output's pair-key dedup collapses."""
+    for leg in spec.legs:
+        legs[leg].write.mode(mode).parquet(f"{path}/{leg}")
+
+
+def _build_index(spec: _IndexFamily, spark, path: str, legs: dict,
+                 params: dict) -> None:
+    """Write a fresh index: legs first, the ``_meta`` sidecar LAST as
+    the commit marker — a build into a FRESH path that dies mid-way
+    leaves no sidecar, so probes fail loudly instead of banding against
+    a half-built index. Rebuilding IN PLACE with different params is
+    non-atomic under either write order (mismatched banding silently
+    returns empty pair sets): rebuild into a fresh path. Ids must be
+    unique across all batches ever written."""
+    _write_legs(spec, path, legs, "overwrite")
+    _write_meta(spec, spark, path, params)
+
+
+def _lease(spark, path: str):
+    """(fs, jpath) of the index's compaction lease marker."""
+    from rayforce_spark.sources._sidecar import _fs_path
+
+    fs, _ = _fs_path(spark, path)
+    return fs, spark._jvm.org.apache.hadoop.fs.Path(f"{path}/_compacting")
+
+
+def _check_compaction_lease(spark, path: str, family: str) -> None:
+    """Raise if a compaction lease is held on the index — the ENFORCED
+    form of the compaction concurrency contract. Compaction writes
+    ``_compacting`` before snapshotting a leg's file list and removes
+    it only after the old files are deleted; inside that window an
+    extend would have its fresh rows read by the rewrite AND kept, and
+    a probe can plan against files the rewrite then deletes
+    (FileNotFoundException mid-job, or silently dropped rows under
+    spark.sql.files.ignoreMissingFiles). A lease left by a CRASHED
+    compaction keeps these failing loudly until the compaction is
+    re-run (duplicate-tolerant — see _compact_leg). The check is
+    advisory at the edges: a probe that passes it while compaction
+    starts a moment later still races; the lease turns the common
+    overlap from silent corruption into a loud error."""
+    fs, jp = _lease(spark, path)
+    if fs.exists(jp):
+        raise RuntimeError(
+            f"{family} index at {path} holds a compaction lease "
+            "(_compacting): a compact_*_index run is in progress or "
+            "crashed mid-rewrite. Re-run the compaction to completion "
+            "(it is duplicate-tolerant and clears the lease), then "
+            "retry this extend/probe.")
+
+
+def _extend_index(spec: _IndexFamily, new_df: DataFrame, path: str,
+                  text_col: str, id_col: str) -> None:
+    """Append a batch to a persisted index under its stored ``_meta``
+    parameters. The existing index files are untouched."""
+    spark = new_df.sparkSession
+    _check_compaction_lease(spark, path, spec.name)
+    meta = _read_meta(spec, spark, path)
+    _write_legs(spec, path,
+                spec.batch_legs(new_df, text_col, id_col, path, meta),
+                "append")
+
+
+def _compact_leg(spark, leg_path: str) -> tuple[int, int]:
+    """Compact ONE index leg directory in place: read it, collapse
+    exact-duplicate rows (only torn/replayed appends produce them —
+    every index-leg row kind is semantically idempotent, and the probes
+    already pair-dedup, so collapsing is safe), rewrite as
+    size-targeted files APPENDED to the same directory, then delete the
+    pre-existing data files. Returns (files_before, files_after).
+
+    Crash-safe by the same argument the extends use: a crash AFTER the
+    append but before the deletes leaves every row present twice
+    (probes tolerate duplicates by construction; re-running compaction
+    collapses them and finishes), and a crash mid-delete leaves every
+    row present at least once. No window loses rows, so a
+    compact-then-crash is always recoverable by re-running. The
+    eager localCheckpoint severs the read's lineage from the files
+    being replaced (executor-local MEMORY_AND_DISK blocks hold the leg
+    during the rewrite — on a real cluster the leg is spilled, not
+    driver-collected)."""
+    from rayforce_spark.sources._sidecar import _fs_path
+
+    fs, p = _fs_path(spark, leg_path)
+    # data files only: Spark ignores _*/.* (markers, _SUCCESS), and the
+    # append below REwrites _SUCCESS at the same name — deleting it from
+    # the before-list would remove the fresh one
+    stats = [
+        f for f in fs.listStatus(p)
+        if f.isFile() and not f.getPath().getName().startswith(("_", "."))
+    ]
+    before = [f.getPath() for f in stats]
+    total_bytes = sum(f.getLen() for f in stats)
+    # ~128 MB per output file, floor 1 — NO parallelism floor: parquet
+    # is row-group splittable, so a probe scan of few large files still
+    # fans out to maxPartitionBytes-sized splits, while a parallelism
+    # floor would UNDO compaction for any leg smaller than
+    # cores x 128 MB (measured: it re-fragmented toy legs)
+    target_files = int(total_bytes // (128 << 20)) + 1
+    data = (spark.read.parquet(leg_path).dropDuplicates()
+            .repartition(target_files)
+            .localCheckpoint(eager=True))
+    data.write.mode("append").parquet(leg_path)
+    for f in before:
+        fs.delete(f, False)
+    after = sum(
+        1 for f in fs.listStatus(p)
+        if f.isFile() and not f.getPath().getName().startswith(("_", "."))
+    )
+    return len(before), after
+
+
+def _compact_index(spec: _IndexFamily, spark, path: str) -> dict:
+    """Compact an index's appended legs into size-targeted files — the
+    maintenance op continuous ingestion needs (extends append
+    up-to-parallelism fragments per micro-batch forever, until the
+    probe-side file listing and tiny-split scans dominate). Probe
+    results are IDENTICAL before and after. Checks ``_meta`` first,
+    takes the ``_compacting`` LEASE, compacts each leg, then releases
+    it — never on failure: the lease keeps readers loudly out until a
+    re-run (idempotent, duplicate-tolerant) finishes the job. Returns
+    {leg: {"files_before": n, "files_after": m}}."""
+    _read_meta(spec, spark, path)  # format + existence gate
+    fs, jp = _lease(spark, path)
+    fs.mkdirs(jp)  # idempotent — a re-run after a crash re-takes it
+    out = {
+        leg: dict(zip(("files_before", "files_after"),
+                      _compact_leg(spark, f"{path}/{leg}")))
+        for leg in spec.legs
+    }
+    fs.delete(jp, True)
+    return out
+
+
+def _probe_output(verified: DataFrame, mode: str) -> DataFrame:
+    """Shared output shaping for the index probes. ``mode="pairs"``
+    emits every qualifying (new_id, index_id, score) row, pair-key
+    deduped LAST so probes tolerate torn appends (duplicate index rows
+    emit duplicate pairs with the same score). ``mode="reps"`` is the
+    PAIR-FREE mode for dense corpora (a 10x template-dense probe spent
+    358 s materializing 52.85M pairs a dedup consumer immediately
+    collapses): one (new_id, rep_id) row per matched new doc, rep_id =
+    its SMALLEST matching index id — idempotent over duplicate rows and
+    map-side combined, so the O(dups²) pair set never crosses the
+    shuffle. Against a canonical index (extended with SURVIVORS only)
+    with monotone ids, rep_id IS the dedup_clusters∘pairs component
+    representative (pinned by test_index_probe_reps_mode); otherwise it
+    is still the smallest indexed duplicate, just not a component
+    label."""
+    if mode == "reps":
+        return verified.groupBy("new_id").agg(
+            F.min("index_id").alias("rep_id"))
+    if mode != "pairs":
+        raise ValueError(f"unknown mode: {mode!r} "
+                         "(expected 'pairs' or 'reps')")
+    return verified.dropDuplicates(["new_id", "index_id"])
+
+
+def _index_pairs(spec: _IndexFamily, path: str, new_df: DataFrame,
+                 text_col: str, id_col: str, mode: str,
+                 **overrides) -> DataFrame:
+    """Probe a NEW batch against a persisted index: lease check, the
+    ``_meta`` read, the batch's legs under the resolved params, the
+    family's probe join, then _probe_output. The indexed corpus is never
+    re-shingled or re-fingerprinted; self-pairs on equal ids are
+    excluded; intra-batch pairs are the batch pair generator's job."""
+    spark = new_df.sparkSession
+    _check_compaction_lease(spark, path, spec.name)
+    params = spec.probe_params(_read_meta(spec, spark, path), **overrides)
+    legs = spec.batch_legs(new_df, text_col, id_col, path, params)
+    return _probe_output(spec.probe(spark, path, legs, params), mode)
+
+
+def _index_ingest(spec: _IndexFamily, index_path: str, pairs_path: str,
+                  text_col: str, id_col: str, *, intra_batch: bool,
+                  compact_every: int | None,
+                  **overrides) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch ingest every stream_*_index_ingest returns (the
+    idempotency contract is documented on
+    streaming.ops.stream_minhash_index_ingest): marker-skip, one eager
+    localCheckpoint of the micro-batch, ONE ``_meta`` read and ONE
+    build of the batch's legs — shared by the probe, the intra-batch
+    pairs (minhash reuses the shingle leg) and the append — then the
+    overwrite pair partition, the append and the commit marker last.
+
+    ``compact_every``: compact after every N-th committed batch.
+    foreachBatch is the ONE place auto-compaction is safe by
+    construction: micro-batches are serial, so the compaction window
+    never overlaps this stream's own extends/probes. A compaction that
+    crashed mid-rewrite leaves the lease held; the next batch sees it
+    BEFORE touching the index and re-runs the compaction to completion,
+    self-healing instead of wedging the stream on the lease error."""
+
+    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        fs, lease = _lease(spark, index_path)
+        if fs.exists(lease):  # crashed compaction — finish it first
+            _compact_index(spec, spark, index_path)
+        marker = spark._jvm.org.apache.hadoop.fs.Path(
+            f"{index_path}/_batches/batch-{batch_id}")
+        if fs.exists(marker):
+            return  # fully committed before a restart — replay is a no-op
+        # freeze the micro-batch once: the probe, the intra-batch pairs,
+        # the id anti-join and the append are separate Spark jobs, and
+        # re-reading the source per job would re-pay the scan each time
+        batch_df = batch_df.localCheckpoint(eager=True)
+        if batch_df.count() > 0:
+            meta = _read_meta(spec, spark, index_path)
+            params = spec.probe_params(meta, **overrides)
+            legs = spec.batch_legs(batch_df, text_col, id_col, index_path,
+                                   meta)
+            # cross pairs anti-join away the batch's OWN ids, so a replay
+            # that finds the batch already appended emits the same set
+            ids = batch_df.select(F.col(id_col).alias("__bid"))
+            pairs = (
+                _probe_output(spec.probe(spark, index_path, legs, params),
+                              "pairs")
+                .join(ids, F.col("index_id") == F.col("__bid"), "left_anti")
+                .select(F.least("new_id", "index_id").alias("id_a"),
+                        F.greatest("new_id", "index_id").alias("id_b"),
+                        spec.metric)
+            )
+            if intra_batch:
+                pairs = pairs.unionByName(spec.intra_pairs(
+                    batch_df, text_col, id_col, params, legs))
+            pairs.write.mode("overwrite").parquet(
+                f"{pairs_path}/batch={batch_id}")
+            _check_compaction_lease(spark, index_path, spec.name)
+            _write_legs(spec, index_path, legs, "append")
+        fs.mkdirs(marker)  # the commit marker, written LAST
+        # compaction AFTER the commit marker: a crash mid-compaction
+        # replays nothing (the batch is committed) and the next batch
+        # self-heals the lease
+        if compact_every and (batch_id + 1) % int(compact_every) == 0:
+            _compact_index(spec, spark, index_path)
+
+    return _ingest
+
+
+# -- minhash ---------------------------------------------------------------
+
+def _minhash_legs(df: DataFrame, text_col: str, id_col: str, path: str,
+                  p: dict) -> dict:
+    """``shingles`` (__id, __bh) and ``buckets`` (__id, __bucket) of a
+    batch, derived from ONE materialized shingle pass: the two legs feed
+    independent Spark jobs (two writes, or a write and a join), and
+    recomputing the shingles per job would persist INCONSISTENT legs for
+    a non-deterministic input (sampled / rand-keyed / mutated-between-
+    jobs sources) — a silent corruption of the exact-Jaccard verify, not
+    an error. The lazy localCheckpoint materializes the shingled frame
+    on first use and serves every later consumer from executor-local
+    blocks."""
+    shingled = with_shingle_hashes(
+        fanout(df).select(F.col(id_col).alias("__id"),
+                          F.col(text_col).alias("__t")),
+        "__t", p["shingle_k"], "__bh",
+    ).select("__id", "__bh").localCheckpoint(eager=False)
+    sig = _minhash_sig(shingled, num_perm=p["num_perm"],
+                       sig_impl=p["sig_impl"])
+    return {"shingles": shingled,
+            "buckets": _band_buckets(sig, num_perm=p["num_perm"],
+                                     bands=p["bands"])}
+
+
+def _minhash_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
+    """The batch's bucket rows join the on-disk bucket table (slim
+    16-byte rows; AQE broadcasts the smaller side), candidate pairs
+    dedup across bands, then exact Jaccard verifies via ONE join to the
+    batch's shingle sets and ONE to the persisted ones."""
+    # fanout the INDEX leg scan: a small/fresh index arrives as few
+    # parquet splits, and with the batch side broadcast the candidate
+    # join's entire emission runs on those splits' task count — measured
+    # single-task at the 10x corpus (the leg was ONE file). Round-robin
+    # widening is skew-free here (index-side hot buckets spread across
+    # tasks; the broadcast batch reaches all of them) and a no-op at
+    # real scale, where index legs always carry more splits than cores.
+    idx = fanout(spark.read.parquet(f"{path}/buckets"))
+    cand = (
+        legs["buckets"].alias("n")
+        .join(idx.alias("o"), "__bucket")
+        .select(F.col("n.__id").alias("new_id"),
+                F.col("o.__id").alias("index_id"))
+        .filter(F.col("new_id") != F.col("index_id"))
+        .dropDuplicates(["new_id", "index_id"])
+    )
+    old_sh = spark.read.parquet(f"{path}/shingles")
+    s1 = cand.join(
+        legs["shingles"].select(F.col("__id").alias("new_id"),
+                                F.col("__bh").alias("__sa")), "new_id")
+    s2 = s1.join(
+        old_sh.select(F.col("__id").alias("index_id"),
+                      F.col("__bh").alias("__sb")), "index_id")
+    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
+    uni = (F.size("__sa") + F.size("__sb")).cast("double") - inter
+    return (s2.withColumn("jaccard", F.try_divide(inter, uni))
+            .filter(F.col("jaccard") >= p["threshold"])
+            .select("new_id", "index_id", "jaccard"))
+
+
+def _minhash_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
+                   legs: dict) -> DataFrame:
+    # the batch's shingle leg serves the signature AND verify sides:
+    # the batch is shingled once for the probe, the pairs and the append
+    return minhash_lsh_pairs(
+        batch, text_col, id_col, threshold=p["threshold"],
+        num_perm=p["num_perm"], bands=p["bands"],
+        shingle_k=p["shingle_k"], sig_impl=p["sig_impl"],
+        shingles=legs["shingles"])
+
+
+_MINHASH = _IndexFamily(
+    name="minhash", format=2,
+    meta_schema="num_perm int, bands int, shingle_k int, sig_impl string",
+    legs=("shingles", "buckets"), metric="jaccard",
+    batch_legs=_minhash_legs,
+    probe_params=lambda meta, threshold: {**meta, "threshold": threshold},
+    probe=_minhash_probe, intra_pairs=_minhash_intra)
+
+
+def _read_minhash_meta(spark, path: str) -> dict:
+    # a named binding: perfbench's traced corpus_ingest run wraps it
+    return _read_meta(_MINHASH, spark, path)
+
+
+def set_minhash_index(corpus: DataFrame, path: str, text_col: str,
+                      id_col: str, *, num_perm: int = 64, bands: int = 16,
+                      shingle_k: int = 3, sig_impl: str = "expr") -> None:
+    """Persist a MinHash-LSH dedup INDEX — the continuous-ingestion
+    twin of :func:`minhash_lsh_pairs` (same shape as
+    similarity.set_ivf's train-once/probe-many layout). Writes under
+    ``path``:
+
+    - ``_meta``      — the banding parameters plus the on-disk format
+      version (probes and extensions MUST band identically or buckets
+      don't line up; they read this sidecar rather than trusting
+      call-site kwargs, and raise on a format mismatch), written LAST
+      as the commit marker (see _build_index),
+    - ``shingles``   — (__id, __bh shingle-hash array): the exact-
+      Jaccard verify side,
+    - ``buckets``    — (__id, __bucket), bands rows per doc, 16 bytes
+      each: the slim candidate-join side.
+
+    Scale: a new batch joins the on-disk bucket table and re-reads
+    NOTHING else of the old corpus — no re-shingling, no re-signing,
+    no corpus shuffle; index bytes are O(corpus × bands) longs plus
+    the shingle sets."""
+    params = {"num_perm": num_perm, "bands": bands,
+              "shingle_k": shingle_k, "sig_impl": sig_impl}
+    _build_index(_MINHASH, corpus.sparkSession, path,
+                 _minhash_legs(corpus, text_col, id_col, path, params),
+                 params)
+
+
+def extend_minhash_index(new_df: DataFrame, path: str, text_col: str,
+                         id_col: str) -> None:
+    """Append a new batch to a persisted MinHash index (banding
+    parameters come from the index's own ``_meta`` sidecar) — the
+    ingest step of the dedup-then-extend loop."""
+    _extend_index(_MINHASH, new_df, path, text_col, id_col)
+
+
+def compact_minhash_index(spark, path: str) -> dict:
+    """Compact a persisted MinHash index's appended legs (see
+    _compact_index). Safe between ingest batches, never concurrently
+    with an extend or a probe — the ``_compacting`` lease makes those
+    raise while it is held (_check_compaction_lease); streaming ingest
+    compacts safely via ``compact_every``."""
+    return _compact_index(_MINHASH, spark, path)
+
+
+def minhash_index_pairs(path: str, new_df: DataFrame,
+                        text_col: str, id_col: str, *,
+                        threshold: float = 0.7,
+                        mode: str = "pairs") -> DataFrame:
+    """Near-duplicate pairs of a NEW batch against a persisted MinHash
+    index (see :func:`set_minhash_index`): returns (new_id, index_id,
+    jaccard) with jaccard >= threshold — or, with ``mode="reps"``, one
+    (new_id, rep_id) row per matched new doc (pair-free output for
+    dense corpora; see :func:`_probe_output`) — exact-verified, identical
+    family and banding as the index (read from ``_meta``), so a doc
+    re-probed against an index containing itself pairs with exactly
+    its true near-duplicates (self-pairs on equal ids are excluded).
+    Intra-batch pairs are minhash_lsh_pairs(new_df)'s job."""
+    return _index_pairs(_MINHASH, path, new_df, text_col, id_col, mode,
+                        threshold=threshold)
+
+
+# -- simhash ---------------------------------------------------------------
+
+def _simhash_legs(df: DataFrame, text_col: str, id_col: str, path: str,
+                  p: dict) -> dict:
+    """``banded`` (__id, simhash, band, key): ``bands`` rows per doc
+    carrying the full fingerprint, so a probe join verifies hamming in
+    the join projection with no second lookup. The 16-byte fingerprint
+    is checkpointed lazily, so a probe and an append of the same batch
+    fingerprint it once."""
+    fp = (simhash(df, text_col, id_col, token_hash=p["token_hash"])
+          .withColumnRenamed(id_col, "__id")
+          .localCheckpoint(eager=False))
+    return {"banded": _simhash_banded(fp, p["bands"])}
+
+
+def _simhash_probe_params(meta: dict, max_hamming: int | None = None) -> dict:
+    # any max_hamming BELOW the stored bands keeps exact recall (the
+    # pigeonhole bound depends only on bands); >= bands raises
+    if max_hamming is None:
+        max_hamming = meta["max_hamming"]
+    _simhash_validate(max_hamming, meta["bands"])
+    return {**meta, "max_hamming": max_hamming}
+
+
+def _simhash_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
+    """The batch's banded fingerprints join the on-disk banded table on
+    (band, key) — 28-byte rows either side, AQE broadcasts the batch
+    when it's small — with hamming + canonical-band (exactly-once)
+    filters inside the join projection."""
+    bands = p["bands"]
+    # fanout: same index-leg scan-parallelism guard as _minhash_probe
+    idx = fanout(spark.read.parquet(f"{path}/banded"))
+    xor = F.col("n.simhash").bitwiseXOR(F.col("o.simhash"))
+    hamming = F.bit_count(xor)
+    return (
+        legs["banded"].alias("n")
+        .join(
+            idx.alias("o"),
+            (F.col("n.band") == F.col("o.band"))
+            & (F.col("n.key") == F.col("o.key"))
+            & (F.col("n.__id") != F.col("o.__id")),
+        )
+        .filter((F.col("n.band") == _simhash_first_band(xor, bands))
+                & (hamming <= F.lit(p["max_hamming"])))
+        .select(F.col("n.__id").alias("new_id"),
+                F.col("o.__id").alias("index_id"),
+                hamming.alias("hamming"))
+    )
+
+
+def _simhash_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
+                   legs: dict) -> DataFrame:
+    return simhash_dup_pairs(batch, text_col, id_col,
+                             max_hamming=p["max_hamming"], bands=p["bands"],
+                             token_hash=p["token_hash"])
+
+
+_SIMHASH = _IndexFamily(
+    name="simhash", format=1,
+    meta_schema="max_hamming int, bands int, token_hash string",
+    legs=("banded",), metric="hamming",
+    batch_legs=_simhash_legs, probe_params=_simhash_probe_params,
+    probe=_simhash_probe, intra_pairs=_simhash_intra)
+
+
+def set_simhash_index(corpus: DataFrame, path: str, text_col: str,
+                      id_col: str, *, max_hamming: int = 3,
+                      bands: int | None = None,
+                      token_hash: str = "xxhash64") -> None:
+    """Persist a SimHash dedup INDEX — the continuous-ingestion twin of
+    :func:`simhash_dup_pairs`, so day-2 ingestion never
+    re-fingerprints the corpus. Writes under ``path`` the ``_meta``
+    sidecar (max_hamming, bands, token_hash, format; written LAST — see
+    _build_index) and the ``banded`` leg (see _simhash_legs)."""
+    if bands is None:
+        bands = max_hamming + 1
+    _simhash_validate(max_hamming, bands)
+    params = {"max_hamming": max_hamming, "bands": bands,
+              "token_hash": token_hash}
+    _build_index(_SIMHASH, corpus.sparkSession, path,
+                 _simhash_legs(corpus, text_col, id_col, path, params),
+                 params)
+
+
+def extend_simhash_index(new_df: DataFrame, path: str, text_col: str,
+                         id_col: str) -> None:
+    """Append a new batch to a persisted SimHash index (fingerprint and
+    banding parameters come from the index's own ``_meta`` sidecar)."""
+    _extend_index(_SIMHASH, new_df, path, text_col, id_col)
+
+
+def compact_simhash_index(spark, path: str) -> dict:
+    """SimHash twin of :func:`compact_minhash_index` (one leg:
+    ``banded``)."""
+    return _compact_index(_SIMHASH, spark, path)
+
+
+def simhash_index_pairs(path: str, new_df: DataFrame, text_col: str,
+                        id_col: str, *,
+                        max_hamming: int | None = None,
+                        mode: str = "pairs") -> DataFrame:
+    """Near-dup pairs of a NEW batch against a persisted SimHash index
+    (see :func:`set_simhash_index`): returns (new_id, index_id,
+    hamming) with hamming <= max_hamming — or one (new_id, rep_id) row
+    per matched new doc with ``mode="reps"`` (see :func:`_probe_output`)
+    — exact recall by the same pigeonhole argument as
+    simhash_dup_pairs, banding from the index's ``_meta``.
+    ``max_hamming`` defaults to the index's; any override BELOW the
+    stored ``bands`` keeps exact recall, while >= bands raises."""
+    return _index_pairs(_SIMHASH, path, new_df, text_col, id_col, mode,
+                        max_hamming=max_hamming)
+
+
+# -- exact Jaccard ---------------------------------------------------------
+
+def _jaccard_batch_toks(df: DataFrame, text_col: str, id_col: str,
+                        shingle_k: int) -> DataFrame:
+    """Exploded (__id, tok) shingle-hash stream for the Jaccard index
+    legs, materialized once (localCheckpoint) so the dfreq/docs/prefix
+    legs stay consistent for non-deterministic inputs — the same
+    contract as _minhash_legs."""
+    return with_shingle_hashes(
+        fanout(df).select(F.col(id_col).alias("__id"),
+                          F.col(text_col).alias("__t")),
+        "__t", shingle_k, "__sh",
+    ).select("__id", F.explode("__sh").alias("tok")) \
+        .localCheckpoint(eager=False)
+
+
+def _jaccard_sorted_docs(toks: DataFrame, dfreq: DataFrame,
+                         max_doc_freq: int | None) -> DataFrame:
+    """(__id, __toks, sz) with each doc's tokens sorted rarest-first
+    under the (df, tok) total order of ``dfreq``. A LEFT join: tokens
+    absent from dfreq (probe-side tokens unseen at index build) rank
+    df = 0 — they extend the frozen total order without reordering any
+    stored prefix, which is what keeps incremental probes EXACT (the
+    AllPairs/PPJoin prefix theorem needs only that both sides sort
+    under one consistent total order; stored docs contain no unseen
+    tokens, so their build-time sort already agrees with the extended
+    order). ``max_doc_freq`` drops tokens whose FROZEN df exceeds the
+    cutoff — dfreq must be the UNfiltered table so a probe can tell
+    build-time-hot tokens (dropped, everywhere consistently) from
+    unseen ones (df 0, kept); sizes are computed over the reduced sets
+    so numerator and denominator stay consistent. sz is LONG — the
+    filters multiply it by the 1e6-grain threshold rationals and int32
+    would overflow under ANSI."""
+    joined = (toks.join(dfreq, "tok", "left")
+              .withColumn("__df", F.coalesce(F.col("__df"), F.lit(0))))
+    if max_doc_freq is not None:
+        joined = joined.filter(F.col("__df") <= max_doc_freq)
+    return (
+        joined
+        .groupBy("__id")
+        .agg(F.array_sort(F.collect_list(F.struct("__df", "tok")))
+             .alias("__st"))
+        .select(
+            "__id",
+            F.transform("__st", lambda s: s["tok"]).alias("__toks"),
+            F.size("__st").cast("long").alias("sz"),
+        )
+    )
+
+
+def _jaccard_toks_legs(toks: DataFrame, dfreq: DataFrame, p: dict) -> dict:
+    """``docs`` (sorted rarest-first, exact-verify side) and
+    ``prefixes`` (AllPairs prefix rows at ``p["threshold"]``, the slim
+    candidate-join side) of a token stream under a frozen ``dfreq``."""
+    docs = _jaccard_sorted_docs(toks, dfreq, p["max_doc_freq"]) \
+        .localCheckpoint(eager=False)
+    return {"docs": docs,
+            "prefixes": _prefix_rows(docs, int(p["threshold"] * _JAC_DEN),
+                                     _JAC_DEN)}
+
+
+def _jaccard_legs(df: DataFrame, text_col: str, id_col: str, path: str,
+                  p: dict) -> dict:
+    # a batch sorts under the index's FROZEN token order (stored dfreq;
+    # unseen tokens df=0; stored max_doc_freq drops the same tokens the
+    # build dropped)
+    return _jaccard_toks_legs(
+        _jaccard_batch_toks(df, text_col, id_col, p["shingle_k"]),
+        df.sparkSession.read.parquet(f"{path}/dfreq"), p)
+
+
+def _jaccard_probe_params(meta: dict, threshold: float | None = None) -> dict:
+    # any threshold >= the stored one stays exact (stored prefixes are a
+    # superset of what a higher threshold needs); lower loses recall
+    if threshold is None:
+        threshold = meta["threshold"]
+    if threshold < meta["threshold"]:
+        raise ValueError(
+            f"probe threshold {threshold} is below the index's "
+            f"{meta['threshold']}: stored prefixes are too short for it "
+            "(recall loss) — rebuild the index at the lower threshold")
+    return {**meta, "threshold": threshold}
+
+
+def _jaccard_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
+    """The batch's prefix rows join the on-disk prefix table on tok with
+    the size + positional filters in the join condition, candidate pairs
+    dedup, then one join to the batch's sorted docs and one to the
+    stored docs verifies with exact array_intersect."""
+    threshold = p["threshold"]
+    num, den = int(threshold * _JAC_DEN), _JAC_DEN
+    # fanout the index prefix scan — same single-task-emission hazard
+    # as _minhash_probe; on a template-dense corpus the quadratic
+    # candidate emission otherwise runs on ONE task (r11: the 10x probe
+    # was single-core for minutes)
+    idx_pref = fanout(spark.read.parquet(f"{path}/prefixes"))
+    # the batch pref side inherits the sorted-docs aggregate's
+    # AQE-coalesced partitioning (ONE partition for a small batch) —
+    # if AQE broadcasts the index side instead, the batch becomes the
+    # stream and the emission single-cores; an unconditional
+    # repartition is batch-sized, slim rows, and AQE-immune
+    pref = legs["prefixes"].repartition(spark.sparkContext.defaultParallelism)
+    cand = (
+        pref.alias("a")
+        .join(
+            idx_pref.alias("b"),
+            (F.col("a.tok") == F.col("b.tok"))
+            & (F.col("a.__id") != F.col("b.__id"))
+            & _size_ok(num, den) & _pos_ok(num, den),
+        )
+        .select(F.col("a.__id").alias("new_id"),
+                F.col("b.__id").alias("index_id"))
+        .distinct()
+    )
+    idx_docs = spark.read.parquet(f"{path}/docs")
+    return (
+        cand
+        .join(legs["docs"].select(F.col("__id").alias("new_id"),
+                                  F.col("__toks").alias("__ta"),
+                                  F.col("sz").alias("sz_a")), "new_id")
+        .join(idx_docs.select(F.col("__id").alias("index_id"),
+                              F.col("__toks").alias("__tb"),
+                              F.col("sz").alias("sz_b")), "index_id")
+        .withColumn("inter", F.size(F.array_intersect("__ta", "__tb")))
+        .withColumn(
+            "jaccard",
+            F.try_divide(F.col("inter"),
+                         F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("new_id", "index_id", "jaccard")
+    )
+
+
+def _jaccard_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
+                   legs: dict) -> DataFrame:
+    return jaccard_dup_pairs(batch, text_col, id_col,
+                             shingle_k=p["shingle_k"],
+                             threshold=p["threshold"],
+                             max_doc_freq=p["max_doc_freq"])
+
+
+_JACCARD = _IndexFamily(
+    name="jaccard", format=1,
+    meta_schema="shingle_k int, threshold double, max_doc_freq int",
+    legs=("docs", "prefixes"), metric="jaccard",
+    batch_legs=_jaccard_legs, probe_params=_jaccard_probe_params,
+    probe=_jaccard_probe, intra_pairs=_jaccard_intra)
+
+
+def set_jaccard_index(corpus: DataFrame, path: str, text_col: str,
+                      id_col: str, *, shingle_k: int = 1,
+                      threshold: float = 0.8,
+                      max_doc_freq: int | None = None) -> None:
+    """Persist an exact n-gram-Jaccard dedup INDEX — the
+    continuous-ingestion twin of :func:`jaccard_dup_pairs`
+    (prefix_filter path). Writes under ``path``:
+
+    - ``_meta``     — (shingle_k, threshold, max_doc_freq, format);
+      written LAST (commit marker, see _build_index),
+    - ``dfreq``     — the corpus (tok, df) table: the FROZEN total
+      order every later probe and extension sorts under; written once
+      here and never appended (so compaction skips it),
+    - ``docs``      — (__id, __toks sorted rarest-first, sz): the
+      exact-verify side,
+    - ``prefixes``  — (__id, sz, pos, tok) AllPairs prefix rows at the
+      stored threshold: the slim candidate-join side.
+
+    Exactness under incremental use: the prefix theorem requires only
+    ONE consistent total order across both join sides — it is frozen
+    here as (df-at-build, tok). Probe-side tokens unseen at build rank
+    df = 0 (they extend the order; no stored array reorders), and a
+    probe threshold >= the stored one keeps stored prefixes a superset
+    of what that threshold needs. What DOES drift as the corpus grows
+    is prefix EFFECTIVENESS, not correctness: a token that was rare at
+    build time but becomes corpus-hot generates ever more candidates
+    (all still exactly verified). Rebuild the index periodically — into
+    a fresh path — when probe cost creeps; ``max_doc_freq`` is likewise
+    frozen at build (stored df decides which tokens are dropped
+    everywhere, so numerator and denominator stay consistent)."""
+    toks = _jaccard_batch_toks(corpus, text_col, id_col, shingle_k)
+    # dfreq persists UNfiltered — probes need the frozen df of every
+    # token the build saw, including the hot ones max_doc_freq drops
+    # (otherwise a probe would mistake a build-time-hot token for an
+    # unseen rare one and sort it FIRST)
+    toks.groupBy("tok").agg(F.count("*").alias("__df")) \
+        .write.mode("overwrite").parquet(f"{path}/dfreq")
+    spark = corpus.sparkSession
+    params = {"shingle_k": shingle_k, "threshold": threshold,
+              "max_doc_freq": max_doc_freq}
+    legs = _jaccard_toks_legs(toks, spark.read.parquet(f"{path}/dfreq"),
+                              params)
+    _build_index(_JACCARD, spark, path, legs, params)
+
+
+def extend_jaccard_index(new_df: DataFrame, path: str, text_col: str,
+                         id_col: str) -> None:
+    """Append a new batch to a persisted Jaccard index under its frozen
+    token order and stored threshold (both from ``_meta``). dfreq is NOT
+    updated (the frozen order is the exactness contract — see
+    set_jaccard_index's drift note)."""
+    _extend_index(_JACCARD, new_df, path, text_col, id_col)
+
+
+def compact_jaccard_index(spark, path: str) -> dict:
+    """Jaccard twin of :func:`compact_minhash_index` (legs ``docs`` and
+    ``prefixes``; ``dfreq`` is never appended, so it needs no
+    compaction)."""
+    return _compact_index(_JACCARD, spark, path)
+
+
+def jaccard_index_pairs(path: str, new_df: DataFrame, text_col: str,
+                        id_col: str, *,
+                        threshold: float | None = None,
+                        mode: str = "pairs") -> DataFrame:
+    """EXACT Jaccard near-dup pairs of a NEW batch against a persisted
+    Jaccard index: returns (new_id, index_id, jaccard) with jaccard >=
+    threshold — or, with ``mode="reps"``, one (new_id, rep_id) row per
+    matched new doc (see :func:`_probe_output`) — the same result a
+    full jaccard_dup_pairs run over index-corpus ∪ batch would emit for
+    cross pairs, by the frozen-order prefix argument (see
+    set_jaccard_index). ``threshold`` defaults to the index's; any
+    override >= the stored value stays exact; lower raises — the stored
+    prefixes are too short for it."""
+    return _index_pairs(_JACCARD, path, new_df, text_col, id_col, mode,
+                        threshold=threshold)
+
+
+_STAMPABLE = {"simhash": _SIMHASH, "jaccard": _JACCARD}
+
+
+def stamp_index_format(spark, path: str, family: str) -> None:
+    """One-shot ``_meta`` migration for a PRE-VERSIONING simhash or
+    jaccard index: those families' on-disk leg content is identical to
+    format 1 (only minhash actually changed content, in the r10
+    32-bit→xxhash64 bucket-key switch), so an index written before
+    format versioning existed can be stamped format-1 in place instead
+    of paying a full rebuild for bytes that didn't change. Refuses
+    minhash (its unversioned content is format-0 by definition —
+    rebuild with set_minhash_index) and refuses an already-versioned
+    sidecar. The sidecar overwrite is not atomic — run this as the
+    one-shot maintenance op it is, not concurrently with readers."""
+    if family not in _STAMPABLE:
+        raise ValueError(
+            f"stamp_index_format supports simhash/jaccard, not {family!r}: "
+            "an unversioned minhash index predates the r10 bucket-hash "
+            "change and its stored buckets ARE incompatible — rebuild it "
+            "with set_minhash_index.")
+    # the row is collected driver-side BEFORE the overwrite of the files
+    # it was read from, and the stale file-listing cache is dropped
+    # afterwards (an overwritten path otherwise serves FileNotFound)
+    row = spark.read.parquet(f"{path}/_meta").collect()[0].asDict()
+    if row.get("format") is not None:
+        raise ValueError(
+            f"{family} index at {path} already carries on-disk format "
+            f"{row['format']} — nothing to migrate.")
+    _write_meta(_STAMPABLE[family], spark, path, row)
+    spark.catalog.refreshByPath(f"{path}/_meta")

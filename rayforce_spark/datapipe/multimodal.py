@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+_INT32_MAX = 2**31 - 1
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),      # image|audio|video
@@ -98,6 +100,26 @@ def synthesize_media(
     if kind not in ("image", "audio"):
         raise ValueError(f"synthesize_media: unknown kind {kind}")
     w, h = image_wh
+    # blob length from the parameters alone (BMP rows pad to 4 bytes;
+    # the WAV header is the 44-byte canonical PCM one), so an oversize
+    # request fails before any buffer is allocated
+    from rayforce_spark.datapipe.codecs import BMP_HEADER_SIZE
+
+    blob_len = (BMP_HEADER_SIZE + h * (w * 3 + (-(w * 3)) % 4)
+                if kind == "image" else 44 + wav_n)
+
+    def check_total(rows: int) -> None:
+        # Arrow binary offsets are int32: a batch whose bytes pass 2^31-1
+        # would silently wrap them
+        if rows * blob_len > _INT32_MAX:
+            raise ValueError(
+                f"synthesize_media: {rows} rows x {blob_len}-byte blobs "
+                f"(kind={kind!r}, image_wh={image_wh}, wav_n={wav_n}) "
+                f"exceed the {_INT32_MAX}-byte limit of one Arrow binary "
+                "batch; use smaller media or fewer rows per Arrow batch "
+                "(spark.sql.execution.arrow.maxRecordsPerBatch)")
+
+    check_total(1)
     narrow = df.select(id_col)
     out_schema = T.StructType([
         T.StructField(id_col, df.schema[id_col].dataType, False),
@@ -132,6 +154,7 @@ def synthesize_media(
             ids = batch.column(0)
             mids = ids.to_numpy(zero_copy_only=False).astype(np.int64)
             n = len(mids)
+            check_total(n)
             payload = ((mids[:, None] * mult + pos[None, :]) % 256
                        ).astype(np.uint8)
             if kind == "image":
@@ -143,7 +166,6 @@ def synthesize_media(
                 body = body.reshape(n, h * stride)
             else:
                 body = payload
-            blob_len = len(header) + body.shape[1]
             blobs = np.empty((n, blob_len), dtype=np.uint8)
             blobs[:, :len(header)] = header
             blobs[:, len(header):] = body
@@ -181,6 +203,27 @@ def _fake_features(content: bytes, dim: int) -> list[float]:
         out.extend(b / 255.0 for b in h.digest())
         counter += 1
     return out[:dim]
+
+
+def _blob_views(content):
+    """(offsets, data, nulls) of an Arrow (large_)binary column, for
+    per-blob zero-copy views: ``data[offs[i]:offs[i + 1]]`` slices the
+    shared data buffer (int64 offsets when Spark ships large_binary
+    under arrow.useLargeVarTypes). A zero-row batch may carry no
+    offsets buffer at all; it reads as the one offset 0."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(content)
+    _, off_buf, data_buf = content.buffers()
+    off_dt = np.int64 if pa.types.is_large_binary(content.type) else np.int32
+    offs = (np.frombuffer(off_buf, dtype=off_dt)[
+        content.offset:content.offset + n + 1]
+        if off_buf is not None else np.zeros(1, dtype=off_dt))
+    data = memoryview(data_buf) if data_buf is not None else memoryview(b"")
+    nulls = (content.is_null().to_numpy(zero_copy_only=False)
+             if content.null_count else None)
+    return offs, data, nulls
 
 
 def extract_features(
@@ -231,7 +274,6 @@ def extract_features(
     ])
 
     def gen(batches: Iterator) -> Iterator:
-        import numpy as np
         import pyarrow as pa
 
         from rayforce_spark.datapipe.codecs import CodecError, media_features
@@ -241,18 +283,7 @@ def extract_features(
             ids = batch.column(0)
             content = batch.column(1)
             n = len(content)
-            # per-blob zero-copy views: slice the shared data buffer by
-            # the offsets buffer (int64 offsets when Spark ships
-            # large_binary under arrow.useLargeVarTypes)
-            _, off_buf, data_buf = content.buffers()
-            off_dt = (np.int64 if pa.types.is_large_binary(content.type)
-                      else np.int32)
-            offs = np.frombuffer(off_buf, dtype=off_dt)[
-                content.offset:content.offset + n + 1]
-            data = (memoryview(data_buf) if data_buf is not None
-                    else memoryview(b""))
-            nulls = (content.is_null().to_numpy(zero_copy_only=False)
-                     if content.null_count else None)
+            offs, data, nulls = _blob_views(content)
             feats: list[list[float] | None] = []
             nb: list[int | None] = []
             for i in range(n):
@@ -291,8 +322,9 @@ def resize_media(
     dimensions via mapInArrow — the same narrow-projection Arrow-batch
     shape as extract_features, so the wide table never ships to Python;
     r13 (guide §4.2): input blobs are read as memoryview slices of the
-    Arrow data buffer (0 input copies for the fake tier; the stdlib
-    tier materializes one ``bytes`` for ``decode_bmp``, down from 2).
+    Arrow data buffer, and both tiers then materialize one ``bytes``
+    per blob (``.tobytes()`` — the resize functions take bytes): 1
+    input copy, down from 2.
 
     decoder="stdlib" is a REAL resize for BMP bytes: decode (24-bit
     parser) -> nearest-neighbor resample -> re-encode BMP; non-BMP bytes
@@ -346,17 +378,7 @@ def resize_media(
             ids = batch.column(0)
             content = batch.column(1)
             n = len(content)
-            # per-blob zero-copy views, as in extract_features: slice the
-            # shared data buffer by the offsets buffer
-            _, off_buf, data_buf = content.buffers()
-            off_dt = (np.int64 if pa.types.is_large_binary(content.type)
-                      else np.int32)
-            offs = np.frombuffer(off_buf, dtype=off_dt)[
-                content.offset:content.offset + n + 1]
-            data = (memoryview(data_buf) if data_buf is not None
-                    else memoryview(b""))
-            nulls = (content.is_null().to_numpy(zero_copy_only=False)
-                     if content.null_count else None)
+            offs, data, nulls = _blob_views(content)
             out: list[bytes | None] = []
             for i in range(n):
                 if nulls is not None and nulls[i]:

@@ -343,7 +343,6 @@ def ivf_train(
     nlist: int = 16,
     iters: int = 5,
     max_train_rows: int = 10_000,
-    assign_impl: str = "pandas",
     corpus_rows: int | None = None,
 ) -> list[list[float]]:
     """Train IVF centroids: distributed deterministic sampling, then
@@ -361,12 +360,13 @@ def ivf_train(
     r13 (guide §1.2/§2.6): the Lloyd iterations themselves moved from
     per-iteration Spark jobs (assignment pandas_udf + Summarizer.mean
     collect — 2 jobs × iters, ~1.9 s of mostly scheduling at gate
-    scale) to ONE bounded collect of the sample (≤ max_train_rows ×
-    dim doubles — a few MB regardless of corpus size) plus driver-side
-    numpy. Training is now count + 1 collect = ≤ 2 jobs; the 100 TB
-    cost — the corpus scan that sizes and filters the sample, and the
-    full-corpus ASSIGNMENT in knn_ivf/set_ivf — stays distributed and
-    unchanged. Numerics: the assignment distance accumulates
+    scale) to ONE bounded Arrow collect of the sample plus driver-side
+    numpy. The sample is ≤ max_train_rows × dim doubles: bounded by
+    max_train_rows, not by corpus size, yet not small at high dim
+    (10,000 × 1,024-dim vectors = 82 MB). Training is now count + 1
+    collect = ≤ 2 jobs; the 100 TB cost — the corpus scan that sizes
+    and filters the sample, and the full-corpus ASSIGNMENT in
+    knn_ivf/set_ivf — stays distributed and unchanged. Numerics: the assignment distance accumulates
     SEQUENTIALLY over dimensions, the exact rounding sequence of the
     expr/pandas assignment twins (_nearest_pandas), with the same
     NaN-sorts-last and degenerate-row story; per-cluster means
@@ -375,8 +375,6 @@ def ivf_train(
     trained centroids are an approximation either way, every probe
     re-ranks with exact cosine, and the knn_recall gate margins were
     re-measured unchanged-to-better at all three SFs (OPTIMIZATION_r13).
-    ``assign_impl`` is kept for API compatibility; training assignment
-    is always the shared sequential-fold spelling now.
 
     ``corpus_rows``: pass the row count when the pipeline already knows
     it, to skip the sizing scan — otherwise training pays one extra
@@ -391,6 +389,7 @@ def ivf_train(
     correctness one — r10 ADVICE).
     """
     import numpy as np
+    import pyarrow.compute as pc
 
     v = corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
     n = corpus_rows if corpus_rows is not None else v.count()
@@ -405,27 +404,23 @@ def ivf_train(
         if keep < bucket_mod:
             v = v.filter(h < keep)
     # the ONE training action: the hash-pinned sample, collected in its
-    # deterministic order (bounded: max_train_rows × dim doubles)
-    vecs = [
-        r["__v"]
-        for r in v.orderBy(F.xxhash64(F.col("__id")))
-        .limit(max_train_rows).select("__v").collect()
-    ]
-    centroids = [[float(x) for x in vec] for vec in vecs[:nlist]]
+    # deterministic order as one Arrow column (no per-row Python Rows)
+    sample = (v.orderBy(F.xxhash64(F.col("__id")))
+              .limit(max_train_rows).select("__v").toArrow())
+    vecs = sample.column("__v").combine_chunks()
+    centroids = [[float(x) for x in vec]
+                 for vec in vecs.slice(0, nlist).to_pylist()]
     if not centroids:
         # empty corpus: no centroids to train — callers (knn_ivf) handle
         # [] by returning no neighbors
         return centroids
     dim = len(centroids[0])
     # degenerate sample rows (null / wrong-length vectors) are excluded
-    # from the means; the old Spark path fed them to cluster 0's
-    # Summarizer where a null vector errored — dropping them is the
-    # defined behavior now (assignment of the CORPUS still routes them
-    # to list 0 via _nearest_impl, unchanged)
-    M = np.array(
-        [vec for vec in vecs if vec is not None and len(vec) == dim],
-        dtype=np.float64,
-    )
+    # from the means (assignment of the CORPUS still routes them to
+    # list 0 via _nearest_impl); null elements read as NaN
+    ok = pc.fill_null(pc.equal(pc.list_value_length(vecs), dim), False)
+    M = (pc.list_flatten(vecs.filter(ok)).to_numpy(zero_copy_only=False)
+         .astype(np.float64).reshape(-1, dim))
     if M.size == 0:
         return centroids
     for _ in range(iters):
@@ -477,7 +472,7 @@ def knn_ivf(
     if centroids is None:
         centroids = ivf_train(
             corpus, vec_col, id_col, nlist=nlist, iters=iters,
-            assign_impl=assign_impl, corpus_rows=corpus_rows,
+            corpus_rows=corpus_rows,
         )
     if not centroids:
         # empty corpus trains zero centroids; F.array() of no columns has
@@ -757,8 +752,7 @@ def set_ivf(
     never re-shuffles. Returns the trained centroids."""
     if centroids is None:
         centroids = ivf_train(corpus, vec_col, id_col, nlist=nlist,
-                              iters=iters, assign_impl=assign_impl,
-                              corpus_rows=corpus_rows)
+                              iters=iters, corpus_rows=corpus_rows)
     spark = corpus.sparkSession
     spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],

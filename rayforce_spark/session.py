@@ -53,17 +53,40 @@ def normalize_ns(df: DataFrame, cols=NS_SHADOW_COLS) -> DataFrame:
     return df.withColumns(reps) if reps else df
 
 
+def host_cpus() -> str:
+    """Local-mode slot count: $SPARK_GRAFT_CPUS, else this host's CPU
+    count (a fixed 32 oversubscribes small hosts and idles big ones)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def host_driver_mem() -> str:
+    """Driver heap: $SPARK_GRAFT_DRIVER_MEM, else half of this host's
+    physical memory, between 1g and 16g (a fixed 16g asks for more heap
+    than a 15 GB host has)."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(16384, phys_mb // 2))}m"
+
+
+def _shuffle_default(cpus: str) -> int:
+    return int(cpus) if cpus.isdigit() else os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "rayforce_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Create (or get) a SparkSession tuned for this engine.
 
-    Local mode honours $SPARK_GRAFT_CPUS; on a real cluster the master and
-    memory come from spark-submit and these configs remain sensible: AQE on
-    (runtime re-plan, skew-join splitting, partition coalescing), Arrow on
-    (vectorized Python interchange), UTC session timezone (oracle parity).
+    Local mode honours $SPARK_GRAFT_CPUS and $SPARK_GRAFT_DRIVER_MEM,
+    falling back to host_cpus / host_driver_mem; on a real cluster the
+    master and memory come from spark-submit and these configs remain
+    sensible: AQE on (runtime re-plan, skew-join splitting, partition
+    coalescing), Arrow on (vectorized Python interchange), UTC session
+    timezone (oracle parity).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = _shuffle_default(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -97,7 +120,7 @@ def get_spark(app_name: str = "rayforce_spark", shuffle_partitions: int | None =
         # "LongType shadow column" strategy.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", host_driver_mem())
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]")
@@ -180,19 +203,10 @@ class Session:
     def tables(self) -> list[str]:
         return sorted(self._catalog)
 
-    # -- testdata convenience ---------------------------------------------
-    def load_dir(self, sf_dir: str, tables: list[str] | None = None) -> dict[str, DataFrame]:
-        """Load the driver's parquet tables from an sf directory."""
-        out = {}
-        for t in tables or TABLES:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                out[t] = self.set(t, normalize_ns(self.spark.read.parquet(path)))
-        return out
-
 
 def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> dict[str, DataFrame]:
-    """Functional form of Session.load_dir for driver entry points.
+    """Load the parquet tables of an sf directory — the one table
+    loader, for entry points and engine callers alike.
 
     Sets the nanos-as-long conf on the given session (runtime-settable), so
     externally created sessions can read TIMESTAMP(NANOS) parquet too;
@@ -216,9 +230,8 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = Non
     if (not explicitly_set
             and spark.conf.get("spark.sql.shuffle.partitions",
                                "200") == "200"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
         spark.conf.set("spark.sql.shuffle.partitions",
-                       cpus if cpus.isdigit() else "32")
+                       str(_shuffle_default(host_cpus())))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     out = {}

@@ -283,12 +283,11 @@ def stream_minhash_index_ingest(
     """Continuous day-2 ingestion against a persisted MinHash index
     (datapipe.dedup.set_minhash_index): returns a ``foreachBatch``
     callable that, per micro-batch, probes the batch against the index
-    (minhash_index_pairs — the indexed corpus is never re-shingled),
-    finds intra-batch pairs with the index's own banding params, writes
-    the canonical pair set (id_a < id_b, exact jaccard >= threshold) to
-    ``pairs_path``, and extends the index with the batch — the
-    streaming twin of the batch dedup-then-extend loop in
-    examples/train_prep.py. Wire it as::
+    (the indexed corpus is never re-shingled), finds intra-batch pairs
+    with the index's own banding params, writes the canonical pair set
+    (id_a < id_b, exact jaccard >= threshold) to ``pairs_path``, and
+    extends the index with the batch — the streaming twin of the batch
+    dedup-then-extend loop in examples/train_prep.py. Wire it as::
 
         (stream.writeStream
          .foreachBatch(stream_minhash_index_ingest(idx, pairs, "text", "doc_id"))
@@ -308,9 +307,8 @@ def stream_minhash_index_ingest(
       Hadoop FS API — local paths and object stores alike) skips fully
       committed batches on replay; the one torn window (extend
       committed, marker not) duplicates that batch's index rows, which
-      probes tolerate by construction (minhash_index_pairs dedups its
-      verified pairs by pair key) at the bounded cost of one batch's
-      extra index bytes.
+      probes tolerate by construction (they dedup verified pairs by
+      pair key) at the bounded cost of one batch's extra index bytes.
 
     Emission semantics over the whole stream: every near-dup pair
     (a, b) with at least one side arriving on the stream is emitted
@@ -318,94 +316,16 @@ def stream_minhash_index_ingest(
     (``intra_batch=False`` drops same-batch pairs for pipelines that
     run minhash_lsh_pairs over the batch separately); pairs entirely
     inside the pre-built index are the batch builder's job.
+
+    ``compact_every``: compact the index after every N-th committed
+    batch (see datapipe.dedup._index_ingest, the core all three
+    index-ingest callables share).
     """
-    from rayforce_spark.datapipe.dedup import (
-        _read_minhash_meta,
-        compact_minhash_index,
-        extend_minhash_index,
-        minhash_index_pairs,
-        minhash_lsh_pairs,
-    )
+    from rayforce_spark.datapipe.dedup import _MINHASH, _index_ingest
 
-    def pairs_of(batch_df: DataFrame) -> DataFrame:
-        spark = batch_df.sparkSession
-        ids = batch_df.select(F.col(id_col).alias("__bid"))
-        cross = (
-            minhash_index_pairs(index_path, batch_df, text_col, id_col,
-                                threshold=threshold)
-            .join(ids, F.col("index_id") == F.col("__bid"), "left_anti")
-            .select(F.least("new_id", "index_id").alias("id_a"),
-                    F.greatest("new_id", "index_id").alias("id_b"),
-                    "jaccard")
-        )
-        if not intra_batch:
-            return cross
-        meta = _read_minhash_meta(spark, index_path)
-        return cross.unionByName(minhash_lsh_pairs(
-            batch_df, text_col, id_col, threshold=threshold,
-            num_perm=meta["num_perm"], bands=meta["bands"],
-            shingle_k=meta["shingle_k"], sig_impl=meta["sig_impl"],
-        ))
-
-    return _index_ingest_foreachbatch(
-        index_path, pairs_path, pairs_of,
-        lambda b: extend_minhash_index(b, index_path, text_col, id_col),
-        compact=compact_minhash_index, compact_every=compact_every)
-
-
-def _index_ingest_foreachbatch(index_path, pairs_path, pairs_of,
-                               extend, compact=None, compact_every=None,
-                               ) -> Callable[[DataFrame, int], None]:
-    """The family-independent foreachBatch core shared by the three
-    index-ingest wrappers (minhash / simhash / jaccard — the
-    idempotency contract is documented on stream_minhash_index_ingest
-    and identical for all three): marker-skip, one localCheckpoint of
-    the micro-batch, per-batch overwrite pair partition, extend, commit
-    marker last.
-
-    ``compact``/``compact_every``: run ``compact(spark, index_path)``
-    (a compact_*_index) after every ``compact_every``-th committed
-    batch. foreachBatch is the ONE place auto-compaction is safe by
-    construction: micro-batches are serial, so the compaction window
-    can never overlap this stream's own extends/probes (the
-    compact↔extend hazard the _compacting lease enforces against
-    everyone else). A compaction that crashes mid-rewrite leaves the
-    lease held; the next batch sees it BEFORE touching the index and
-    re-runs the compaction to completion (duplicate-tolerant —
-    dedup._compact_leg's crash-safety note), self-healing instead of
-    wedging the stream on the lease error."""
-    from rayforce_spark.sources._sidecar import _fs_path
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fs, _ = _fs_path(spark, index_path)
-        if compact is not None:
-            from rayforce_spark.datapipe.dedup import _lease
-
-            _, lease = _lease(spark, index_path)
-            if fs.exists(lease):  # crashed compaction — finish it first
-                compact(spark, index_path)
-        marker = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/_batches/batch-{batch_id}")
-        if fs.exists(marker):
-            return  # fully committed before a restart — replay is a no-op
-        # freeze the micro-batch once: the probe, the intra-batch pairs,
-        # the id anti-join and the extend are four separate Spark jobs,
-        # and re-reading the source per job would re-pay the scan 4x
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.count() > 0:
-            pairs_of(batch_df).write.mode("overwrite").parquet(
-                f"{pairs_path}/batch={batch_id}")
-            extend(batch_df)
-        fs.mkdirs(marker)  # the commit marker, written LAST
-        # compaction AFTER the commit marker: a crash mid-compaction
-        # replays nothing (the batch is committed) and the next batch
-        # self-heals the lease
-        if compact is not None and compact_every and (
-                (batch_id + 1) % int(compact_every) == 0):
-            compact(spark, index_path)
-
-    return _ingest
+    return _index_ingest(_MINHASH, index_path, pairs_path, text_col, id_col,
+                         intra_batch=intra_batch, compact_every=compact_every,
+                         threshold=threshold)
 
 
 def stream_simhash_index_ingest(
@@ -423,36 +343,10 @@ def stream_simhash_index_ingest(
     docstring). Emits canonical (id_a < id_b, hamming) pairs at the
     index's stored max_hamming; recall is exact by the pigeonhole
     bound, so the whole-stream emission is deterministic."""
-    from rayforce_spark.datapipe.dedup import (
-        _read_simhash_meta,
-        compact_simhash_index,
-        extend_simhash_index,
-        simhash_dup_pairs,
-        simhash_index_pairs,
-    )
+    from rayforce_spark.datapipe.dedup import _SIMHASH, _index_ingest
 
-    def pairs_of(batch_df: DataFrame) -> DataFrame:
-        spark = batch_df.sparkSession
-        ids = batch_df.select(F.col(id_col).alias("__bid"))
-        cross = (
-            simhash_index_pairs(index_path, batch_df, text_col, id_col)
-            .join(ids, F.col("index_id") == F.col("__bid"), "left_anti")
-            .select(F.least("new_id", "index_id").alias("id_a"),
-                    F.greatest("new_id", "index_id").alias("id_b"),
-                    "hamming")
-        )
-        if not intra_batch:
-            return cross
-        meta = _read_simhash_meta(spark, index_path)
-        return cross.unionByName(simhash_dup_pairs(
-            batch_df, text_col, id_col, max_hamming=meta["max_hamming"],
-            bands=meta["bands"], token_hash=meta["token_hash"],
-        ))
-
-    return _index_ingest_foreachbatch(
-        index_path, pairs_path, pairs_of,
-        lambda b: extend_simhash_index(b, index_path, text_col, id_col),
-        compact=compact_simhash_index, compact_every=compact_every)
+    return _index_ingest(_SIMHASH, index_path, pairs_path, text_col, id_col,
+                         intra_batch=intra_batch, compact_every=compact_every)
 
 
 def stream_jaccard_index_ingest(
@@ -472,34 +366,7 @@ def stream_jaccard_index_ingest(
     cross-batch pairs stay EXACT across the whole stream by the
     frozen-order prefix argument (set_jaccard_index), intra-batch pairs
     come from jaccard_dup_pairs over the batch alone."""
-    from rayforce_spark.datapipe.dedup import (
-        _read_jaccard_meta,
-        compact_jaccard_index,
-        extend_jaccard_index,
-        jaccard_dup_pairs,
-        jaccard_index_pairs,
-    )
+    from rayforce_spark.datapipe.dedup import _JACCARD, _index_ingest
 
-    def pairs_of(batch_df: DataFrame) -> DataFrame:
-        spark = batch_df.sparkSession
-        ids = batch_df.select(F.col(id_col).alias("__bid"))
-        cross = (
-            jaccard_index_pairs(index_path, batch_df, text_col, id_col)
-            .join(ids, F.col("index_id") == F.col("__bid"), "left_anti")
-            .select(F.least("new_id", "index_id").alias("id_a"),
-                    F.greatest("new_id", "index_id").alias("id_b"),
-                    "jaccard")
-        )
-        if not intra_batch:
-            return cross
-        meta = _read_jaccard_meta(spark, index_path)
-        return cross.unionByName(jaccard_dup_pairs(
-            batch_df, text_col, id_col, shingle_k=meta["shingle_k"],
-            threshold=meta["threshold"],
-            max_doc_freq=meta["max_doc_freq"],
-        ))
-
-    return _index_ingest_foreachbatch(
-        index_path, pairs_path, pairs_of,
-        lambda b: extend_jaccard_index(b, index_path, text_col, id_col),
-        compact=compact_jaccard_index, compact_every=compact_every)
+    return _index_ingest(_JACCARD, index_path, pairs_path, text_col, id_col,
+                         intra_batch=intra_batch, compact_every=compact_every)

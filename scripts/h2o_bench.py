@@ -468,6 +468,8 @@ def _seed_from_md() -> dict | None:
 
 
 def write_md(out):
+    from rayforce_spark.session import host_cpus, host_driver_mem
+
     rows = []
     desc = {
         "gq1": "sum v1 by id1 (100 groups)",
@@ -497,8 +499,7 @@ each, joined on id1+id2 through the reference's dedup-index semantics),
 window-join wj1 (1e7 trades / 2e7 quotes, +-10s, min Bid / max Ask).
 
 Hardware differs (reference: Apple M3 Max, single-node in-memory C;
-here: local[{os.environ.get("SPARK_GRAFT_CPUS", "32")}] JVM,
-{os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")} heap) — same row
+here: local[{host_cpus()}] JVM, {host_driver_mem()} heap) — same row
 counts, warm JVM, cached inputs, min of N runs (per-query minima across
 {out.get("merged_runs", 1)} recorded JVM instance(s) — see variance
 note below), full materialization via noop sink.

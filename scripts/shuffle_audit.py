@@ -53,14 +53,12 @@ def main() -> int:
     # functional confs are runtime SQL confs and apply normally)
     from pyspark.sql import SparkSession
 
-    from rayforce_spark.session import get_spark
+    from rayforce_spark.session import get_spark, host_cpus, host_driver_mem
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     (SparkSession.builder
-     .master(f"local[{cpus}]")
+     .master(f"local[{host_cpus()}]")
      .config("spark.ui.enabled", "true")
-     .config("spark.driver.memory",
-             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+     .config("spark.driver.memory", host_driver_mem())
      .getOrCreate())
     spark = get_spark("shuffle_audit")
     url = spark.sparkContext.uiWebUrl

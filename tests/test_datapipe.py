@@ -466,6 +466,42 @@ def test_index_format_version_gate(spark, tmp_path):
             probe_fn(path, docs, "text", "doc_id")
 
 
+def test_index_reads_checked_in_older_indexes(spark, tmp_path):
+    """tests/fixtures/index_format holds a tiny index of each family
+    written by the code before the shared index core, with that code's
+    probe pairs (expected.json). The on-disk format is unchanged: the
+    current code probes each to the same pairs, then extends and
+    compacts it and probes a second batch to the same pairs too."""
+    import json
+    import os
+    import shutil
+
+    from rayforce_spark.datapipe import dedup as D
+
+    src = os.path.join(os.path.dirname(__file__), "fixtures", "index_format")
+    with open(os.path.join(src, "expected.json")) as f:
+        exp = json.load(f)
+    schema = "doc_id long, text string"
+    batch = spark.createDataFrame([tuple(r) for r in exp["probe"]], schema)
+    later = spark.createDataFrame(
+        [tuple(r) for r in exp["probe_after_extend"]], schema)
+    probes = {
+        "minhash": lambda p, d: D.minhash_index_pairs(
+            p, d, "text", "doc_id", threshold=0.5),
+        "simhash": lambda p, d: D.simhash_index_pairs(p, d, "text", "doc_id"),
+        "jaccard": lambda p, d: D.jaccard_index_pairs(p, d, "text", "doc_id"),
+    }
+    for fam, probe in probes.items():
+        path = str(tmp_path / fam)
+        shutil.copytree(os.path.join(src, fam), path)
+        got = sorted(list(r) for r in probe(path, batch).collect())
+        assert got == exp[fam]["probe"], fam
+        getattr(D, f"extend_{fam}_index")(batch, path, "text", "doc_id")
+        getattr(D, f"compact_{fam}_index")(spark, path)
+        got = sorted(list(r) for r in probe(path, later).collect())
+        assert got == exp[fam]["probe_after_extend"], fam
+
+
 def test_arrow_default_fails_fast_when_missing(spark, monkeypatch):
     """key_impl/assign_impl default to the Arrow twins; with
     pandas/pyarrow absent the failure must be a DRIVER-side ImportError
@@ -838,6 +874,28 @@ def test_ivf_train_deterministic_and_bounded_jobs(tables, spark):
     assert len(st.getJobIdsForGroup("ivf_det_d")) < len(ja)
 
 
+def test_ivf_train_arrow_sample_matches_row_path(tables, spark, monkeypatch):
+    """The training sample is collected as one Arrow column; collecting
+    the same sample as Python Rows must give bit-identical centroids,
+    degenerate rows (null / wrong-length vectors) included."""
+    import pyarrow as pa
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    emb = tables["embeddings"].select("vec_id", "embedding").unionByName(
+        spark.createDataFrame(
+            [(10_001, None), (10_002, [1.0, 2.0])],
+            "vec_id long, embedding array<float>"))
+    got = ivf_train(emb, "embedding", "vec_id", nlist=8, iters=3)
+
+    def rows_to_arrow(self):
+        vecs = [r["__v"] for r in self.collect()]
+        return pa.table({"__v": pa.array(vecs, pa.list_(pa.float64()))})
+
+    monkeypatch.setattr(DataFrame, "toArrow", rows_to_arrow)
+    want = ivf_train(emb, "embedding", "vec_id", nlist=8, iters=3)
+    assert got and got == want
+
+
 def test_knn_ivf_recall(tables):
     emb = tables["embeddings"]
     queries = emb.filter(F.col("vec_id") < 5)
@@ -1082,6 +1140,58 @@ def test_resize_media_arrow_edges(spark):
         and sl[3].content is None
     want = encode_bmp(resize_nearest(decode_bmp(bmp), 2, 2))
     assert bytes(sl[4].content) == want
+
+
+def _arrow_fn(monkeypatch, build):
+    """The Python function a multimodal operator hands to mapInArrow,
+    so a test can feed it hand-built Arrow batches directly."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen = {}
+    monkeypatch.setattr(DataFrame, "mapInArrow",
+                        lambda self, fn, schema: seen.setdefault("fn", fn))
+    build()
+    return seen["fn"]
+
+
+def test_media_ops_zero_row_batch_without_offsets(spark, monkeypatch):
+    # a zero-row Arrow binary column may carry NO offsets buffer; the
+    # operators must yield an empty batch, not fail in np.frombuffer
+    import pyarrow as pa
+
+    df = spark.createDataFrame([(1, b"x")], "media_id long, content binary")
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64()),
+         pa.Array.from_buffers(pa.binary(), 0,
+                               [None, None, pa.py_buffer(b"")])],
+        names=["media_id", "content"])
+    assert empty.column(1).buffers()[1] is None
+    for build in (lambda: extract_features(df),
+                  lambda: extract_features(df, decoder="stdlib"),
+                  lambda: resize_media(df, width=2, height=2)):
+        out = list(_arrow_fn(monkeypatch, build)(iter([empty])))
+        assert len(out) == 1 and out[0].num_rows == 0
+
+
+def test_synthesize_media_rejects_int32_offset_overflow(spark, monkeypatch):
+    # Arrow binary offsets are int32: blob bytes past 2^31-1 in one batch
+    # must raise, naming the parameters, before any buffer is allocated
+    import pyarrow as pa
+    import pytest
+
+    from rayforce_spark.datapipe.multimodal import synthesize_media
+
+    df = spark.createDataFrame([(1,)], "doc_id long")
+    # one blob alone is too large: refused at the call, no job runs
+    with pytest.raises(ValueError, match="wav_n=2147483648"):
+        synthesize_media(df, "doc_id", kind="audio", wav_n=2**31)
+    # 3000 blobs of 768 KiB: refused per batch, before the 2.4 GB batch
+    fn = _arrow_fn(monkeypatch, lambda: synthesize_media(
+        df, "doc_id", kind="image", image_wh=(512, 512)))
+    ids = pa.RecordBatch.from_arrays([pa.array(range(3000), pa.int64())],
+                                     names=["doc_id"])
+    with pytest.raises(ValueError, match=r"3000 rows .*image_wh=\(512, 512\)"):
+        next(fn(iter([ids])))
 
 
 def test_extract_features_real_decoder_stub(tables):

@@ -63,3 +63,27 @@ def test_cube_pivot(tables, duck):
                   sum(l_quantity) FILTER (WHERE l_linestatus = 'F') AS "F"
            FROM lineitem GROUP BY 1""",
     )
+
+
+def test_host_derived_spark_defaults(monkeypatch):
+    """With $SPARK_GRAFT_CPUS / $SPARK_GRAFT_DRIVER_MEM unset, the slot
+    count and driver heap come from the host (CPU count; half of
+    physical memory, clamped to 1g-16g), not from a fixed 32 cores and
+    16g; set variables still win."""
+    import os
+
+    from rayforce_spark import session as S
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 6)
+    assert S.host_cpus() == "6" and S._shuffle_default("*") == 6
+    for phys_gb, want in ((15, "7680m"), (64, "16384m"), (1, "1024m")):
+        monkeypatch.setattr(os, "sysconf", lambda k, g=phys_gb: {
+            "SC_PAGE_SIZE": 4096,
+            "SC_PHYS_PAGES": g * (1 << 30) // 4096}[k])
+        assert S.host_driver_mem() == want
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert S.host_cpus() == "3" and S._shuffle_default("3") == 3
+    assert S.host_driver_mem() == "2g"

@@ -2,6 +2,8 @@
 
 import time
 
+import pytest
+
 from rayforce_spark.streaming import Journal, read_journal_stream
 from rayforce_spark.streaming.stateful import sessionize
 
@@ -309,21 +311,27 @@ def test_stream_pack_matches_batch_across_batches(spark, tmp_path):
     assert got[41][1] == 0  # null text -> 0 tokens in BOTH paths
 
 
-def test_minhash_index_ingest_idempotent_replay(spark, tmp_path):
-    """Deterministic pins for stream_minhash_index_ingest's two
-    idempotency mechanisms (STREAMCHECK leg 10 exercises a random kill;
-    this pins the exact windows): (a) a replayed batch_id whose marker
-    exists is a full no-op — the index does not grow; (b) the TORN
-    window (extend committed, marker not — simulated by deleting the
-    marker) re-runs the batch: pair output is identical (overwrite
-    partition + anti-join of own ids + probe-side pair dedup) even
-    though the index now holds duplicate rows for that batch."""
+@pytest.mark.parametrize("family", ["minhash", "simhash", "jaccard"])
+def test_minhash_index_ingest_idempotent_replay(spark, tmp_path, family):
+    """Deterministic pins for the index-ingest foreachBatch's two
+    idempotency mechanisms, for all three index families (STREAMCHECK
+    legs 10-12 exercise a random kill; this pins the exact windows):
+    (a) a replayed batch_id whose marker exists is a full no-op — the
+    index does not grow; (b) the TORN window (extend committed, marker
+    not — simulated by deleting the marker) re-runs the batch: pair
+    output is identical (overwrite partition + anti-join of own ids +
+    probe-side pair dedup) even though the index now holds duplicate
+    rows for that batch."""
     import shutil
 
     from pyspark.sql import functions as F
 
-    from rayforce_spark.datapipe import set_minhash_index
-    from rayforce_spark.streaming.ops import stream_minhash_index_ingest
+    from rayforce_spark.datapipe import (
+        set_jaccard_index,
+        set_minhash_index,
+        set_simhash_index,
+    )
+    from rayforce_spark.streaming import ops
 
     docs = [(i, f"alpha beta gamma delta epsilon doc{i % 4}")
             for i in range(12)]
@@ -333,17 +341,35 @@ def test_minhash_index_ingest_idempotent_replay(spark, tmp_path):
         "doc_id long, text string")
     idx = str(tmp_path / "idx")
     pairs = str(tmp_path / "pairs")
-    set_minhash_index(old, idx, "text", "doc_id",
-                      num_perm=16, bands=16, shingle_k=1)
-    fn = stream_minhash_index_ingest(idx, pairs, "text", "doc_id",
-                                     threshold=0.5)
+    # (build, ingest callable, pair metric, candidate leg)
+    set_fn, fn, metric, leg = {
+        "minhash": (
+            lambda: set_minhash_index(old, idx, "text", "doc_id",
+                                      num_perm=16, bands=16, shingle_k=1),
+            lambda: ops.stream_minhash_index_ingest(
+                idx, pairs, "text", "doc_id", threshold=0.5),
+            "jaccard", "buckets"),
+        "simhash": (
+            lambda: set_simhash_index(old, idx, "text", "doc_id"),
+            lambda: ops.stream_simhash_index_ingest(
+                idx, pairs, "text", "doc_id"),
+            "hamming", "banded"),
+        "jaccard": (
+            lambda: set_jaccard_index(old, idx, "text", "doc_id",
+                                      shingle_k=1, threshold=0.5),
+            lambda: ops.stream_jaccard_index_ingest(
+                idx, pairs, "text", "doc_id"),
+            "jaccard", "prefixes"),
+    }[family]
+    set_fn()
+    fn = fn()
 
     def snap():
-        got = spark.read.parquet(pairs).select("id_a", "id_b", "jaccard")
+        got = spark.read.parquet(pairs).select("id_a", "id_b", metric)
         return {tuple(r) for r in got.collect()}
 
     def index_rows():
-        return spark.read.parquet(f"{idx}/buckets").count()
+        return spark.read.parquet(f"{idx}/{leg}").count()
 
     fn(batch, 7)
     want, n_idx = snap(), index_rows()
