@@ -63,33 +63,6 @@ def fanout(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingles_of_words(words: Column, k: int) -> Column:
-    """Distinct k-word shingles from an ALREADY-MATERIALIZED words column.
-
-    PERFORMANCE: ``words`` must be a plain column reference. Inlining the
-    split() expression here would re-evaluate it per array element inside
-    the transform lambda (O(doc_len²) work — measured 10× slowdown);
-    keeping it a materialized column makes Catalyst evaluate it once
-    (CollapseProject declines to merge multi-referenced non-trivial
-    projections)."""
-    if k == 1:
-        return F.array_distinct(words)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - k + 1, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(words, i, k), " "))
-    )
-
-
-def with_shingles(df: DataFrame, text_col: str, k: int, out: str) -> DataFrame:
-    """Add a distinct-k-shingle array column (two-step projection, see
-    _shingles_of_words)."""
-    return (
-        df.withColumn("__rf_words", _tokens(F.col(text_col)))
-        .withColumn(out, _shingles_of_words(F.col("__rf_words"), k))
-        .drop("__rf_words")
-    )
-
-
 def with_shingle_hashes(df: DataFrame, text_col: str, k: int, out: str) -> DataFrame:
     """Add a distinct k-shingle HASH array (array<long>) — the fast path
     for every shingle consumer that only needs set semantics (minhash,
@@ -186,25 +159,6 @@ def dedup_exact(df: DataFrame, cols: list[str], *, id_col: str,
     keep_fn = F.min if keep == "min" else F.max
     keeper = df.groupBy(*cols).agg(keep_fn(id_col).alias(id_col))
     return df.join(keeper, [*cols, id_col], "left_semi")
-
-
-def minhash_signature(shingles: Column, *, num_perm: int) -> Column:
-    """MinHash signature as an array<long> of ``num_perm`` values over an
-    ALREADY-MATERIALIZED shingle array column (materialize it once with a
-    select — inlining the shingle expression here would replicate its
-    computation num_perm times in the plan).
-
-    One xxhash64 per STRING shingle, then the permutation family re-hashes
-    the resulting i64 with a per-permutation seed column: string hashing
-    happens once, the num_perm re-hashes are fixed-width (8-byte) — and
-    overflow-free, which matters under Spark 4's default ANSI mode (a
-    wrapping multiply-add family would throw ARITHMETIC_OVERFLOW).
-    Entirely JVM-side expressions. Prefer the two-step spelling
-    (materialize base hashes, then minhash_signature_from_hashes) in
-    pipelines — see the CollapseProject note on _shingles_of_words."""
-    return minhash_signature_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_perm=num_perm
-    )
 
 
 def minhash_signature_from_hashes(base_hashes: Column, *, num_perm: int) -> Column:

@@ -108,8 +108,7 @@ def ngrams(text: Column, n: int = 2) -> Column:
     whole-document regex split re-ran per output n-gram, O(doc_len²)
     per doc (measured r12: 5.7 s to build bigrams for 5,000 docs /
     271k tokens at sf0.1 vs 0.17 s for the token arrays themselves;
-    this spelling builds the same arrays in ~0.2 s). Same hazard class
-    as ``dedup._shingles_of_words``'s documented 10× slowdown.
+    this spelling builds the same arrays in ~0.2 s).
 
     zip_with pads the shorter side with nulls, which concat_ws skips —
     the final slice trims those padded tails, so docs shorter than n

@@ -5,11 +5,19 @@ in-place mutation by quoted name (``(set 'employees …)``, ``update {from:
 'employees}`` — ref core/binary.c:317, core/update.c:938). In Spark the
 analog is a driver-side catalog mapping names to (immutable) DataFrames with
 replace-on-write; no Catalyst involvement is needed (SURVEY §4 item 5).
+
+Parquet tables are resolved once per SparkSession too, as the reference
+resolves a named table once into its global environment (ref
+core/compose.c:217): :func:`load_tables` keeps each session's frames keyed
+by absolute path and re-resolves a table only when its files' stamp
+(inode or name, mtime, size) changes. Callers share those frame objects,
+so ``.cache()``/``.unpersist()`` on one acts for every caller.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -204,12 +212,66 @@ class Session:
         return sorted(self._catalog)
 
 
+def _hidden(name: str) -> bool:
+    # Spark's file listing skips these too: _SUCCESS, _temporary/, .crc
+    return name.startswith(("_", "."))
+
+
+def _stamp(path: str):
+    """The identity of a table's files (see :func:`load_tables`), or None
+    when ``path`` is gone. A directory table's partition subdirectories
+    are walked too."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for n in names:
+            if not _hidden(n):
+                f = os.path.join(root, n)
+                fs = os.stat(f)
+                files.append((f, fs.st_mtime_ns, fs.st_size))
+    return tuple(sorted(files))
+
+
+def _resolved(spark: SparkSession) -> dict:
+    """This session's resolved tables: absolute path -> (stamp, frame).
+
+    Held as an attribute of the session object rather than in a
+    module-level WeakKeyDictionary: every frame references its session,
+    so a weak-keyed map would keep each session (and its frames) alive
+    for the life of the process. On the session itself the catalog is
+    collected with it, and ``spark.newSession()`` or a restarted
+    session starts empty."""
+    cat = getattr(spark, "_rayforce_resolved", None)
+    if cat is None:
+        cat = spark._rayforce_resolved = {}
+    return cat
+
+
 def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> dict[str, DataFrame]:
     """Load the parquet tables of an sf directory — the one table
-    loader, for entry points and engine callers alike.
+    loader, for entry points and engine callers alike. Tables missing
+    from ``sf_dir`` are left out of the result.
 
-    Sets the nanos-as-long conf on the given session (runtime-settable), so
-    externally created sessions can read TIMESTAMP(NANOS) parquet too;
+    Each table is resolved once per SparkSession: the session keeps the
+    ``normalize_ns(spark.read.parquet(path))`` frame keyed by the table's
+    absolute path, stamped with ``(st_ino, st_mtime_ns, st_size)`` of a
+    single-file table or the sorted ``(name, mtime_ns, size)`` of a
+    directory table's data files. A call whose stamp matches returns the
+    same frame object and launches no Spark job; a rewritten, added or
+    removed file re-resolves the table, and a deleted table drops out.
+    Callers therefore share frame objects: ``.cache()``/``.unpersist()``
+    on one acts for every caller, as it already did through Spark's
+    plan-keyed cache manager.
+
+    The runtime confs below are set on every call, hit or miss, so an
+    externally created session is pinned before any query runs on it.
+    Nanos-as-long lets such sessions read TIMESTAMP(NANOS) parquet too;
     TIMESTAMP(µs) columns (what the fixture carries) are normalized to the
     same i64-ns shadow by :func:`normalize_ns` — both parquet temporal
     encodings land on one canonical dtype.
@@ -224,8 +286,10 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = Non
     # (or user) that configured shuffle.partitions deliberately keeps
     # its value (checked via the launch SparkConf, not the value: a
     # deliberate "200" must survive — r8 ADVICE); AQE coalescing keeps
-    # post-shuffle partitions data-sized
-    explicitly_set = spark.sparkContext.getConf().contains(
+    # post-shuffle partitions data-sized. Asked of the context's own conf:
+    # getConf() would copy every entry through py4j, ~15 ms a call, more
+    # than the rest of a catalog hit
+    explicitly_set = spark.sparkContext._conf.contains(
         "spark.sql.shuffle.partitions")
     if (not explicitly_set
             and spark.conf.get("spark.sql.shuffle.partitions",
@@ -234,9 +298,21 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = Non
                        str(_shuffle_default(host_cpus())))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    resolved = _resolved(spark)
+    # a deleted table's frame goes with it, whichever sf_dir it was in
+    # (list() snapshots the keys: another thread may be loading too)
+    for gone in [p for p in list(resolved) if not os.path.exists(p)]:
+        resolved.pop(gone, None)
     out = {}
     for t in tables or TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            out[t] = normalize_ns(spark.read.parquet(path))
+        path = os.path.abspath(os.path.join(sf_dir, f"{t}.parquet"))
+        # stamp BEFORE reading: a file that changes mid-read leaves an
+        # older stamp, so the next call re-resolves rather than keeping it
+        st = _stamp(path)
+        if st is None:
+            continue
+        hit = resolved.get(path)
+        if hit is None or hit[0] != st:
+            hit = resolved[path] = (st, normalize_ns(spark.read.parquet(path)))
+        out[t] = hit[1]
     return out

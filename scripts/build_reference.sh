@@ -17,6 +17,10 @@ if [ -x "$DST/rayforce" ]; then
     echo "already built: $DST/rayforce"
     exit 0
 fi
+if [ ! -d "$SRC" ]; then
+    echo "missing reference checkout: $SRC" >&2
+    exit 2
+fi
 rm -rf "$DST"
 cp -r "$SRC" "$DST"
 cd "$DST"

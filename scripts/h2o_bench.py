@@ -212,11 +212,12 @@ def main():
     from rayforce_spark.operators.query import select
     from rayforce_spark.session import get_spark
 
-    # default heap 48g here (env-overridable): the harness caches ~4e7
-    # rows across the group-by/join/window tables, and a 16g heap puts
-    # every sub-second group-by under GC pressure (measured: gq1 521ms at
-    # 16g vs 323ms at 48g, min-of-3; the r2->r3 "drift" was this)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # the heap comes from session.host_driver_mem() (half of physical
+    # memory, at most 16g) unless $SPARK_GRAFT_DRIVER_MEM is set. The
+    # harness caches ~4e7 rows across the group-by/join/window tables,
+    # and a 16g heap puts every sub-second group-by under GC pressure
+    # (measured: gq1 521ms at 16g vs 323ms at 48g, min-of-3): on a host
+    # with the memory for it, set SPARK_GRAFT_DRIVER_MEM=48g
     spark = get_spark("h2o_bench")
 
     # symbol-intern the string key columns at load, exactly as the
@@ -555,8 +556,9 @@ fresh (2x gate per BASELINE.json).
   2^20 regresses from cache footprint).
 - **Heap sizing dominates sub-second timings**: at the old 16g default
   the harness's ~4e7 cached rows put every group-by under GC pressure
-  (gq1 521 ms at 16g vs 323 ms at 48g, same build). 48g is the harness
-  default.
+  (gq1 521 ms at 16g vs 323 ms at 48g, same build). The heap defaults to
+  half of physical memory (at most 16g); set SPARK_GRAFT_DRIVER_MEM=48g
+  on a host with the memory for it.
 - **Shuffled-hash join preferred over sort-merge** (session default
   `spark.sql.join.preferSortMergeJoin=false`, r5): the reference's joins
   are hash-index joins, and skipping both sorts cut the 1e7x1e7 shapes

@@ -321,6 +321,10 @@ def sweep(pages: list[str]):
 def main():
     if len(sys.argv) > 1:
         pages = sys.argv[1:]
+    elif not os.path.isdir(DOCS):
+        print(f"rayfall_docs_sweep: missing {DOCS} (the reference "
+              "checkout's docs)", file=sys.stderr)
+        sys.exit(2)
     else:
         pages = sorted(glob.glob(f"{DOCS}/**/*.md", recursive=True))
     report, gaps = sweep(pages)

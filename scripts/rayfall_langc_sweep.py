@@ -171,6 +171,10 @@ def _values_eq(a, b) -> bool:
 
 
 def main():
+    if not os.path.exists(LANG_C):
+        print(f"rayfall_langc_sweep: missing {LANG_C} (the reference "
+              "checkout's tests)", file=sys.stderr)
+        sys.exit(2)
     no_spark = "--no-spark" in sys.argv
     show = 20
     for i, a in enumerate(sys.argv):

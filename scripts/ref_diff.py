@@ -308,8 +308,15 @@ def main():
                     help="max divergences to list in the report")
     args = ap.parse_args()
 
-    from rayforce_spark.interop import reference_eval, spawn_reference_server
+    from rayforce_spark.interop import (
+        REFERENCE_BIN, reference_eval, spawn_reference_server)
     from rayforce_spark.rayfall import Interp
+
+    if not os.path.exists(REFERENCE_BIN):
+        print(f"ref_diff: missing {REFERENCE_BIN} (build it from the "
+              "reference checkout with scripts/build_reference.sh)",
+              file=sys.stderr)
+        sys.exit(2)
 
     r = random.Random(args.seed)
     exprs = []

@@ -549,10 +549,17 @@ def main():
     ap.add_argument("--list", type=int, default=25)
     args = ap.parse_args()
 
-    from rayforce_spark.interop import reference_eval, spawn_reference_server
+    from rayforce_spark.interop import (
+        REFERENCE_BIN, reference_eval, spawn_reference_server)
     from rayforce_spark.rayfall import Interp
     from rayforce_spark.rayfall.serde import Table
     from rayforce_spark.session import get_spark
+
+    if not os.path.exists(REFERENCE_BIN):
+        print(f"ref_diff_tables: missing {REFERENCE_BIN} (build it from the "
+              "reference checkout with scripts/build_reference.sh)",
+              file=sys.stderr)
+        sys.exit(2)
 
     import shutil
     import tempfile

@@ -50,10 +50,15 @@ GQ = {
 
 
 def ensure_binary():
+    """Build the reference binary when it is absent. The build script
+    prints one line and exits 2 when the reference checkout is missing
+    too; its status is passed on."""
     if not os.path.exists(BIN):
-        subprocess.run(["sh", os.path.join(REPO, "scripts",
-                                           "build_reference.sh")],
-                       check=True)
+        rc = subprocess.run(["sh", os.path.join(REPO, "scripts",
+                                                "build_reference.sh")]
+                            ).returncode
+        if rc:
+            sys.exit(rc)
 
 
 def ensure_csvs():

@@ -2,6 +2,8 @@
 (``(set 'employees t)``, ``(insert 'employees row)``, ``update {from:
 'employees}`` — ref core/binary.c:317, core/update.c:938)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from rayforce_spark import A, Session, insert, update
@@ -87,3 +89,145 @@ def test_host_derived_spark_defaults(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert S.host_cpus() == "3" and S._shuffle_default("3") == 3
     assert S.host_driver_mem() == "2g"
+
+
+# -- load_tables: each parquet table resolved once per SparkSession ----------
+
+def _write(path, keys):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": keys}), str(path))
+
+
+def _jobs_of(spark, fn, group):
+    """(fn's result, the Spark job ids it launched under ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "load_tables job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it before asking
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_tables_hit_returns_same_frames_without_jobs(spark, tmp_path):
+    from rayforce_spark.session import load_tables
+
+    _write(tmp_path / "orders.parquet", [1, 2, 3])
+    _write(tmp_path / "region.parquet", [7])
+    names = ["orders", "region"]
+    first, miss_jobs = _jobs_of(
+        spark, lambda: load_tables(spark, str(tmp_path), names), "lt-miss")
+    again, hit_jobs = _jobs_of(
+        spark, lambda: load_tables(spark, str(tmp_path), names), "lt-hit")
+    assert miss_jobs, "schema inference should run a job on a miss"
+    assert hit_jobs == []
+    assert all(again[t] is first[t] for t in names)
+    # a relative spelling of the same directory is the same table
+    rel = os.path.relpath(tmp_path)
+    assert load_tables(spark, rel, ["orders"])["orders"] is first["orders"]
+
+
+def test_load_tables_rewritten_file_reresolves(spark, tmp_path):
+    from rayforce_spark.session import load_tables
+
+    _write(tmp_path / "orders.parquet", [1, 2, 3])
+    old = load_tables(spark, str(tmp_path), ["orders"])["orders"]
+    assert sorted(r.k for r in old.collect()) == [1, 2, 3]
+    _write(tmp_path / "orders.parquet", [10, 20, 30, 40, 50])
+    new = load_tables(spark, str(tmp_path), ["orders"])["orders"]
+    assert new is not old
+    assert sorted(r.k for r in new.collect()) == [10, 20, 30, 40, 50]
+
+
+def test_load_tables_directory_table_part_added(spark, tmp_path):
+    from rayforce_spark.session import load_tables
+
+    d = tmp_path / "lineitem.parquet"
+    d.mkdir()
+    _write(d / "part-00000.parquet", [1, 2])
+    first = load_tables(spark, str(tmp_path), ["lineitem"])["lineitem"]
+    assert first.count() == 2
+    # hidden and underscore files are not data files: no re-resolve
+    (d / "_SUCCESS").write_bytes(b"")
+    (d / ".staging").write_bytes(b"")
+    assert load_tables(spark, str(tmp_path), ["lineitem"])["lineitem"] is first
+    _write(d / "part-00001.parquet", [3, 4, 5])
+    grown = load_tables(spark, str(tmp_path), ["lineitem"])["lineitem"]
+    assert grown is not first
+    assert sorted(r.k for r in grown.collect()) == [1, 2, 3, 4, 5]
+
+
+def test_load_tables_deleted_table_drops_out(spark, tmp_path):
+    from rayforce_spark.session import load_tables
+
+    _write(tmp_path / "orders.parquet", [1])
+    _write(tmp_path / "region.parquet", [2])
+    assert set(load_tables(spark, str(tmp_path), ["orders", "region"])) == {
+        "orders", "region"}
+    os.remove(tmp_path / "orders.parquet")
+    assert set(load_tables(spark, str(tmp_path), ["orders", "region"])) == {
+        "region"}
+    # a removed directory's frames leave the catalog on the next call,
+    # whatever that call asks for
+    other = tmp_path / "other"
+    other.mkdir()
+    _write(other / "orders.parquet", [3])
+    load_tables(spark, str(other), ["orders"])
+    os.remove(other / "orders.parquet")
+    other.rmdir()
+    load_tables(spark, str(tmp_path), ["region"])
+    assert str(other / "orders.parquet") not in spark._rayforce_resolved
+    # a table written back at the path is resolved afresh
+    _write(tmp_path / "orders.parquet", [4, 5])
+    back = load_tables(spark, str(tmp_path), ["orders"])["orders"]
+    assert sorted(r.k for r in back.collect()) == [4, 5]
+
+
+def test_load_tables_new_session_gets_its_own_frames(spark, tmp_path):
+    import gc
+    import weakref
+
+    from rayforce_spark.session import load_tables
+
+    _write(tmp_path / "orders.parquet", [1, 2])
+    mine = load_tables(spark, str(tmp_path), ["orders"])["orders"]
+    other = spark.newSession()
+    theirs = load_tables(other, str(tmp_path), ["orders"])["orders"]
+    assert theirs.sparkSession is other and mine.sparkSession is spark
+    assert load_tables(spark, str(tmp_path), ["orders"])["orders"] is mine
+    # the catalog does not keep a dropped session alive (pyspark itself
+    # pins the newest session through its RDD.toDF patch: make another)
+    gone = weakref.ref(other)
+    del other, theirs
+    spark.newSession()
+    gc.collect()
+    assert gone() is None
+
+
+def test_load_tables_pins_confs_on_every_call(spark, tmp_path):
+    """An externally built session (own SQL conf) gets the runtime pins
+    on a hit as well as on the miss."""
+    from rayforce_spark.session import load_tables
+
+    _write(tmp_path / "orders.parquet", [1])
+    ext = spark.newSession()
+    pins = {
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    }
+    unpinned = dict.fromkeys(pins, "false")
+    unpinned["spark.sql.session.timeZone"] = "America/New_York"
+    first = None
+    for _ in range(2):
+        for k, v in unpinned.items():
+            ext.conf.set(k, v)
+        got = load_tables(ext, str(tmp_path), ["orders"])["orders"]
+        assert {k: ext.conf.get(k) for k in pins} == pins
+        assert first is None or got is first
+        first = got
