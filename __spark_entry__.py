@@ -930,8 +930,9 @@ def q_dedup_minhash(spark, sf):
     The PRODUCTION tuning (bands=16 — 4-row bands, the ~20x-smaller
     candidate volume bench.py measures) runs in the same job as a recall
     gate: measured 25/25 (sf0.01) and 256/256 (sf0.1) exact pairs
-    recovered; the result is released only at >= 90%, so a recall
-    regression flips this driver row red."""
+    recovered with the expression-fold signature; the result is
+    released only at >= 90%, so a recall regression flips this driver
+    row red."""
     from rayforce_spark.datapipe import minhash_lsh_pairs
     from rayforce_spark.datapipe.dedup import fanout, with_shingle_hashes
 
@@ -940,13 +941,10 @@ def q_dedup_minhash(spark, sf):
     # exact and production runs each shingled the corpus twice
     # (signature + verify side), 4 passes total; the shared lazy
     # localCheckpoint shingles once and every consumer reads the
-    # materialized 8-byte hash arrays locally (no exchange — the
-    # reuse_shingles repartition trade does not apply). Pair values are
-    # identical: with_shingle_hashes is deterministic, so sharing vs
-    # recomputing cannot change any Jaccard. Impl coverage note: the
-    # expr-vs-numpy same-pairs pin lives in pytest
-    # (test_minhash_numpy_signature_same_pairs); this gate still runs
-    # sig_impl= both ways end-to-end, unchanged.
+    # materialized 8-byte hash arrays locally (no exchange). Pair values
+    # are identical: with_shingle_hashes is deterministic, so sharing vs
+    # recomputing cannot change any Jaccard. Both legs run the one
+    # signature family, the expression fold.
     sh = (
         with_shingle_hashes(
             fanout(d.select(F.col("doc_id").alias("__id"),
@@ -962,7 +960,7 @@ def q_dedup_minhash(spark, sf):
     ).withColumn("jaccard", F.round("jaccard", 6))
     prod = minhash_lsh_pairs(
         d, "text", "doc_id", num_perm=64, bands=16, shingle_k=3,
-        threshold=0.5, sig_impl="numpy", shingles=sh,
+        threshold=0.5, shingles=sh,
     )
     return _recall_gate(exact, prod, ["id_a", "id_b"], 90)
 
@@ -972,12 +970,11 @@ def q_dedup_minhash_bench(spark, sf):
     # The oracle-gated q_dedup_minhash runs bands=num_perm for exact
     # recall, which inflates the candidate set ~20x — correct for the
     # gate, wrong for the bench (r2 regression: 2.7s -> 15.1s).
-    # sig_impl="expr" since the r11 single-expr restructure: the within-
-    # JVM A/B (scripts/minhash_ab.py) measured the expression fold at
-    # 0.93-0.96 s vs ~1.08 for the then-numpy path — the "numpy 3x
-    # faster" note that used to live here predates that restructure and
-    # measured the SIGNATURE STAGE in isolation, not the full row; the
-    # gated q_dedup_minhash still exercises both impls (r12 doc fix).
+    # The signature is the expression fold, the only family since the
+    # r11 single-expr restructure: the within-JVM A/B
+    # (scripts/minhash_ab.py) measured the full row at 0.93-0.96 s for
+    # the fold vs ~1.08 s for the Arrow/numpy family it replaced, whose
+    # "3x faster" figure measured the signature stage in isolation.
     from rayforce_spark.datapipe import minhash_lsh_pairs
 
     (d,) = _t(spark, sf, "documents")
@@ -991,14 +988,14 @@ def q_dedup_minhash_bench(spark, sf):
     # cores/2-beats-32-way sweep predates the slim verify restructure
     # and no longer reproduces.
     d = d.select("doc_id", "text")
-    # reuse_shingles=False since the r7 verify restructure: the slim-pair
-    # verify no longer shuffles shingle arrays, so the reuse exchange
-    # (which DOES move every doc's array once) now costs more than the
-    # second scan-stage recompute it saves — measured min-of-6 x2 runs:
-    # noreuse 0.55-0.71 s vs reuse 0.89-1.07 s at sf0.1
+    # shingles are recomputed on the verify side rather than shared
+    # through an exchange: since the r7 slim-pair verify, moving every
+    # doc's array costs more than the scan-stage recompute — measured
+    # min-of-6 x2 runs: recompute 0.55-0.71 s vs shared 0.89-1.07 s at
+    # sf0.1
     return minhash_lsh_pairs(
         d, "text", "doc_id", num_perm=64, bands=16, shingle_k=3,
-        threshold=0.5, sig_impl="expr", reuse_shingles=False,
+        threshold=0.5,
     )
 
 
@@ -1039,8 +1036,9 @@ def q_dedup_embedding(spark, sf):
     # impl="block" (r9): the cogrouped block scorer — BIT-equal to the
     # expression path (pinned over every all-pairs cosine by
     # test_embedding_pandas_impl_bit_equal), and never materializes the
-    # n² pair table (the r6 "pandas" impl shipped ~2 GB of pair vectors
-    # through Arrow at sf0.1 for a 920-row result; exact leg 17 s -> ~3 s)
+    # n² pair table (the r6 per-pair Arrow scorer shipped ~2 GB of pair
+    # vectors through Arrow at sf0.1 for a 920-row result; exact leg
+    # 17 s -> ~3 s)
     exact = embedding_dup_pairs(
         e, "embedding", "vec_id", threshold=0.4, impl="block"
     ).withColumn("cos", F.round("cos", 6))
@@ -1115,12 +1113,12 @@ def q_text_quality(spark, sf):
     Rae et al. 2021 arXiv:2112.11446 §A1.1 adapted to word-occurrence
     fractions): token count, fingerprint, length, language id, quality
     score, most-common-2-gram fraction, duplicate-3-gram fraction, and
-    the combined repetition gate. The repetition stats run the Arrow
-    pandas twin (r8: one tokenization pass per doc, integer stats only
-    — division/round stay JVM; the zero-shuffle expression fold is
-    pinned bit-equal by test_repetition_pandas_impl_bit_equal and was
-    the r7 gate's slowest row at 71 s/sf0.1); everything else stays
-    JVM-expression columns over one scan."""
+    the combined repetition gate. The repetition stats run in an Arrow
+    batch (r8: one tokenization pass per doc, integer stats only
+    — division/round stay JVM; pinned bit-equal to the zero-shuffle
+    expression fold by test_repetition_pandas_impl_bit_equal, which
+    was the r7 gate's slowest row at 71 s/sf0.1); everything else
+    stays JVM-expression columns over one scan."""
     from rayforce_spark.datapipe import (
         doc_fingerprint,
         language_id,
@@ -1130,7 +1128,7 @@ def q_text_quality(spark, sf):
     )
 
     (d,) = _t(spark, sf, "documents")
-    rep = repetition_metrics(F.col("text"), impl="pandas")
+    rep = repetition_metrics(F.col("text"))
     return d.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tok"),

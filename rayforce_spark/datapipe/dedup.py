@@ -28,24 +28,6 @@ def _tokens(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def _require_arrow(feature: str, fallback: str) -> None:
-    """Fail fast DRIVER-side when an Arrow-twin default can't run:
-    pandas+pyarrow are hard runtime dependencies of every entry point
-    whose default impl is a pandas_udf twin (r10 verdict #3) — without
-    this check a missing import surfaces as an opaque worker-side stack
-    trace mid-job instead of a one-line error naming the
-    zero-dependency fallback."""
-    try:
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            f"{feature}: the default Arrow implementation needs pandas "
-            f"and pyarrow on the driver and every executor (missing: "
-            f"{e.name}); pass {fallback} for the zero-dependency JVM "
-            "expression path") from e
-
-
 def fanout(df: DataFrame) -> DataFrame:
     """Ensure scan-stage parallelism >= the cluster's: shingling, token
     explosion and Arrow-UDF vector math all parallelize with INPUT
@@ -185,59 +167,11 @@ def minhash_signature_from_hashes(base_hashes: Column, *, num_perm: int) -> Colu
     )
 
 
-def minhash_signature_numpy(num_perm: int):
-    """Arrow-vectorized MinHash signature: a pandas_udf computing
-    ``sig[i] = min over shingle hashes of mix_i(h)`` with one numpy
-    broadcast per row batch (universal-hash family ``(a_i*h + b_i)``
-    xor-shifted; odd multipliers, fixed seed — deterministic across runs
-    and executors).
-
-    3x faster than the expression fold at sf0.1 (signature stage 1.67s ->
-    0.57s, 5k docs x ~200 shingles x 64 perms): the fold allocates a
-    64-wide array per shingle, the numpy form is one (64, |S|) integer
-    broadcast per doc in an Arrow batch. Values differ from the xxhash64
-    expression family, but MinHash consumers only need a uniform hash
-    family — the banded-LSH recall bound and the bands=num_perm
-    exact-recall argument hold identically, and the verify stage outputs
-    exact Jaccard either way."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rng = np.random.default_rng(7)
-    a = rng.integers(1, 2**63, num_perm, dtype=np.int64).astype(np.uint64) | 1
-    b = rng.integers(0, 2**63, num_perm, dtype=np.int64).astype(np.uint64)
-    A, B = a[:, None], b[:, None]
-
-    def _sig(bh):
-        out = []
-        for lst in bh:
-            if lst is None or len(lst) == 0:
-                out.append([None] * num_perm)
-                continue
-            s = np.asarray(lst, dtype=np.int64).astype(np.uint64)
-            x = A * s[None, :] + B  # wraps mod 2^64
-            x ^= x >> 33
-            out.append(x.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    # explicit annotation objects: the module's `from __future__ import
-    # annotations` would leave string hints that pandas_udf cannot
-    # resolve without module-global pandas
-    _sig.__annotations__ = {"bh": pd.Series, "return": pd.Series}
-    return pandas_udf(_sig, "array<long>")
-
-
-def _minhash_sig(shingled: DataFrame, *, num_perm: int,
-                 sig_impl: str = "expr") -> DataFrame:
+def _minhash_sig(shingled: DataFrame, *, num_perm: int) -> DataFrame:
     """(__id, __sig) signatures over a (__id, __bh) shingle-hash stream
     — the shared signature stage for the pair join and the persisted
     index (identical family, so their buckets are interchangeable)."""
-    if sig_impl == "numpy":
-        sig_col = minhash_signature_numpy(num_perm)(F.col("__bh"))
-    else:
-        sig_col = minhash_signature_from_hashes(F.col("__bh"),
-                                                num_perm=num_perm)
+    sig_col = minhash_signature_from_hashes(F.col("__bh"), num_perm=num_perm)
     # extra columns (e.g. the guard's __gkey collapse key) ride along;
     # the index path passes exactly (__id, __bh), so its output schema
     # — and the persisted bucket-leg format downstream — is unchanged
@@ -332,7 +266,7 @@ def _dense_decision(b: DataFrame, keys: list[str], gkey: str,
       7-bit chunk keys make hot buckets NORMAL, measured 127M predicted
       pairs on the ordinary sf0.1 corpus): keep the sparse join but
       repartition its input to cluster width, AQE-immune — the r11
-      manual cand_parallelism fix, now automatic. Collapse would only
+      manual width pin, now automatic. Collapse would only
       add overhead here (measured: simhash sf0.1 auto-collapse 3.1 s
       vs sparse 1.6 s, because reps ≈ docs).
 
@@ -487,7 +421,7 @@ def _minhash_verify(cand: DataFrame, texts: DataFrame,
 
 def _minhash_pairs_dense(df: DataFrame, text_col: str, id_col: str, *,
                          num_perm: int, bands: int, shingle_k: int,
-                         threshold: float, sig_impl: str,
+                         threshold: float,
                          shingles: DataFrame | None = None) -> DataFrame:
     """Rep-collapsed MinHash pair plan for duplicate-DENSE corpora.
 
@@ -533,7 +467,7 @@ def _minhash_pairs_dense(df: DataFrame, text_col: str, id_col: str, *,
     # stream against the collapsed id set; feeds both the signature
     # subtree and the verify texts
     rep_sh = keyed.join(rep_ids, "__id", "left_semi").select("__id", "__bh")
-    sig = _minhash_sig(rep_sh, num_perm=num_perm, sig_impl=sig_impl)
+    sig = _minhash_sig(rep_sh, num_perm=num_perm)
     banded = _band_buckets(sig, num_perm=num_perm, bands=bands)
     b = (banded.localCheckpoint(eager=False)
          .repartition(p, "__bucket"))
@@ -562,9 +496,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     threshold: float = 0.7,
-    sig_impl: str = "expr",
-    reuse_shingles: bool = False,
-    cand_parallelism: int | None = None,
     guard: str = "auto",
     dense_threshold: int | None = None,
     shingles: DataFrame | None = None,
@@ -578,25 +509,13 @@ def minhash_lsh_pairs(
     exact Jaccard on the two shingle sets (array intersect/union on the
     joined pair only).
 
-    ``sig_impl``: "expr" (default) keeps the signature a pure JVM
-    expression fold — zero Python in the plan; "numpy" routes it through
-    :func:`minhash_signature_numpy` (Arrow batches, 3x faster stage,
-    measured) — the recall bounds are family-independent, so both
-    produce the same verified pair set at bands=num_perm.
-
-    ``reuse_shingles``: the signature path and the verify path both need
-    the shingle-hash arrays. Default (False) computes them twice — two
-    scan-stage passes, NO array shuffle, the right trade at corpus scale
-    where recompute is cheaper than moving every document's shingle set
-    over the network. True inserts one repartition exchange after the
-    shingle pass so both consumers hang off the SAME subtree and Spark
-    plans a ReusedExchange — shingles are computed once and shuffled
-    once. NB: since the slim-pair verify restructure (which stopped
-    shuffling shingle arrays on the verify side) the reuse exchange is a
-    net LOSS at bench scale (sf0.1: reuse 0.89-1.07 s vs noreuse
-    0.55-0.71 s min-of-6) — it moves every document's array to save a
-    scan-stage recompute that is cheaper than the move. Kept for corpora
-    where shingling dominates (very long documents / large k).
+    The signature is a pure JVM expression fold (zero Python in the
+    plan; see minhash_signature_from_hashes). The shingle-hash arrays
+    that both the signature and the verify side need are computed twice,
+    in two scan-stage passes with NO array shuffle: at corpus scale that
+    recompute is cheaper than moving every document's shingle set over
+    the network (a shared-exchange variant measured 0.89-1.07 s against
+    0.55-0.71 s min-of-6 at sf0.1).
 
     ``guard`` (r12, default "auto"): the dense-corpus emission guard.
     After the banded rows are checkpointed, one cheap count-per-bucket
@@ -607,8 +526,8 @@ def minhash_lsh_pairs(
     corpora; identical output, no quadratic duplicate mass in the LSH
     join) or, when collapse wouldn't halve the emission (near-dup-dense
     — distinct sets sharing buckets), pins the sparse join's width to
-    cluster parallelism, AQE-immune (the r11 manual cand_parallelism
-    fix, now automatic). "off" restores the pure-lazy r11 plan (no
+    cluster parallelism, AQE-immune (the r11 manual width pin, now
+    automatic). "off" restores the pure-lazy r11 plan (no
     stats job — the returned DataFrame triggers no work until acted
     on). The guard decision changes only the PLAN, never the result,
     so its data-dependence is safe. On a corpus dense enough to
@@ -617,25 +536,18 @@ def minhash_lsh_pairs(
     pass, dwarfed by the 20+ min single-task crawl it avoids
     (measured, 10x template corpus).
 
-    ``cand_parallelism``: explicit AQE-immune width for the candidate
-    self-join — pass the cluster's parallelism to pin the sparse plan's
-    join width yourself. Pre-dates the auto guard; when set, the stats
-    job is skipped and the sparse plan (pinned) always runs.
-
     ``shingles`` (r13): a pre-computed ``(__id, __bh)`` shingle-hash
     frame (the with_shingle_hashes output over the same corpus/k) to
     use for BOTH the signature and verify sides instead of shingling
     here. For a single pipeline the default recompute stays the right
-    trade (see ``reuse_shingles``), but when a caller runs TWO
+    trade (see above), but when a caller runs TWO
     pipelines over one corpus (q_dedup_minhash's exact-recall gate vs
     production tuning), a caller-side lazy localCheckpoint of this
     frame shingles the corpus once for all four consumers instead of
     four times — with no shuffle (checkpoint partitions are read
-    locally, unlike the reuse_shingles exchange). ``reuse_shingles``
-    is moot and ignored when this is set."""
+    locally)."""
     if shingles is not None:
         shingled_in = shingles.select("__id", "__bh")
-        reuse_shingles = False
     else:
         df = fanout(df)
         shingled_in = with_shingle_hashes(
@@ -643,7 +555,7 @@ def minhash_lsh_pairs(
                       F.col(text_col).alias("__text")),
             "__text", shingle_k, "__bh",
         ).select("__id", "__bh")
-    if guard == "auto" and not cand_parallelism:
+    if guard == "auto":
         # the guard's collapse key (hash of the sorted shingle SET)
         # rides through the signature/banding projections so one stats
         # aggregate over the checkpointed rows can split duplicate mass
@@ -651,10 +563,7 @@ def minhash_lsh_pairs(
         shingled_in = shingled_in.select(
             "__id", F.xxhash64(F.array_sort("__bh")).alias("__gkey"),
             "__bh")
-    if reuse_shingles:
-        shingled_in = shingled_in.repartition(
-            df.sparkSession.sparkContext.defaultParallelism // 2 or 1)
-    sig = _minhash_sig(shingled_in, num_perm=num_perm, sig_impl=sig_impl)
+    sig = _minhash_sig(shingled_in, num_perm=num_perm)
     banded = _band_buckets(sig, num_perm=num_perm, bands=bands)
     # within-bucket pairs via a bucket SELF-JOIN (r11 — the r8->r9
     # simhash lesson applied to minhash): the former
@@ -670,20 +579,8 @@ def minhash_lsh_pairs(
     # so the signature subtree isn't computed per join side, and pairs
     # STREAM through join tasks instead of materializing per-bucket
     # arrays.
-    #
-    # ``cand_parallelism`` (duplicate-DENSE corpora): AQE sizes the
-    # join's exchanges from banded's tiny map bytes and cannot see the
-    # quadratic emission, so on a corpus where every doc has ~100 near-
-    # identical copies the join runs on 1-2 coalesced partitions
-    # (measured: the 10x template corpus crawled 20+ min; with the pin
-    # at 32 the same run takes 3.8 s end-to-end for 250,600 verified
-    # pairs). The pin costs an extra ~0.2-0.7 s at sparse/bench scale,
-    # so it is opt-in — and on corpora THAT dense, exact-dedup first
-    # remains the documented cheaper answer.
     b = banded.localCheckpoint(eager=False)
-    if cand_parallelism:
-        b = b.repartition(int(cand_parallelism), "__bucket")
-    elif guard == "auto":
+    if guard == "auto":
         thresh = (_DENSE_GUARD_THRESHOLD if dense_threshold is None
                   else dense_threshold)
         # the stats job forces b's checkpoint materialization — work the
@@ -697,7 +594,7 @@ def minhash_lsh_pairs(
             return _minhash_pairs_dense(
                 df, text_col, id_col, num_perm=num_perm, bands=bands,
                 shingle_k=shingle_k, threshold=threshold,
-                sig_impl=sig_impl, shingles=shingles)
+                shingles=shingles)
         if decision == "pin":
             b = b.repartition(
                 df.sparkSession.sparkContext.defaultParallelism,
@@ -726,11 +623,6 @@ def minhash_lsh_pairs(
         # recompute and no exchange
         texts = shingles.select(F.col("__id").alias("__tid"),
                                 F.col("__bh").alias("__vsh"))
-    elif reuse_shingles:
-        # byte-identical subtree to the signature path's input, ending in
-        # the same exchange -> ReusedExchange, shingles computed once
-        texts = shingled_in.select(F.col("__id").alias("__tid"),
-                                   F.col("__bh").alias("__vsh"))
     else:
         texts = with_shingle_hashes(
             df.select(F.col(id_col).alias("__tid"),
@@ -1097,20 +989,21 @@ def _jaccard_prefix_filtered(toks: DataFrame, threshold: float,
 
 
 def simhash_fingerprint_numpy(bits: int):
-    """Arrow twin of the 63-aggregate SimHash fingerprint: a pandas_udf
-    mapping a doc's distinct-token-hash array straight to its
-    fingerprint long — per row, bit b is set iff strictly more than
-    half the token hashes carry bit b (the exact condition of the
-    expression path's ±1 conditional sum: sum > 0 ⟺ 2·count_ones > n).
-    BIT-EQUAL to the grouped-aggregate plan by construction — the token
-    hashes come from the same JVM expression and the per-bit counts are
-    exact integer math — pinned by test_simhash_fp_numpy_bit_equal.
+    """The SimHash majority vote as a pandas_udf mapping a doc's
+    distinct-token-hash array straight to its fingerprint long — per
+    row, bit b is set iff strictly more than half the token hashes carry
+    bit b (the exact condition of the grouped plan's ±1 conditional
+    sum: sum > 0 ⟺ 2·count_ones > n). BIT-EQUAL to that grouped-
+    aggregate plan (:func:`_simhash_grouped`) by construction — the
+    token hashes come from the same JVM expression and the per-bit
+    counts are exact integer math — pinned by
+    test_simhash_fp_numpy_bit_equal.
 
-    Why it exists: the expression fingerprint needs an explode + a
-    63-conditional-sum groupBy whose plan build/codegen costs ~20 s
-    FIXED per call regardless of data (r10 index_bench: simhash probe
-    23.6 s and extend 17-33 s flat at 1x and 10x corpus — plan cost,
-    not data cost). The numpy twin is one per-row (k × bits) bit-count
+    Why it is the only production path: the grouped fingerprint needs
+    an explode + a 63-conditional-sum groupBy whose plan build/codegen
+    costs ~20 s FIXED per call regardless of data (r10 index_bench:
+    simhash probe 23.6 s and extend 17-33 s flat at 1x and 10x corpus —
+    plan cost, not data cost). This is one per-row (k × bits) bit-count
     per Arrow batch: no explode, no shuffle, no 63-aggregate plan."""
     import numpy as np
     import pandas as pd
@@ -1135,20 +1028,26 @@ def simhash_fingerprint_numpy(bits: int):
     return pandas_udf(_fp, "long")
 
 
+def _simhash_token_sql(token_hash: str) -> str:
+    """SQL text hashing one token ``t`` to a long, per token family."""
+    if token_hash == "xxhash64":
+        return "xxhash64(t)"
+    if token_hash == "md5":
+        return "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
+    raise ValueError(f"unknown token_hash: {token_hash}")
+
+
 def simhash(df: DataFrame, text_col: str, id_col: str, *, bits: int = 63,
-            token_hash: str = "xxhash64",
-            fp_impl: str = "numpy") -> DataFrame:
+            token_hash: str = "xxhash64") -> DataFrame:
     """63-bit SimHash fingerprint per document (bit 63 omitted to stay in a
     signed long). Returns (id_col, simhash:long).
 
-    ``fp_impl="numpy"`` (default): token hashes are still a pure JVM
-    expression (one transform over the distinct-token array), but the
-    per-bit majority vote happens in an Arrow batch — no explode, no
-    grouped aggregation, and none of the 63-aggregate plan's ~20 s
-    fixed build cost (see :func:`simhash_fingerprint_numpy`; bit-equal,
-    pinned). ``"expr"`` keeps the pure-JVM plan: tokens explode once;
-    each bit is a conditional ±1 sum over token hashes — one grouped
-    aggregation, zero Python (authoritative, zero-dependency).
+    Token hashes are a pure JVM expression (one transform over the
+    distinct-token array); the per-bit majority vote happens in an Arrow
+    batch (:func:`simhash_fingerprint_numpy`) — no explode, no grouped
+    aggregation, and none of the 63-aggregate plan's ~20 s fixed build
+    cost. Bit-equal to that grouped plan (:func:`_simhash_grouped`,
+    pinned by test_simhash_fp_numpy_bit_equal).
 
     token_hash: "xxhash64" (default, fastest) or "md5" — a 60-bit hash
     derived from the first 15 hex chars of md5, reproducible in plain SQL
@@ -1157,45 +1056,40 @@ def simhash(df: DataFrame, text_col: str, id_col: str, *, bits: int = 63,
     constant 0, which costs nothing for recall (hamming distance ignores
     always-equal bits).
 
-    Ids must be unique (the standing dedup contract): the expr path
-    groups by id — duplicate-id rows would merge token sets — while the
-    numpy path is per-row."""
-    if token_hash == "xxhash64":
-        h_expr = F.xxhash64("tok")
-        h_sql = "xxhash64(t)"
-    elif token_hash == "md5":
-        h_expr = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-        h_sql = "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
-    else:
-        raise ValueError(f"unknown token_hash: {token_hash}")
-    if fp_impl == "numpy":
-        _require_arrow("simhash fingerprints", "fp_impl='expr'")
-        qcol = text_col.replace("`", "``")
-        arr = F.expr(
-            f"transform(array_distinct(split(trim(lower(`{qcol}`)),"
-            f" '\\\\s+')), t -> {h_sql})")
-        # the expr path's explode drops docs with a null/empty token
-        # array (null text); size() is -1 for null — same drop here
-        return (
-            fanout(df)
-            .select(F.col(id_col).alias(id_col), arr.alias("__th"))
-            .filter(F.size("__th") > 0)
-            .select(id_col,
-                    simhash_fingerprint_numpy(bits)(F.col("__th"))
-                    .alias("simhash"))
-        )
-    if fp_impl != "expr":
-        raise ValueError(f"unknown fp_impl: {fp_impl!r} "
-                         "(expected 'numpy' or 'expr')")
+    Docs with null text have no tokens and are dropped. The fingerprint
+    is per row, so ids should be unique (the standing dedup contract)."""
+    h_sql = _simhash_token_sql(token_hash)
+    qcol = text_col.replace("`", "``")
+    arr = F.expr(
+        f"transform(array_distinct(split(trim(lower(`{qcol}`)),"
+        f" '\\\\s+')), t -> {h_sql})")
+    # size() is -1 for a null token array (null text)
+    return (
+        fanout(df)
+        .select(F.col(id_col).alias(id_col), arr.alias("__th"))
+        .filter(F.size("__th") > 0)
+        .select(id_col,
+                simhash_fingerprint_numpy(bits)(F.col("__th"))
+                .alias("simhash"))
+    )
+
+
+def _simhash_grouped(df: DataFrame, text_col: str, id_col: str, *,
+                     bits: int = 63, token_hash: str = "xxhash64"
+                     ) -> DataFrame:
+    """The pure-JVM grouped-aggregate SimHash: tokens explode once; each
+    bit is a conditional ±1 sum over token hashes in one grouped
+    aggregation. Kept as the reference that :func:`simhash` is pinned
+    bit-equal against (test_simhash_fp_numpy_bit_equal); ids must be
+    unique, as duplicate-id rows would merge token sets."""
     toks = fanout(df).select(
         F.col(id_col).alias(id_col),
-        F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("tok"),
-    ).withColumn("h", h_expr)
+        F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("t"),
+    ).withColumn("h", F.expr(_simhash_token_sql(token_hash)))
     # parsed expr strings, not composed Column objects: the 63
     # conditional-sum aggregates plus the 63-term fingerprint sum cost
     # ~2.5 s of py4j round-trips per call the Column way (measured at
-    # sf0.1 — half the row's driver-side plan-build); 64 parses of the
-    # same text are one hop each. Plans and values are identical.
+    # sf0.1); 64 parses of the same text are one hop each
     bit_sums = [
         F.expr(f"sum(case when (h & {1 << b}) != 0 then 1 else -1 end)"
                f" as b{b}")
@@ -1316,8 +1210,7 @@ def _simhash_pairs_dense(fp: DataFrame, *, bands: int,
 
 def simhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
                       *, max_hamming: int = 3, bands: int | None = None,
-                      token_hash: str = "xxhash64",
-                      fp_impl: str = "numpy", guard: str = "auto",
+                      token_hash: str = "xxhash64", guard: str = "auto",
                       dense_threshold: int | None = None) -> DataFrame:
     """Near-dup pairs with SimHash distance <= max_hamming, found by the
     pigeonhole trick: split the fingerprint into ``bands`` chunks — any
@@ -1343,8 +1236,7 @@ def simhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     # materializes it once so neither self-join side (nor an AQE
     # broadcast of one) re-runs the 63-bit aggregation over the token
     # explosion
-    fp = (simhash(df, text_col, id_col, token_hash=token_hash,
-                  fp_impl=fp_impl)
+    fp = (simhash(df, text_col, id_col, token_hash=token_hash)
           .withColumnRenamed(id_col, "__id")
           .localCheckpoint(eager=False))
     banded = _simhash_banded(fp, bands)
@@ -1440,52 +1332,6 @@ def cosine_from_units(dot_u: Column, na_u: Column, nb_u: Column) -> Column:
     )
 
 
-def _cosine_units_pandas():
-    """Arrow-vectorized twin of the fixed-point cosine: BIT-IDENTICAL
-    values to the expression path (pinned by
-    test_embedding_pandas_impl_bit_equal over every all-pairs cosine),
-    ~10x faster per pair — Spark evaluates higher-order array lambdas
-    interpreted per element, numpy does the same integer math in C.
-
-    Rounding equivalence: Spark's round(double) is BigDecimal HALF_UP on
-    the SHORTEST decimal repr; numpy emulates sign*floor(abs+0.5) on the
-    exact binary value. These can only disagree if a value and its
-    shortest repr fall on opposite sides of a .5 boundary — impossible:
-    k+0.5 is itself exactly representable at this magnitude (products
-    <= ~1e9 << 2^52), so a double d != k.5 and its shortest repr are
-    strictly on the same side, and d == k.5 ties round away from zero
-    in both (HALF_UP / the floor(+0.5) emulation / DuckDB's
-    half-away-from-zero in the oracle)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # NB explicit SCALAR evalType: this module uses `from __future__
-    # import annotations`, which stringifies type hints beyond
-    # pandas_udf's inference
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def _cos(va, vb):  # pd.Series of array -> pd.Series of double
-        import numpy as np
-
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in va])
-        B = np.stack([np.asarray(v, dtype=np.float64) for v in vb])
-
-        def units(m):
-            p = m * _COS_UNIT
-            return (np.sign(p) * np.floor(np.abs(p) + 0.5)).astype(
-                np.int64)
-
-        dot = units(A * B).sum(axis=1) / _COS_UNIT
-        na = units(A * A).sum(axis=1) / _COS_UNIT
-        nb = units(B * B).sum(axis=1) / _COS_UNIT
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = dot / np.sqrt(na * nb)
-        return pd.Series(np.where(np.isfinite(out), out, np.nan))
-
-    return _cos
-
-
 def embedding_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
                         *, threshold: float = 0.95,
                         impl: str = "expr",
@@ -1495,11 +1341,9 @@ def embedding_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
     verifier/oracle, or behind an LSH candidate filter (see
     similarity.knn_lsh) at corpus scale. Returns (id_a, id_b, cos).
 
-    ``impl="pandas"`` scores pairs with the Arrow-vectorized twin
-    (bit-identical values — see :func:`_cosine_units_pandas`; sf0.01
-    all-pairs 21 s -> ~4 s, the gate's heaviest row): the JVM
-    expression fold pays interpreted-lambda cost per element, which
-    dominates at n² pairs.
+    ``impl="expr"`` (default) scores every pair with the JVM
+    fixed-point fold (cosine_from_units) — zero Python, the reference
+    the block scorer is pinned bit-equal against.
 
     ``impl="block"`` (r9, fastest): never materializes the pair table
     at all — a blocked tagged-union scorer (see
@@ -1509,31 +1353,21 @@ def embedding_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
     block × everything as numpy outer products with the SAME
     per-product fixed-point rounding (bit-equal by construction,
     pinned by test_embedding_pandas_impl_bit_equal), and only rows
-    passing the threshold leave Python. The ``pandas`` shape shipped
-    every pair's two vectors through Arrow — 2M pairs × 128 doubles =
-    ~2 GB at sf0.1 for a 920-row result; this ships n×nblocks input
-    vectors and the result (sf0.1 gate row 32.1 s -> 22.9 s)."""
+    passing the threshold leave Python. A per-pair Arrow scorer it
+    replaced shipped every pair's two vectors through Arrow — 2M pairs
+    × 128 doubles = ~2 GB at sf0.1 for a 920-row result; this ships
+    n×nblocks input vectors and the result (sf0.1 gate row 32.1 s ->
+    22.9 s)."""
+    if impl not in ("expr", "block"):
+        raise ValueError(f"unknown impl: {impl!r} (expected 'expr' or "
+                         "'block')")
     if impl == "block":
         return _embedding_pairs_block(fanout(df), vec_col, id_col,
                                       threshold=threshold,
                                       nblocks=nblocks)
     v = fanout(df).select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    )
-    if impl == "pandas":
-        cos_fn = _cosine_units_pandas()
-        pairs = (
-            v.alias("a")
-            .join(F.broadcast(v.alias("b")),
-                  F.col("a.__id") < F.col("b.__id"))
-            .select(
-                F.col("a.__id").alias("id_a"),
-                F.col("b.__id").alias("id_b"),
-                cos_fn(F.col("a.__v"), F.col("b.__v")).alias("cos"),
-            )
-        )
-        return pairs.filter(F.col("cos") >= threshold)
-    v = v.withColumn("__nu", norm_units(F.col("__v")))  # once per vector
+    ).withColumn("__nu", norm_units(F.col("__v")))  # once per vector
     pairs = (
         v.alias("a")
         .join(F.broadcast(v.alias("b")), F.col("a.__id") < F.col("b.__id"))
@@ -1577,7 +1411,18 @@ def score_units_block(A, B, ida, idb, thr):
     asserted in code. Rows BELOW the floor (quantization error / norm
     is unbounded there) and pairs with a non-finite preselect value
     skip the shortcut and are scored exactly, so no input shape can
-    lose a pair."""
+    lose a pair.
+
+    Rounding equivalence with :func:`_prod_units`: Spark's
+    round(double) is BigDecimal HALF_UP on the SHORTEST decimal repr;
+    ``units`` emulates sign*floor(abs+0.5) on the exact binary value.
+    These can only disagree if a value and its shortest repr fall on
+    opposite sides of a .5 boundary — impossible: k+0.5 is itself
+    exactly representable at this magnitude (products <= ~1e9 << 2^52),
+    so a double d != k.5 and its shortest repr are strictly on the same
+    side, and d == k.5 ties round away from zero in both (HALF_UP / the
+    floor(+0.5) emulation / DuckDB's half-away-from-zero in the
+    oracle)."""
     import numpy as np
 
     def units(m):
@@ -1631,9 +1476,9 @@ def _embedding_pairs_block(df: DataFrame, vec_col: str, id_col: str,
     Rows hash into blocks (__side=0); the full table replicates to
     every block key (__side=1); ONE tagged union groups by block and
     each task computes its block's slice of the n² cosine matrix in
-    numpy — per-product rounding identical to :func:`_prod_units` /
-    :func:`_cosine_units_pandas`, so values are bit-equal across all
-    three impls. Inner chunking bounds the outer-product temp
+    numpy — per-product rounding identical to :func:`_prod_units`
+    (see score_units_block), so values are bit-equal to the ``expr``
+    fold. Inner chunking bounds the outer-product temp
     (chunk × n × dim) regardless of block size.
 
     Deliberately a tagged UNION + groupBy.applyInPandas rather than
@@ -2120,14 +1965,25 @@ def _minhash_legs(df: DataFrame, text_col: str, id_col: str, path: str,
     jobs sources) — a silent corruption of the exact-Jaccard verify, not
     an error. The lazy localCheckpoint materializes the shingled frame
     on first use and serves every later consumer from executor-local
-    blocks."""
+    blocks.
+
+    ``_meta``'s ``sig_impl`` column names the signature family; the
+    expression fold ("expr") is the only one computed. An index written
+    with another family has incompatible buckets, so it raises here,
+    before any probe, extend or ingest could silently lose recall."""
+    if p["sig_impl"] != "expr":
+        raise ValueError(
+            f"minhash index at {path} was built with sig_impl="
+            f"{p['sig_impl']!r}, but this build only computes the 'expr' "
+            "signature family: its stored buckets would not line up and "
+            "probing it would silently miss pairs. Rebuild it into a "
+            "fresh path with set_minhash_index.")
     shingled = with_shingle_hashes(
         fanout(df).select(F.col(id_col).alias("__id"),
                           F.col(text_col).alias("__t")),
         "__t", p["shingle_k"], "__bh",
     ).select("__id", "__bh").localCheckpoint(eager=False)
-    sig = _minhash_sig(shingled, num_perm=p["num_perm"],
-                       sig_impl=p["sig_impl"])
+    sig = _minhash_sig(shingled, num_perm=p["num_perm"])
     return {"shingles": shingled,
             "buckets": _band_buckets(sig, num_perm=p["num_perm"],
                                      bands=p["bands"])}
@@ -2175,8 +2031,7 @@ def _minhash_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
     return minhash_lsh_pairs(
         batch, text_col, id_col, threshold=p["threshold"],
         num_perm=p["num_perm"], bands=p["bands"],
-        shingle_k=p["shingle_k"], sig_impl=p["sig_impl"],
-        shingles=legs["shingles"])
+        shingle_k=p["shingle_k"], shingles=legs["shingles"])
 
 
 _MINHASH = _IndexFamily(
@@ -2195,13 +2050,14 @@ def _read_minhash_meta(spark, path: str) -> dict:
 
 def set_minhash_index(corpus: DataFrame, path: str, text_col: str,
                       id_col: str, *, num_perm: int = 64, bands: int = 16,
-                      shingle_k: int = 3, sig_impl: str = "expr") -> None:
+                      shingle_k: int = 3) -> None:
     """Persist a MinHash-LSH dedup INDEX — the continuous-ingestion
     twin of :func:`minhash_lsh_pairs` (same shape as
     similarity.set_ivf's train-once/probe-many layout). Writes under
     ``path``:
 
-    - ``_meta``      — the banding parameters plus the on-disk format
+    - ``_meta``      — the banding parameters, the signature family
+      (``sig_impl``, always "expr") and the on-disk format
       version (probes and extensions MUST band identically or buckets
       don't line up; they read this sidecar rather than trusting
       call-site kwargs, and raise on a format mismatch), written LAST
@@ -2216,7 +2072,7 @@ def set_minhash_index(corpus: DataFrame, path: str, text_col: str,
     no corpus shuffle; index bytes are O(corpus × bands) longs plus
     the shingle sets."""
     params = {"num_perm": num_perm, "bands": bands,
-              "shingle_k": shingle_k, "sig_impl": sig_impl}
+              "shingle_k": shingle_k, "sig_impl": "expr"}
     _build_index(_MINHASH, corpus.sparkSession, path,
                  _minhash_legs(corpus, text_col, id_col, path, params),
                  params)

@@ -84,8 +84,8 @@ def curate(
     pipeline.
 
     ``neardup_opts`` passes through to :func:`minhash_lsh_pairs`
-    (num_perm/bands/shingle_k/sig_impl) — production tunings
-    (bands < num_perm) trade candidate volume for recall there.
+    (num_perm/bands/shingle_k/guard/dense_threshold) — production
+    tunings (bands < num_perm) trade candidate volume for recall there.
     """
     out = docs
 

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rayforce_spark.datapipe.dedup import (
-    _require_arrow,
     cosine_from_units,
     dot_units,
     norm_units,
@@ -154,7 +153,9 @@ def _qname(col_name: str) -> str:
 
 def _bucket_key(vec_name: str, hyperplanes) -> F.Column:
     """Sign-bit signature of the vector column (BY NAME) against each
-    hyperplane -> long. Built as one SQL string — see _sql_arr."""
+    hyperplane -> long. Built as one SQL string — see _sql_arr. The
+    pure-JVM reference the Arrow keys (_bucket_keys_pandas) are pinned
+    bit-equal against, and the key of the streaming LSH dedup."""
     v = _qname(vec_name)
     terms = []
     for i, plane in enumerate(hyperplanes):
@@ -176,11 +177,11 @@ def _bucket_keys_pandas(dim: int, planes: int, tables: int, seed: int):
     flip a sign at a bucket boundary. Pinned by
     test_lsh_bucket_keys_pandas_bit_equal.
 
-    Why it exists: the HOF fold is interpreted row-at-a-time JVM-side
-    (no codegen), so tables x planes x dim multiply-adds per row ran
-    ~4 s single-core on a 1-split input at sf0.1; the numpy twin is two
-    matrix ops per Arrow batch and parallelizes with input splits the
-    same way.
+    Why it is the batch path: the HOF fold is interpreted
+    row-at-a-time JVM-side (no codegen), so tables x planes x dim
+    multiply-adds per row ran ~4 s single-core on a 1-split input at
+    sf0.1; this is two matrix ops per Arrow batch and parallelizes with
+    input splits the same way.
 
     Degenerate inputs follow the expr path's null story: a null vector
     or a length != dim vector keys to 0 for every table (any null in
@@ -227,29 +228,15 @@ def _bucket_keys_pandas(dim: int, planes: int, tables: int, seed: int):
 
 
 def _bucket_structs(vec_name: str, *, dim: int, planes: int, tables: int,
-                    seed: int, key_impl: str = "pandas") -> F.Column:
+                    seed: int) -> F.Column:
     """array<struct<tbl:int, key:long>> of all ``tables`` bucket keys
     for the vector column (BY NAME) — the shared bucket constructor for
-    every LSH consumer. ``key_impl="pandas"`` (default) is the Arrow
-    twin (see _bucket_keys_pandas); ``"expr"`` is the pure-JVM
-    expression path (authoritative for degenerate NaN inputs)."""
-    if key_impl == "pandas":
-        _require_arrow("LSH bucket keys", "key_impl='expr'")
-        ks = _bucket_keys_pandas(dim, planes, tables, seed)(F.col(vec_name))
-        return F.transform(
-            ks, lambda k, i: F.struct(i.cast("int").alias("tbl"),
-                                      k.alias("key")))
-    if key_impl != "expr":
-        raise ValueError(f"unknown key_impl: {key_impl!r} "
-                         "(expected 'pandas' or 'expr')")
-    return F.array(*[
-        F.struct(
-            F.lit(t).alias("tbl"),
-            _bucket_key(vec_name,
-                        _hyperplanes(dim, planes, t, seed)).alias("key"),
-        )
-        for t in range(tables)
-    ])
+    every batch LSH consumer, built on the Arrow keys
+    (_bucket_keys_pandas)."""
+    ks = _bucket_keys_pandas(dim, planes, tables, seed)(F.col(vec_name))
+    return F.transform(
+        ks, lambda k, i: F.struct(i.cast("int").alias("tbl"),
+                                  k.alias("key")))
 
 
 def _sq_dist_sql(vec_name: str, centroid: list[float]) -> str:
@@ -265,7 +252,8 @@ def _nearest(vec_name: str, centroids: list[list[float]],
     """Indices of the ``nprobe`` nearest centroids as array<int> —
     array_sort over (distance, index) structs, lexicographic min first.
     One SQL string (see _sql_arr): nlist x dim literals as Columns cost
-    a py4j hop per element, re-paid every Lloyd's iteration."""
+    a py4j hop per element. The pure-JVM reference the Arrow assignment
+    (_nearest_pandas) is pinned bit-equal against."""
     scored = "array(" + ",".join(
         f"struct({_sq_dist_sql(vec_name, c)} AS d, {i} AS i)"
         for i, c in enumerate(centroids)
@@ -288,12 +276,13 @@ def _nearest_pandas(centroids: list[list[float]], nprobe: int):
     number; numpy's stable argsort places NaN at the end), and ties —
     all-NaN rows or equal finite distances — fall back to ascending
     centroid index on both (Spark's struct comparison treats NaN ==
-    NaN and compares i; stable argsort preserves input order). Why
-    the twin exists: the fold is
-    interpreted row-at-a-time JVM-side, so corpus × nlist × dim
-    multiply-adds dominate IVF assignment — the 100 TB cost of
-    set_ivf/knn_ivf's corpus pass, not just a gate-seconds issue.
-    Pinned by test_ivf_nearest_pandas_bit_equal."""
+    NaN and compares i; stable argsort preserves input order). Why it
+    is the only assignment path: the fold is interpreted row-at-a-time
+    JVM-side, so corpus × nlist × dim multiply-adds dominate IVF
+    assignment — the 100 TB cost of set_ivf/knn_ivf's corpus pass, not
+    just a gate-seconds issue. Pinned by
+    test_ivf_nearest_pandas_bit_equal. Call it as
+    ``_nearest_pandas(centroids, nprobe)(F.col(vec_name))``."""
     import numpy as np
     import pandas as pd
 
@@ -319,20 +308,6 @@ def _nearest_pandas(centroids: list[list[float]], nprobe: int):
 
     nn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
     return F.pandas_udf(nn, T.ArrayType(T.IntegerType()))
-
-
-def _nearest_impl(vec_name: str, centroids: list[list[float]],
-                  nprobe: int, impl: str = "pandas") -> F.Column:
-    """Dispatch for the nearest-centroid assignment: ``"pandas"``
-    (default) is the Arrow twin, ``"expr"`` the pure-JVM expression
-    (authoritative for NaN inputs)."""
-    if impl == "pandas":
-        _require_arrow("IVF centroid assignment", "assign_impl='expr'")
-        return _nearest_pandas(centroids, nprobe)(F.col(vec_name))
-    if impl != "expr":
-        raise ValueError(f"unknown assign_impl: {impl!r} "
-                         "(expected 'pandas' or 'expr')")
-    return _nearest(vec_name, centroids, nprobe)
 
 
 def ivf_train(
@@ -368,7 +343,7 @@ def ivf_train(
     and filters the sample, and the full-corpus ASSIGNMENT in
     knn_ivf/set_ivf — stays distributed and unchanged. Numerics: the assignment distance accumulates
     SEQUENTIALLY over dimensions, the exact rounding sequence of the
-    expr/pandas assignment twins (_nearest_pandas), with the same
+    corpus assignment (_nearest_pandas), with the same
     NaN-sorts-last and degenerate-row story; per-cluster means
     accumulate in sample order (np.add.at), which differs from the old
     Summarizer partition-merge order by last-ulp rounding only — the
@@ -408,16 +383,20 @@ def ivf_train(
     sample = (v.orderBy(F.xxhash64(F.col("__id")))
               .limit(max_train_rows).select("__v").toArrow())
     vecs = sample.column("__v").combine_chunks()
-    centroids = [[float(x) for x in vec]
-                 for vec in vecs.slice(0, nlist).to_pylist()]
+    # init from the first nlist NON-NULL sample vectors (null elements
+    # read as NaN, as in the means below): a null vector has no
+    # coordinates to seed a centroid with
+    centroids = [[float("nan") if x is None else float(x) for x in vec]
+                 for vec in vecs.filter(pc.is_valid(vecs))
+                 .slice(0, nlist).to_pylist()]
     if not centroids:
-        # empty corpus: no centroids to train — callers (knn_ivf) handle
-        # [] by returning no neighbors
+        # empty (or all-null-vector) corpus: no centroids to train —
+        # callers (knn_ivf) handle [] by returning no neighbors
         return centroids
     dim = len(centroids[0])
     # degenerate sample rows (null / wrong-length vectors) are excluded
     # from the means (assignment of the CORPUS still routes them to
-    # list 0 via _nearest_impl); null elements read as NaN
+    # list 0 via _nearest_pandas); null elements read as NaN
     ok = pc.fill_null(pc.equal(pc.list_value_length(vecs), dim), False)
     M = (pc.list_flatten(vecs.filter(ok)).to_numpy(zero_copy_only=False)
          .astype(np.float64).reshape(-1, dim))
@@ -456,7 +435,6 @@ def knn_ivf(
     iters: int = 5,
     centroids: list[list[float]] | None = None,
     query_id_col: str | None = None,
-    assign_impl: str = "pandas",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index: corpus vectors
@@ -488,13 +466,12 @@ def knn_ivf(
         )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    ).withColumn("__list", _nearest_impl("__cv", centroids, 1, assign_impl)[0]) \
+    ).withColumn("__list", _nearest_pandas(centroids, 1)(F.col("__cv"))[0]) \
         .withColumn("__cn", norm_units(F.col("__cv")))
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv")
     ).withColumn(
-        "__list", F.explode(_nearest_impl("__qv", centroids, nprobe,
-                                          assign_impl))
+        "__list", F.explode(_nearest_pandas(centroids, nprobe)(F.col("__qv")))
     ).withColumn("__qn", norm_units(F.col("__qv")))
     cand = q.join(c, "__list").select(
         "query_id", "neighbor_id",
@@ -524,7 +501,6 @@ def knn_lsh(
     tables: int = 4,
     seed: int = 42,
     query_id_col: str | None = None,
-    key_impl: str = "pandas",
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH candidate retrieval +
     exact cosine re-rank. Each side computes ``tables`` bucket keys; the
@@ -532,8 +508,8 @@ def knn_lsh(
     broadcast or skew-split. Candidate retrieval and the multi-table
     dropDuplicates are SLIM (id pairs only); vectors re-attach after the
     dedup via per-side hash joins, so vector bytes move O(n) per side,
-    not O(candidate pairs). Bucket keys default to the Arrow twin
-    (bit-equal, see _bucket_keys_pandas). Returns (query_id,
+    not O(candidate pairs). Bucket keys are the Arrow keys (bit-equal
+    to the expression fold, see _bucket_keys_pandas). Returns (query_id,
     neighbor_id, cos, rank)."""
     qid = query_id_col or id_col
 
@@ -545,7 +521,7 @@ def knn_lsh(
     def slim_buckets(sel, out_id):
         buckets = _bucket_structs(
             f"__{out_id}_v", dim=dim, planes=planes, tables=tables,
-            seed=seed, key_impl=key_impl)
+            seed=seed)
         return sel.select(out_id, F.explode(buckets).alias("bk")) \
                   .select(out_id, "bk.tbl", "bk.key")
 
@@ -585,18 +561,19 @@ def embedding_dup_pairs_lsh(
     tables: int = 8,
     seed: int = 42,
     impl: str = "expr",
-    key_impl: str = "pandas",
 ) -> DataFrame:
     """Corpus-scale embedding near-duplicate pairs: hyperplane-LSH
     candidate buckets + exact cosine verification — the scale path for
     ``dedup.embedding_dup_pairs`` (which is the O(n²) all-pairs
     verifier). Returns (id_a, id_b, cos), cos >= threshold.
 
-    ``impl="pandas"`` scores candidates with the Arrow-vectorized
-    fixed-point scorer (bit-identical to the expression fold — pinned
-    by test_embedding_pandas_impl_bit_equal): Spark evaluates
-    higher-order array lambdas interpreted per element, so at millions
-    of candidate pairs the numpy batch math is ~10× cheaper per pair.
+    ``impl="expr"`` (default) streams slim candidate pairs and scores
+    them with the JVM fixed-point fold. ``impl="block"`` verifies
+    inside each bucket with the numpy block scorer (bit-identical to
+    the fold — pinned by test_embedding_pandas_impl_bit_equal), which
+    ships each vector once per table instead of once per candidate
+    pair; a bucket wider than 500,000 rows raises (see
+    _lsh_pairs_block), where ``expr`` streams it instead.
 
     Recall: a pair at angle θ = acos(threshold) collides in one table
     with probability (1 - θ/π)^planes; the overall miss probability is
@@ -618,23 +595,26 @@ def embedding_dup_pairs_lsh(
     """
     from rayforce_spark.datapipe.dedup import fanout
 
+    if impl not in ("expr", "block"):
+        raise ValueError(f"unknown impl: {impl!r} (expected 'expr' or "
+                         "'block')")
     sel = fanout(df).select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     ).withColumn("__nu", norm_units(F.col("__v")))
     buckets = _bucket_structs("__v", dim=dim, planes=planes,
-                              tables=tables, seed=seed,
-                              key_impl=key_impl)
+                              tables=tables, seed=seed)
     if impl == "block":
         # r9: verify INSIDE each bucket with the shared numpy block
         # scorer (bit-equal fixed-point math, score_units_block) — each
         # vector ships through Arrow once per table (n × tables rows
-        # total) instead of once per CANDIDATE PAIR (the "pandas" shape
-        # moved ~2 × 64 doubles × |candidates| — ~700 MB at sf0.1 for a
-        # 920-pair result), and the cross-table dropDuplicates runs on
-        # the few FINAL pairs, not millions of candidate ids. Guarded:
-        # a bucket wider than max_bucket_rows raises with the planes
-        # lever named (hot buckets are near-dup mass, but k² inside one
-        # task has a ceiling) — same guard class as pack_greedy.
+        # total) instead of once per CANDIDATE PAIR (the per-pair Arrow
+        # scorer it replaced moved ~2 × 64 doubles × |candidates| —
+        # ~700 MB at sf0.1 for a 920-pair result), and the cross-table
+        # dropDuplicates runs on the few FINAL pairs, not millions of
+        # candidate ids. Guarded: a bucket wider than max_bucket_rows
+        # raises with the planes lever named (hot buckets are near-dup
+        # mass, but k² inside one task has a ceiling) — same guard
+        # class as pack_greedy.
         return _lsh_pairs_block(sel, buckets, threshold,
                                 max_bucket_rows=500_000)
     # slim candidate ids: the vector column is pruned before the
@@ -653,20 +633,6 @@ def embedding_dup_pairs_lsh(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    if impl == "pandas":
-        from rayforce_spark.datapipe.dedup import _cosine_units_pandas
-
-        cos_fn = _cosine_units_pandas()
-        pa = sel.select(F.col("__id").alias("id_a"),
-                        F.col("__v").alias("__va"))
-        pb = sel.select(F.col("__id").alias("id_b"),
-                        F.col("__v").alias("__vb"))
-        return (
-            cand.join(pa, "id_a").join(pb, "id_b")
-            .select("id_a", "id_b",
-                    cos_fn(F.col("__va"), F.col("__vb")).alias("cos"))
-            .filter(F.col("cos") >= threshold)
-        )
     pa = sel.select(F.col("__id").alias("id_a"), F.col("__v").alias("__va"),
                     F.col("__nu").alias("__na"))
     pb = sel.select(F.col("__id").alias("id_b"), F.col("__v").alias("__vb"),
@@ -715,7 +681,7 @@ def _lsh_pairs_block(sel: DataFrame, buckets, threshold: float,
                 f"embedding_dup_pairs_lsh[block]: bucket holds "
                 f"{len(pdf)} vectors > max_bucket_rows={limit}; raise "
                 "planes= (halves expected bucket size per plane) or "
-                "use impl='pandas' (streams pairs instead of "
+                "use impl='expr' (streams pairs instead of "
                 "materializing the bucket)")
         if len(pdf) < 2:
             return pd.DataFrame({"id_a": pdf["__id"][:0],
@@ -740,7 +706,6 @@ def set_ivf(
     nlist: int = 16,
     iters: int = 5,
     centroids: list[list[float]] | None = None,
-    assign_impl: str = "pandas",
     corpus_rows: int | None = None,
 ) -> list[list[float]]:
     """Persist an IVF index: train (or reuse) centroids, write them as
@@ -762,7 +727,7 @@ def set_ivf(
         (corpus.select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).alias("__cv"))
          .withColumn("__list",
-                     _nearest_impl("__cv", centroids, 1, assign_impl)[0])
+                     _nearest_pandas(centroids, 1)(F.col("__cv"))[0])
          .write.partitionBy("__list").mode("overwrite")
          .parquet(f"{path}/data"))
     return centroids
@@ -786,7 +751,6 @@ def knn_ivf_indexed(
     nprobe: int = 4,
     query_id_col: str = "vec_id",
     id_type: str = "long",
-    assign_impl: str = "pandas",
 ) -> DataFrame:
     """Probe a persisted IVF index (see :func:`set_ivf`): queries
     explode to their ``nprobe`` nearest lists and join the
@@ -811,8 +775,7 @@ def knn_ivf_indexed(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     ).withColumn(
-        "__list", F.explode(_nearest_impl("__qv", centroids, nprobe,
-                                          assign_impl))
+        "__list", F.explode(_nearest_pandas(centroids, nprobe)(F.col("__qv")))
     ).withColumn("__qn", norm_units(F.col("__qv")))
     cand = q.join(c, "__list").select(
         "query_id", "neighbor_id",

@@ -213,22 +213,19 @@ def _ngram_run_stats(grams: Column) -> Column:
     )
 
 
-def _repetition_stats_pandas():
-    """Arrow-vectorized twin of the two repetition folds, ONE
-    tokenization pass per document: returns the INTEGER run stats
-    (2-gram top count / total, 3-gram duplicate occurrences / total);
-    the division + round(…,6) stay JVM expressions shared with the
-    expr path, so cross-impl equality is exact integer equality — no
-    float-rounding argument needed (cf. dedup._cosine_units_pandas,
-    which does need one). Pinned bit-equal over the gate corpus by
-    test_repetition_pandas_impl_bit_equal. ~40x faster per doc than
-    the interpreted sorted-array aggregate at sf0.1 (the r7 gate's
-    slowest row, 71 s -> seconds)."""
+def repetition_stats(text: Column) -> Column:
+    """The integer core of the Gopher repetition metrics as one struct
+    ``(maxrun2, total2, dup3, total3)``: 2-gram top count / total and
+    3-gram duplicate occurrences / total, from ONE tokenization pass per
+    document in an Arrow batch. Identical integers to the JVM
+    sorted-array fold (:func:`_ngram_run_stats` over 2- and 3-grams),
+    pinned over the gate corpus and the tokenizer's edge shapes by
+    test_repetition_pandas_impl_bit_equal; ~40x faster per doc than that
+    interpreted fold at sf0.1 (the r7 gate's slowest row, 71 s ->
+    seconds)."""
     import pandas as pd
-    from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("struct<maxrun2:int,total2:int,dup3:int,total3:int>",
-                PandasUDFType.SCALAR)
     def _stats(texts):
         import re
         from collections import Counter
@@ -256,34 +253,23 @@ def _repetition_stats_pandas():
         return pd.DataFrame(
             rows, columns=["maxrun2", "total2", "dup3", "total3"])
 
-    return _stats
+    # explicit annotation objects: the module's `from __future__ import
+    # annotations` leaves string hints pandas_udf can't resolve
+    _stats.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
+    return pandas_udf(
+        _stats, "struct<maxrun2:int,total2:int,dup3:int,total3:int>")(text)
 
 
-def repetition_stats(text: Column, *, impl: str = "expr") -> Column:
-    """The integer core of the Gopher repetition metrics as one struct
-    ``(maxrun2, total2, dup3, total3)``. ``impl="expr"`` is the
-    zero-shuffle JVM sorted-array fold (scan-stage, no Python);
-    ``impl="pandas"`` is the Arrow twin — identical integers, an order
-    of magnitude faster per row (the production choice when a Python
-    runtime is acceptable)."""
-    if impl == "pandas":
-        return _repetition_stats_pandas()(text)
-    s2 = _ngram_run_stats(ngrams(text, 2))
-    s3 = _ngram_run_stats(ngrams(text, 3))
-    return F.struct(
-        s2["maxrun"].cast("int").alias("maxrun2"),
-        s2["total"].cast("int").alias("total2"),
-        s3["dup"].cast("int").alias("dup3"),
-        s3["total"].cast("int").alias("total3"),
-    )
-
-
-def repetition_metrics(text: Column, *, impl: str = "expr") -> Column:
+def repetition_metrics(text: Column) -> Column:
     """Both Gopher fractions + the combined gate from ONE stats pass:
-    struct ``(top2gram_frac, dup3gram_frac, rep_ok)``. The fractions
-    and thresholds are computed JVM-side from the integer stats, so
-    expr and pandas impls agree bit-for-bit by construction."""
-    st = repetition_stats(text, impl=impl)
+    struct ``(top2gram_frac, dup3gram_frac, rep_ok)``."""
+    return _repetition_fracs(repetition_stats(text))
+
+
+def _repetition_fracs(st: Column) -> Column:
+    """The fractions and the gate from a ``repetition_stats`` struct,
+    computed JVM-side (division + round(…,6) and the thresholds), so
+    any source of the same integers yields bit-equal metrics."""
     top2 = F.when(st["total2"] > 0,
                   F.round(st["maxrun2"] / st["total2"], 6)).otherwise(0.0)
     dup3 = F.when(st["total3"] > 0,
@@ -439,12 +425,12 @@ def filter_by_lm_quantile(df, text_col: str, id_col: str, *, q: float,
 REPETITION_THRESHOLDS = {"top2": 0.20, "dup3": 0.18}
 
 
-def repetition_ok(text: Column, *, impl: str = "expr") -> Column:
+def repetition_ok(text: Column) -> Column:
     """Gopher-style repetition gate: most-common-2-gram fraction <= 0.20
     AND duplicate-3-gram fraction <= 0.18 (REPETITION_THRESHOLDS).
     One stats pass via :func:`repetition_metrics` (both fractions from
-    a single fold / a single Arrow batch)."""
-    return repetition_metrics(text, impl=impl)["rep_ok"]
+    a single Arrow batch)."""
+    return repetition_metrics(text)["rep_ok"]
 
 
 # PII patterns shared by engine and oracle: RE2/Java-compatible (no

@@ -10,8 +10,8 @@ split those from the instance's 12-15% clock drift. This script runs
 every variant in ONE warm JVM over the same cached input, interleaved
 round-robin so slow drift hits all variants equally.
 
-Variants (bands config fixed at num_perm=64, bands=16, k=3, t=0.5,
-sig_impl=expr, reuse_shingles=False — the exact bench row config):
+Variants (bands config fixed at num_perm=64, bands=16, k=3, t=0.5 —
+the exact bench row config):
   bench_today   repartition(16) + fanout(->32) + xxhash64 bands
   noouter       fanout(->32) only            + xxhash64 bands
   nofanout      repartition(16), fanout off  + xxhash64 bands
@@ -77,7 +77,7 @@ def main():
             d = docs if outer is None else docs.repartition(outer)
             return dd.minhash_lsh_pairs(
                 d, "text", "doc_id", num_perm=64, bands=16, shingle_k=3,
-                threshold=0.5, sig_impl="expr", reuse_shingles=False)
+                threshold=0.5)
         finally:
             dd._band_buckets = orig_bands
             dd.fanout = orig_fanout

@@ -43,14 +43,12 @@ def run(sf_dir: str, spark=None) -> dict:
     graph; the pair-generation step is oracle-verified at sf0.01 by the
     main gate (full three-way) and prefix-filter==brute property tests."""
     from rayforce_spark.datapipe import dedup_clusters, jaccard_dup_pairs
-    from rayforce_spark.session import get_spark
+    from rayforce_spark.session import get_spark, load_tables
 
     if spark is None:
         spark = get_spark("scalecheck_clusters")
     t0 = time.time()
-    # only documents is needed — load_tables' full 10-table sweep cost
-    # ~4 s of this fresh subprocess's budget
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = load_tables(spark, sf_dir, ["documents"])["documents"]
     pairs = jaccard_dup_pairs(d, "text", "doc_id", shingle_k=1,
                               threshold=0.8)
     pair_dir = tempfile.mkdtemp(prefix="rf_sc_pairs_") + "/pairs"

@@ -84,7 +84,7 @@ def test_jaccard_pairs_exact_vs_duckdb(tables, duck):
     )
 
 
-def test_minhash_lsh_finds_near_dups(spark):
+def test_minhash_lsh_finds_near_dups(spark, monkeypatch):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     docs = [
         (1, base),
@@ -101,12 +101,19 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (1, 2) in got
     assert (1, 4) in got
     assert all(3 not in p for p in got)
-    # the dense-corpus candidate-width pin changes the plan, never the
-    # verified pair set
+    # the guard's candidate-width pin changes the plan, never the
+    # verified pair set: dense_threshold=0 forces its "pin" branch on
+    # these distinct-set near-dups (collapse would not halve emission)
+    import rayforce_spark.datapipe.dedup as dd
+
+    decisions, real = [], dd._dense_decision
+    monkeypatch.setattr(dd, "_dense_decision", lambda *a, **k: (
+        decisions.append(real(*a, **k)) or decisions[-1]))
     pinned = minhash_lsh_pairs(
         df, "text", "doc_id", num_perm=64, bands=16, shingle_k=2,
-        threshold=0.5, cand_parallelism=4,
+        threshold=0.5, dense_threshold=0,
     )
+    assert decisions == ["pin"]
     assert {(r.id_a, r.id_b) for r in pinned.collect()} == got
 
 
@@ -502,29 +509,55 @@ def test_index_reads_checked_in_older_indexes(spark, tmp_path):
         assert got == exp[fam]["probe_after_extend"], fam
 
 
+def test_minhash_index_other_sig_family_fails_loudly(spark, tmp_path):
+    """A minhash index whose _meta names a signature family other than
+    the expression fold has buckets this build cannot reproduce: probe
+    and extend must raise naming the value and the rebuild, not
+    silently lose recall (on a copy of the checked-in fixture)."""
+    import os
+    import shutil
+
+    import pytest as _pytest
+
+    from rayforce_spark.datapipe import (
+        extend_minhash_index, minhash_index_pairs)
+
+    path = str(tmp_path / "minhash")
+    shutil.copytree(os.path.join(os.path.dirname(__file__), "fixtures",
+                                 "index_format", "minhash"), path)
+    meta = spark.read.parquet(f"{path}/_meta")
+    rows = [r.asDict() | {"sig_impl": "numpy"} for r in meta.collect()]
+    spark.createDataFrame(rows, meta.schema).write.mode(
+        "overwrite").parquet(f"{path}/_meta")
+    batch = spark.createDataFrame([(9, "aa bb")], "doc_id long, text string")
+    for call in (lambda: minhash_index_pairs(path, batch, "text", "doc_id"),
+                 lambda: extend_minhash_index(batch, path, "text", "doc_id")):
+        with _pytest.raises(ValueError, match="'numpy'.*set_minhash_index"):
+            call()
+
+
 def test_arrow_default_fails_fast_when_missing(spark, monkeypatch):
-    """key_impl/assign_impl default to the Arrow twins; with
-    pandas/pyarrow absent the failure must be a DRIVER-side ImportError
-    naming the zero-dependency fallback, not an opaque worker-side
-    stack trace mid-job (r10 verdict #3)."""
+    """The LSH keys, IVF assignment, simhash fingerprint and repetition
+    stats run only as Arrow UDFs; with pyarrow absent they must fail
+    with a DRIVER-side ImportError at plan-build time (PySpark's own
+    check), not an opaque worker-side stack trace mid-job."""
     import sys
 
     import pytest as _pytest
 
+    from rayforce_spark.datapipe import repetition_stats
+    from rayforce_spark.datapipe.dedup import simhash_fingerprint_numpy
     from rayforce_spark.datapipe.similarity import (
-        _bucket_structs,
-        _nearest_impl,
-    )
+        _bucket_structs, _nearest_pandas)
 
     monkeypatch.setitem(sys.modules, "pyarrow", None)
-    with _pytest.raises(ImportError, match="key_impl='expr'"):
-        _bucket_structs("__v", dim=4, planes=2, tables=1, seed=1)
-    with _pytest.raises(ImportError, match="assign_impl='expr'"):
-        _nearest_impl("__v", [[0.0, 0.0]], 1, "pandas")
-    # the named fallbacks still plan fine without Arrow
-    _bucket_structs("__v", dim=4, planes=2, tables=1, seed=1,
-                    key_impl="expr")
-    _nearest_impl("__v", [[0.0, 0.0]], 1, "expr")
+    for build in (
+            lambda: _bucket_structs("__v", dim=4, planes=2, tables=1, seed=1),
+            lambda: _nearest_pandas([[0.0, 0.0]], 1),
+            lambda: simhash_fingerprint_numpy(63),
+            lambda: repetition_stats(F.col("text"))):
+        with _pytest.raises(ImportError, match="PyArrow"):
+            build()
 
 
 def test_block_margin_high_dim_matches_expr(spark):
@@ -551,26 +584,11 @@ def test_block_margin_high_dim_matches_expr(spark):
     assert want and got == want
 
 
-def test_minhash_numpy_signature_same_pairs(spark, tables):
-    # the Arrow-vectorized signature family is interchangeable with the
-    # expression fold: at bands=num_perm both have exact recall, so the
-    # verified output is the same exact-Jaccard pair set
-    d = tables["documents"].limit(300)
-    kw = dict(num_perm=32, bands=32, shingle_k=3, threshold=0.5)
-    expr_pairs = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                  minhash_lsh_pairs(d, "text", "doc_id", sig_impl="expr",
-                                    **kw).collect()}
-    np_pairs = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                minhash_lsh_pairs(d, "text", "doc_id", sig_impl="numpy",
-                                  **kw).collect()}
-    assert expr_pairs == np_pairs
-
-
 def test_minhash_shared_shingles_same_pairs(spark, tables):
     # r13: a caller-provided checkpointed shingle frame (the shared-
     # subtree spelling q_dedup_minhash uses for its two pipelines) must
-    # reproduce the default recompute path's pair set exactly — for
-    # both sig impls, and through the dense-collapse branch
+    # reproduce the default recompute path's pair set exactly, also
+    # through the dense-collapse branch
     from rayforce_spark.datapipe.dedup import fanout, with_shingle_hashes
 
     d = tables["documents"].limit(300)
@@ -580,14 +598,12 @@ def test_minhash_shared_shingles_same_pairs(spark, tables):
             "__text", 3, "__bh")
           .select("__id", "__bh").localCheckpoint(eager=False))
     kw = dict(num_perm=32, bands=32, shingle_k=3, threshold=0.5)
-    for impl in ("expr", "numpy"):
-        want = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                minhash_lsh_pairs(d, "text", "doc_id", sig_impl=impl,
-                                  **kw).collect()}
-        got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-               minhash_lsh_pairs(d, "text", "doc_id", sig_impl=impl,
-                                 shingles=sh, **kw).collect()}
-        assert want and got == want
+    want = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
+            minhash_lsh_pairs(d, "text", "doc_id", **kw).collect()}
+    got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
+           minhash_lsh_pairs(d, "text", "doc_id", shingles=sh,
+                             **kw).collect()}
+    assert want and got == want
     # dense-collapse branch consumes the shared frame too
     dense = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
              minhash_lsh_pairs(d, "text", "doc_id", dense_threshold=1,
@@ -599,12 +615,12 @@ def test_minhash_shared_shingles_same_pairs(spark, tables):
 
 
 def test_simhash_fp_numpy_bit_equal(spark, tables):
-    """The Arrow fingerprint twin (fp_impl='numpy', the default) must be
-    BIT-EQUAL to the 63-aggregate expression plan for both token-hash
-    families, including edge docs: empty/whitespace text yields one ''
-    token on both paths, null text is dropped on both (explode vs the
-    size()>0 filter)."""
-    from rayforce_spark.datapipe.dedup import simhash
+    """The Arrow fingerprint (simhash's only path) must be BIT-EQUAL to
+    the 63-aggregate grouped plan for both token-hash families,
+    including edge docs: empty/whitespace text yields one '' token on
+    both paths, null text is dropped on both (explode vs the size()>0
+    filter)."""
+    from rayforce_spark.datapipe.dedup import _simhash_grouped, simhash
 
     docs = tables["documents"].limit(400).select("doc_id", "text")
     edge = spark.createDataFrame(
@@ -613,10 +629,10 @@ def test_simhash_fp_numpy_bit_equal(spark, tables):
         "doc_id long, text string")
     d = docs.unionByName(edge)
     for th in ("xxhash64", "md5"):
-        want = {r.doc_id: r.simhash for r in simhash(
-            d, "text", "doc_id", token_hash=th, fp_impl="expr").collect()}
+        want = {r.doc_id: r.simhash for r in _simhash_grouped(
+            d, "text", "doc_id", token_hash=th).collect()}
         got = {r.doc_id: r.simhash for r in simhash(
-            d, "text", "doc_id", token_hash=th, fp_impl="numpy").collect()}
+            d, "text", "doc_id", token_hash=th).collect()}
         assert 9000004 not in got and len(got) == 404
         assert got == want
 
@@ -703,36 +719,38 @@ def test_knn_lsh_recall(tables):
     assert recall >= 0.6, f"LSH recall too low: {recall}"
 
 
+def _bucket_structs_expr(vec_name, *, dim, planes, tables, seed):
+    """similarity._bucket_structs spelled as one pure-JVM _bucket_key
+    fold per table: the reference the Arrow keys are pinned against."""
+    from rayforce_spark.datapipe.similarity import _bucket_key, _hyperplanes
+
+    return F.array(*[F.struct(F.lit(t).alias("tbl"), _bucket_key(
+        vec_name, _hyperplanes(dim, planes, t, seed)).alias("key"))
+        for t in range(tables)])
+
+
 def test_lsh_bucket_keys_pandas_bit_equal(tables, spark):
-    """The Arrow bucket-key twin is BIT-identical to the JVM expression
-    path on every corpus vector (sequential-accumulation rounding
+    """The Arrow bucket keys are BIT-identical to the JVM expression
+    fold on every corpus vector (sequential-accumulation rounding
     argument in _bucket_keys_pandas' docstring; this is the empirical
-    pin), and keys degenerate inputs (null vector, wrong length) to 0
-    exactly like the expression fold's null story."""
+    pin), and key degenerate inputs (null vector, wrong length) to 0
+    exactly like the fold's null story."""
     from rayforce_spark.datapipe.similarity import _bucket_structs
 
-    emb = tables["embeddings"].select("vec_id", "embedding")
     kw = dict(dim=64, planes=5, tables=7, seed=123)
-    both = emb.select(
-        "vec_id",
-        _bucket_structs("embedding", key_impl="expr", **kw).alias("e"),
-        _bucket_structs("embedding", key_impl="pandas", **kw).alias("p"),
-    ).collect()
-    assert both
-    for r in both:
-        assert [x.asDict() for x in r.e] == [x.asDict() for x in r.p]
     weird = spark.createDataFrame(
         [(1, None), (2, [0.5, -0.25]), (3, [0.0] * 70)],
-        "id long, embedding array<double>",
-    )
-    rows = weird.select(
-        "id",
-        _bucket_structs("embedding", key_impl="expr", **kw).alias("e"),
-        _bucket_structs("embedding", key_impl="pandas", **kw).alias("p"),
-    ).collect()
-    for r in rows:
-        assert [x.asDict() for x in r.e] == [x.asDict() for x in r.p]
-        assert all(x.key == 0 for x in r.p)
+        "vec_id long, embedding array<double>")
+    for df in (tables["embeddings"].select("vec_id", "embedding"), weird):
+        rows = df.select(
+            "vec_id",
+            _bucket_structs_expr("embedding", **kw).alias("e"),
+            _bucket_structs("embedding", **kw).alias("p"),
+        ).collect()
+        assert rows
+        for r in rows:
+            assert [x.asDict() for x in r.e] == [x.asDict() for x in r.p]
+    assert all(x.key == 0 for r in rows for x in r.p)
 
 
 def test_lsh_bucket_keys_nan_bit_equal(spark):
@@ -755,8 +773,8 @@ def test_lsh_bucket_keys_nan_bit_equal(spark):
     )
     rows = weird.select(
         "id",
-        _bucket_structs("embedding", key_impl="expr", **kw).alias("e"),
-        _bucket_structs("embedding", key_impl="pandas", **kw).alias("p"),
+        _bucket_structs_expr("embedding", **kw).alias("e"),
+        _bucket_structs("embedding", **kw).alias("p"),
     ).collect()
     for r in rows:
         assert [x.asDict() for x in r.e] == [x.asDict() for x in r.p]
@@ -793,7 +811,7 @@ def test_ivf_nearest_nan_bit_equal(spark):
     rows tie-break to ascending centroid index on both (Spark struct
     compare treats NaN == NaN then compares i; stable argsort keeps
     input order)."""
-    from rayforce_spark.datapipe.similarity import _nearest_impl
+    from rayforce_spark.datapipe.similarity import _nearest, _nearest_pandas
 
     nan = float("nan")
     # centroid 1 is itself NaN-poisoned: finite vectors get exactly one
@@ -806,8 +824,8 @@ def test_ivf_nearest_nan_bit_equal(spark):
         "id long, embedding array<double>")
     rows = weird.select(
         "id",
-        _nearest_impl("embedding", cents, 4, "expr").alias("e"),
-        _nearest_impl("embedding", cents, 4, "pandas").alias("p"),
+        _nearest("embedding", cents, 4).alias("e"),
+        _nearest_pandas(cents, 4)(F.col("embedding")).alias("p"),
     ).collect()
     for r in rows:
         assert list(r.e) == list(r.p)
@@ -822,24 +840,18 @@ def test_ivf_nearest_pandas_bit_equal(tables, spark):
     lexicographic order), and degenerate rows (null vector, wrong
     length) yield [0..nprobe-1] exactly like the expr path's all-null
     distance tie-break."""
-    from rayforce_spark.datapipe.similarity import _nearest_impl
+    from rayforce_spark.datapipe.similarity import _nearest, _nearest_pandas
 
     cents = [[0.01 * i + 0.001 * d for d in range(64)] for i in range(9)]
-    emb = tables["embeddings"].select("vec_id", "embedding")
-    rows = emb.select(
-        "vec_id",
-        _nearest_impl("embedding", cents, 3, "expr").alias("e"),
-        _nearest_impl("embedding", cents, 3, "pandas").alias("p"),
-    ).collect()
-    assert rows and all(list(r.e) == list(r.p) for r in rows)
     weird = spark.createDataFrame(
-        [(1, None), (2, [0.5, -0.25])],
-        "id long, embedding array<double>")
-    for r in weird.select(
-            _nearest_impl("embedding", cents, 3, "expr").alias("e"),
-            _nearest_impl("embedding", cents, 3, "pandas").alias("p"),
-    ).collect():
-        assert list(r.e) == list(r.p) == [0, 1, 2]
+        [(1, None), (2, [0.5, -0.25])], "vec_id long, embedding array<double>")
+    for df in (tables["embeddings"].select("vec_id", "embedding"), weird):
+        rows = df.select(
+            _nearest("embedding", cents, 3).alias("e"),
+            _nearest_pandas(cents, 3)(F.col("embedding")).alias("p"),
+        ).collect()
+        assert rows and all(list(r.e) == list(r.p) for r in rows)
+    assert all(list(r.p) == [0, 1, 2] for r in rows)
 
 
 def test_ivf_train_deterministic_and_bounded_jobs(tables, spark):
@@ -1109,6 +1121,30 @@ def test_synthesize_media_vectorized_bit_identical(spark):
         i = np.arange(3 * 2 * 3, dtype=np.int64)
         px = ((mid * 7 + i) % 256).astype(np.uint8)
         assert got[mid] == encode_bmp(px.reshape(2, 3, 3))
+
+
+def test_media_pipeline_under_arrow_large_var_types(spark):
+    """With spark.sql.execution.arrow.useLargeVarTypes=true the
+    mapInArrow stages get large_binary input; synthesize_media,
+    extract_features and resize_media must return the same rows as
+    with it off (coverage pin: no mismatch on Spark 4.1.2)."""
+    from rayforce_spark.datapipe.multimodal import synthesize_media
+
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    ids = spark.createDataFrame([(i,) for i in range(5)], "media_id long")
+
+    def run(flag):
+        spark.conf.set(key, flag)
+        media = synthesize_media(ids, "media_id", kind="image")
+        return [sorted(map(tuple, df.collect())) for df in (
+            media, extract_features(media, dim=8, decoder="stdlib"),
+            resize_media(media, width=2, height=3, decoder="stdlib"))]
+
+    try:
+        want, got = run("false"), run("true")
+    finally:
+        spark.conf.unset(key)
+    assert [len(x) for x in want] == [5, 5, 5] and got == want
 
 
 def test_resize_media_arrow_edges(spark):
@@ -1870,47 +1906,81 @@ def test_curate_end_to_end(tables):
                sample_salt=3, fold_salt=3)
 
 
+def test_arrow_paths_on_empty_and_all_null_inputs(spark):
+    """Zero-row and all-null inputs through the Arrow-only paths. Null
+    vectors key to bucket/list 0 and score a null cosine, never a
+    made-up one; an all-null corpus trains no IVF centroids (a null
+    vector in the centroid-init window used to raise a TypeError);
+    null text has no simhash and no repetition (0.0, gate passes)."""
+    from rayforce_spark.datapipe import repetition_metrics, simhash
+
+    vs, ts = "vec_id long, embedding array<double>", "doc_id long, text string"
+    v_null = spark.createDataFrame([(i, None) for i in range(4)], vs)
+    v_ok = spark.createDataFrame(
+        [(10 + i, [float(i), 1.0, -0.5 * i]) for i in range(6)], vs)
+    lsh = dict(k=3, dim=3, planes=2, tables=2)
+    assert knn_lsh(v_null.limit(0), v_ok, "embedding", "vec_id",
+                   **lsh).count() == 0
+    rows = knn_lsh(v_null, v_null, "embedding", "vec_id", **lsh).collect()
+    assert len(rows) == 4 * 3 and all(r.cos is None for r in rows)
+    ivf = dict(k=3, nlist=10, nprobe=10, iters=1)
+    assert knn_ivf(v_null, v_null, "embedding", "vec_id", **ivf).count() == 0
+    rows = knn_ivf(v_ok.unionByName(v_null), v_null.limit(2), "embedding",
+                   "vec_id", **ivf).collect()
+    assert len(rows) == 2 * 3 and all(r.cos is None for r in rows)
+    t_null = spark.createDataFrame([(i, None) for i in range(4)], ts)
+    for t in (t_null.limit(0), t_null):
+        assert simhash(t, "text", "doc_id").count() == 0
+    m = t_null.select(repetition_metrics(F.col("text")).alias("m"))
+    assert m.limit(0).count() == 0
+    assert [tuple(r.m) for r in m.collect()] == [(0.0, 0.0, True)] * 4
+
+
 def test_embedding_pandas_impl_bit_equal(tables):
-    """The Arrow-vectorized fixed-point cosine is BIT-identical to the
-    JVM expression fold — over EVERY all-pairs cosine (threshold -2
-    keeps all), not just the near-dup tail, so the gate's impl swap is
-    value-safe (rounding-equivalence argument in _cosine_units_pandas'
-    docstring; this is the empirical pin)."""
+    """The numpy block scorer is BIT-identical to the JVM fixed-point
+    fold — over EVERY all-pairs cosine (threshold -2 keeps all), not
+    just the near-dup tail, so the gate's impl="block" is value-safe
+    (rounding-equivalence argument in score_units_block's docstring;
+    this is the empirical pin)."""
     e = tables["embeddings"]
     expr = {(r.id_a, r.id_b): r.cos for r in embedding_dup_pairs(
         e, "embedding", "vec_id", threshold=-2.0, impl="expr").collect()}
-    pand = {(r.id_a, r.id_b): r.cos for r in embedding_dup_pairs(
-        e, "embedding", "vec_id", threshold=-2.0, impl="pandas").collect()}
-    assert expr.keys() == pand.keys() and expr
-    assert all(expr[k] == pand[k] for k in expr)  # ==, no tolerance
-    # r9: the blocked scorer is the third impl of the same fixed-point
-    # spec — same keys, bit-equal values
     blk = {(r.id_a, r.id_b): r.cos for r in embedding_dup_pairs(
         e, "embedding", "vec_id", threshold=-2.0, impl="block",
         nblocks=5).collect()}
-    assert expr.keys() == blk.keys()
-    assert all(expr[k] == blk[k] for k in expr)
-    # and the LSH bucket scorer shares the same math: pandas vs block
+    assert expr.keys() == blk.keys() and expr
+    assert all(expr[k] == blk[k] for k in expr)  # ==, no tolerance
+    # and the LSH bucket scorer shares the same math: expr vs block
     # candidate verification agree pair-for-pair, bit-for-bit
     from rayforce_spark.datapipe.similarity import embedding_dup_pairs_lsh
 
-    lp = {(r.id_a, r.id_b): r.cos for r in embedding_dup_pairs_lsh(
+    lx = {(r.id_a, r.id_b): r.cos for r in embedding_dup_pairs_lsh(
         e, "embedding", "vec_id", threshold=0.3, dim=64, planes=2,
-        tables=8, impl="pandas").collect()}
+        tables=8, impl="expr").collect()}
     lb = {(r.id_a, r.id_b): r.cos for r in embedding_dup_pairs_lsh(
         e, "embedding", "vec_id", threshold=0.3, dim=64, planes=2,
         tables=8, impl="block").collect()}
-    assert lp.keys() == lb.keys() and lp
-    assert all(lp[k] == lb[k] for k in lp)
+    assert lx.keys() == lb.keys() and lx
+    assert all(lx[k] == lb[k] for k in lx)
+    import pytest as _pt
+
+    with _pt.raises(ValueError, match="unknown impl"):
+        embedding_dup_pairs(e, "embedding", "vec_id", impl="pandas")
+    with _pt.raises(ValueError, match="unknown impl"):
+        embedding_dup_pairs_lsh(e, "embedding", "vec_id", dim=64,
+                                impl="pandas")
 
 
 def test_repetition_pandas_impl_bit_equal(tables, spark):
-    """The Arrow repetition-stats twin returns IDENTICAL integers to the
-    JVM sorted-array fold over the whole gate corpus plus the
-    tokenizer's edge shapes (None / empty / whitespace-only / short
-    docs) — the gate's r8 impl swap is value-safe by integer equality
+    """The Arrow repetition stats return IDENTICAL integers to the JVM
+    sorted-array fold (_ngram_run_stats over 2- and 3-grams) over the
+    whole gate corpus plus the tokenizer's edge shapes (None / empty /
+    whitespace-only / short docs), and the metrics match the ones
+    computed from the fold's integers — value-safe by integer equality
     (no float-rounding argument needed: division + round stay JVM)."""
     from rayforce_spark.datapipe import repetition_metrics, repetition_stats
+    from rayforce_spark.datapipe.text import (
+        _ngram_run_stats, _repetition_fracs, ngrams)
 
     edge = spark.createDataFrame(
         [(9000001, None), (9000002, ""), (9000003, "   \t  "),
@@ -1918,12 +1988,20 @@ def test_repetition_pandas_impl_bit_equal(tables, spark):
          (9000007, "x y z x y z x y z w")],
         "doc_id long, text string")
     d = tables["documents"].select("doc_id", "text").unionByName(edge)
+    s2 = _ngram_run_stats(ngrams(F.col("text"), 2))
+    s3 = _ngram_run_stats(ngrams(F.col("text"), 3))
+    ref = F.struct(
+        s2["maxrun"].cast("int").alias("maxrun2"),
+        s2["total"].cast("int").alias("total2"),
+        s3["dup"].cast("int").alias("dup3"),
+        s3["total"].cast("int").alias("total3"),
+    )
     rows = d.select(
         "doc_id",
-        repetition_stats(F.col("text"), impl="expr").alias("e"),
-        repetition_stats(F.col("text"), impl="pandas").alias("p"),
-        repetition_metrics(F.col("text"), impl="expr").alias("me"),
-        repetition_metrics(F.col("text"), impl="pandas").alias("mp"),
+        ref.alias("e"),
+        repetition_stats(F.col("text")).alias("p"),
+        _repetition_fracs(ref).alias("me"),
+        repetition_metrics(F.col("text")).alias("mp"),
     ).collect()
     assert rows
     for r in rows:
