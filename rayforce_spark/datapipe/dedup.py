@@ -7,14 +7,16 @@ Scale design notes (100 TB):
   no explode of (row × shingle × permutation). Banding emits `bands` rows
   per doc (small constant), bucket join finds candidates, exact Jaccard
   verifies candidates only.
-* simhash — tokens explode once; 64 conditional-sum aggregates rebuild the
-  fingerprint per doc in a single grouped pass.
+* simhash — token hashes are one JVM transform per doc; the per-bit
+  majority vote runs per row in an Arrow batch (no explode, no grouped
+  63-aggregate plan — that plan survives only as the test reference).
 * embedding cosine — exact all-pairs is O(n²) and only for modest n /
   verification; the LSH route (random hyperplanes) is the scale path.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
 from typing import Callable
 
@@ -73,6 +75,24 @@ def with_shingle_hashes(df: DataFrame, text_col: str, k: int, out: str) -> DataF
              f" (a{j}, b{j}) -> xxhash64(a{j}, b{j}))")
     full = f"slice({z}, 1, greatest(size(__rf_wh) - {k - 1}, 0))"
     return words.withColumn(out, F.expr(f"array_distinct({full})")).drop("__rf_wh")
+
+
+def _shingle_hashes(df: DataFrame, text_col: str, id_col: str,
+                    k: int) -> DataFrame:
+    """(__id, __bh) k-shingle hash sets of a corpus — the shared prelude
+    of the minhash and Jaccard pair generators and index legs. Callers
+    apply their own fanout."""
+    return with_shingle_hashes(
+        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")),
+        "__t", k, "__bh",
+    ).select("__id", "__bh")
+
+
+#: Output id names of the shared candidate/verify stages: a batch
+#: generator emits (id_a, id_b) self-pairs under ``<``; an index probe
+#: emits (new_id, index_id) batch-vs-stored pairs under ``!=``.
+_PAIR_IDS = ("id_a", "id_b")
+_PROBE_IDS = ("new_id", "index_id")
 
 
 def dedup_segments(df: DataFrame, text_col: str, id_col: str, *,
@@ -325,6 +345,23 @@ def _dense_decision(b: DataFrame, keys: list[str], gkey: str,
     return "pin"
 
 
+def _guard_decision(b: DataFrame, keys: list[str], gkey: str,
+                    dense_threshold: int | None, *, scale: int = 1,
+                    banded: bool = True,
+                    mod_col: str | None = None) -> str:
+    """The dense guard of one pair generator: resolve its threshold
+    (``dense_threshold``, else ``scale`` × _DENSE_GUARD_THRESHOLD) and
+    its row floor (_DENSE_GUARD_ROW_FLOOR for ``banded`` docs×bands
+    layouts, unless a threshold was passed explicitly — that forces the
+    stats job on a small corpus), then _dense_decision."""
+    if dense_threshold is not None:
+        return _dense_decision(b, keys, gkey, dense_threshold,
+                               mod_col=mod_col)
+    return _dense_decision(
+        b, keys, gkey, scale * _DENSE_GUARD_THRESHOLD, mod_col=mod_col,
+        row_floor=_DENSE_GUARD_ROW_FLOOR if banded else 0)
+
+
 def _expand_rep_pairs(rep_pairs: DataFrame, reps: DataFrame,
                       members: DataFrame, metric_col: str,
                       within_value, within_filter: Column | None = None,
@@ -393,37 +430,62 @@ def _expand_rep_pairs(rep_pairs: DataFrame, reps: DataFrame,
     return cross.unionByName(within)
 
 
-def _minhash_verify(cand: DataFrame, texts: DataFrame,
-                    threshold: float) -> DataFrame:
-    """Verify (id_a, id_b) candidates by exact Jaccard over a
-    (__tid, __vsh) shingle-hash frame — the shared tail of the sparse
-    and dense minhash plans. Two joins against the SAME texts subtree:
-    the exchanges/broadcasts are byte-identical, so Spark plans a
-    ReusedExchange for the second join — texts is computed and moved
-    ONCE, and no array-carrying groupBy exists at all (the former
-    explode-legs + grouped-max plan shuffled every candidate's arrays a
-    second time; measured -23% on the sf0.1 bench path)."""
-    s1 = cand.join(texts, cand.id_a == texts.__tid).select(
-        "id_a", "id_b", F.col("__vsh").alias("__sa"))
-    s2 = s1.join(texts, s1.id_b == texts.__tid).select(
-        "id_a", "id_b", "__sa", F.col("__vsh").alias("__sb"))
+def _minhash_candidates(a: DataFrame, b: DataFrame, id_pred: Callable,
+                        ids: tuple[str, str] = _PAIR_IDS) -> DataFrame:
+    """Distinct candidate id pairs of two (__id, __bucket) band-bucket
+    frames under ``id_pred`` — ids[0] from ``a``, ids[1] from ``b``. The
+    candidate stage of the sparse and dense minhash plans (one frame
+    both sides, ``<``) and of the index probe (batch vs stored legs,
+    ``!=``). Band-duplicate candidates dedup BEFORE the verify joins: a
+    16-byte-row exchange here is far cheaper than verifying (and
+    shuffling two shingle arrays for) the same pair once per colliding
+    band."""
+    x, y = ids
+    return (
+        a.alias("a")
+        .join(b.alias("b"),
+              (F.col("a.__bucket") == F.col("b.__bucket"))
+              & id_pred(F.col("a.__id"), F.col("b.__id")))
+        .select(F.col("a.__id").alias(x), F.col("b.__id").alias(y))
+        .dropDuplicates([x, y])
+    )
+
+
+def _minhash_verify(cand: DataFrame, sa: DataFrame, sb: DataFrame,
+                    threshold: float,
+                    ids: tuple[str, str] = _PAIR_IDS) -> DataFrame:
+    """Verify candidate pairs by exact Jaccard over (__id, __bh)
+    shingle-hash frames: ``sa`` holds the ids[0] side, ``sb`` the ids[1]
+    side — the shared tail of the sparse and dense minhash plans and the
+    index probe. The batch plans pass ONE frame as both sides: the two
+    joins then read the same subtree, whose exchanges/broadcasts are
+    byte-identical, so Spark plans a ReusedExchange for the second join
+    — the shingle sets are computed and moved ONCE, and no
+    array-carrying groupBy exists at all (the former explode-legs +
+    grouped-max plan shuffled every candidate's arrays a second time;
+    measured -23% on the sf0.1 bench path)."""
+    x, y = ids
+    s = (cand
+         .join(sa.select(F.col("__id").alias(x), F.col("__bh").alias("__sa")),
+               x)
+         .join(sb.select(F.col("__id").alias(y), F.col("__bh").alias("__sb")),
+               y))
     # |A∪B| = |A| + |B| − |A∩B| over DISTINCT shingle sets: skips
     # materializing the union array per pair (sets are distinct by
     # construction in with_shingle_hashes)
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
     uni = (F.size("__sa") + F.size("__sb")).cast("double") - inter
     return (
-        s2.withColumn("jaccard", F.try_divide(inter, uni))
+        s.withColumn("jaccard", F.try_divide(inter, uni))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(x, y, "jaccard")
     )
 
 
-def _minhash_pairs_dense(df: DataFrame, text_col: str, id_col: str, *,
-                         num_perm: int, bands: int, shingle_k: int,
-                         threshold: float,
-                         shingles: DataFrame | None = None) -> DataFrame:
-    """Rep-collapsed MinHash pair plan for duplicate-DENSE corpora.
+def _minhash_pairs_dense(shingles: DataFrame, *, num_perm: int, bands: int,
+                         threshold: float) -> DataFrame:
+    """Rep-collapsed MinHash pair plan for duplicate-DENSE corpora, over
+    the caller's (__id, __bh) shingle frame.
 
     Collapse key: xxhash64 of the SORTED shingle-hash set — docs with
     identical shingle sets have identical signatures, identical band
@@ -443,16 +505,8 @@ def _minhash_pairs_dense(df: DataFrame, text_col: str, id_col: str, *,
     the unguarded sparse plan crawled 20+ min on 1-2 AQE-coalesced
     tasks; this branch returns the identical 250,600-pair set in
     single-digit seconds."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if shingles is not None:
-        src = shingles.select("__id", "__bh")
-    else:
-        src = with_shingle_hashes(
-            df.select(F.col(id_col).alias("__id"),
-                      F.col(text_col).alias("__text")),
-            "__text", shingle_k, "__bh",
-        ).select("__id", "__bh")
-    keyed = src.select(
+    p = shingles.sparkSession.sparkContext.defaultParallelism
+    keyed = shingles.select(
         "__id", "__bh",
         F.xxhash64(F.array_sort("__bh")).alias("__gkey"),
         F.size("__bh").alias("__nsh"))
@@ -471,18 +525,8 @@ def _minhash_pairs_dense(df: DataFrame, text_col: str, id_col: str, *,
     banded = _band_buckets(sig, num_perm=num_perm, bands=bands)
     b = (banded.localCheckpoint(eager=False)
          .repartition(p, "__bucket"))
-    cand = (
-        b.alias("a")
-        .join(b.alias("b"),
-              (F.col("a.__bucket") == F.col("b.__bucket"))
-              & (F.col("a.__id") < F.col("b.__id")))
-        .select(F.col("a.__id").alias("id_a"),
-                F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    texts = rep_sh.select(F.col("__id").alias("__tid"),
-                          F.col("__bh").alias("__vsh"))
-    rep_pairs = _minhash_verify(cand, texts, threshold)
+    rep_pairs = _minhash_verify(_minhash_candidates(b, b, operator.lt),
+                                rep_sh, rep_sh, threshold)
     return _expand_rep_pairs(rep_pairs, reps, members, "jaccard", 1.0,
                              within_filter=F.col("__nsh") > 0)
 
@@ -546,21 +590,18 @@ def minhash_lsh_pairs(
     frame shingles the corpus once for all four consumers instead of
     four times — with no shuffle (checkpoint partitions are read
     locally)."""
-    if shingles is not None:
-        shingled_in = shingles.select("__id", "__bh")
-    else:
-        df = fanout(df)
-        shingled_in = with_shingle_hashes(
-            df.select(F.col(id_col).alias("__id"),
-                      F.col(text_col).alias("__text")),
-            "__text", shingle_k, "__bh",
-        ).select("__id", "__bh")
+    # verify reads the same shingle frame: with ``shingles`` the
+    # caller's checkpointed frame (local partition reads, no recompute
+    # and no exchange), else a scan-stage recompute
+    sh = (shingles.select("__id", "__bh") if shingles is not None
+          else _shingle_hashes(fanout(df), text_col, id_col, shingle_k))
+    shingled_in = sh
     if guard == "auto":
         # the guard's collapse key (hash of the sorted shingle SET)
         # rides through the signature/banding projections so one stats
         # aggregate over the checkpointed rows can split duplicate mass
         # from mere bucket heat — see _dense_decision
-        shingled_in = shingled_in.select(
+        shingled_in = sh.select(
             "__id", F.xxhash64(F.array_sort("__bh")).alias("__gkey"),
             "__bh")
     sig = _minhash_sig(shingled_in, num_perm=num_perm)
@@ -581,55 +622,27 @@ def minhash_lsh_pairs(
     # arrays.
     b = banded.localCheckpoint(eager=False)
     if guard == "auto":
-        thresh = (_DENSE_GUARD_THRESHOLD if dense_threshold is None
-                  else dense_threshold)
         # the stats job forces b's checkpoint materialization — work the
         # candidate join needs anyway, so the sparse path's extra cost
         # is one slim aggregate over the checkpointed rows
-        decision = _dense_decision(
-            b, ["__bucket"], "__gkey", thresh, mod_col="__bucket",
-            row_floor=(0 if dense_threshold is not None
-                       else _DENSE_GUARD_ROW_FLOOR))
+        decision = _guard_decision(b, ["__bucket"], "__gkey",
+                                   dense_threshold, mod_col="__bucket")
         if decision == "collapse":
-            return _minhash_pairs_dense(
-                df, text_col, id_col, num_perm=num_perm, bands=bands,
-                shingle_k=shingle_k, threshold=threshold,
-                shingles=shingles)
+            return _minhash_pairs_dense(sh, num_perm=num_perm, bands=bands,
+                                        threshold=threshold)
         if decision == "pin":
             b = b.repartition(
                 df.sparkSession.sparkContext.defaultParallelism,
                 "__bucket")
-    cand = (
-        b.alias("a")
-        .join(b.alias("b"),
-              (F.col("a.__bucket") == F.col("b.__bucket"))
-              & (F.col("a.__id") < F.col("b.__id")))
-        .select(F.col("a.__id").alias("id_a"),
-                F.col("b.__id").alias("id_b"))
-        # dedup band-duplicate candidates BEFORE the verify joins: a
-        # 16-byte-row exchange here is far cheaper than verifying (and
-        # shuffling two shingle arrays for) the same pair once per
-        # colliding band
-        .dropDuplicates(["id_a", "id_b"])
-    )
     # verify candidates only: exact Jaccard over shingle-HASH sets (same
     # value as over the strings — Jaccard sees only set membership, and
-    # 64-bit collisions are negligible). NB: don't semi-join texts against
-    # the candidate id set here — that would reference `cand` three times
-    # and Spark re-executes the whole candidate subtree per reference;
-    # re-shingling all docs once is the cheaper, single-pass plan.
-    if shingles is not None:
-        # the caller's checkpointed frame: local partition reads, no
-        # recompute and no exchange
-        texts = shingles.select(F.col("__id").alias("__tid"),
-                                F.col("__bh").alias("__vsh"))
-    else:
-        texts = with_shingle_hashes(
-            df.select(F.col(id_col).alias("__tid"),
-                      F.col(text_col).alias("__t")),
-            "__t", shingle_k, "__vsh",
-        ).select("__tid", "__vsh")
-    return _minhash_verify(cand, texts, threshold)
+    # 64-bit collisions are negligible). NB: don't semi-join the shingle
+    # sets against the candidate id set here — that would reference the
+    # candidates three times and Spark re-executes the whole candidate
+    # subtree per reference; re-shingling all docs once is the cheaper,
+    # single-pass plan.
+    return _minhash_verify(_minhash_candidates(b, b, operator.lt),
+                           sh, sh, threshold)
 
 
 def _plain_emission_sampled(df: DataFrame, text_col: str, id_col: str,
@@ -649,11 +662,9 @@ def _plain_emission_sampled(df: DataFrame, text_col: str, id_col: str,
     output. ``hot``: the max_doc_freq stopword set, applied to the
     sample so the estimate sees the same token stream the join
     would."""
-    samp = with_shingle_hashes(
-        df.sample(fraction=p, seed=42)
-        .select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")),
-        "__t", shingle_k, "__sh",
-    ).select("__id", F.explode("__sh").alias("tok"))
+    samp = _shingle_hashes(df.sample(fraction=p, seed=42), text_col, id_col,
+                           shingle_k).select(
+        "__id", F.explode("__bh").alias("tok"))
     if hot is not None:
         samp = samp.join(hot, "tok", "left_anti")
     return int(_predicted_emission(samp, ["tok"]) / (p * p))
@@ -725,11 +736,8 @@ def jaccard_dup_pairs(
     # explode shingle HASHES, not strings: Jaccard only needs set
     # membership, and the inverted-index shuffle moves 8-byte longs
     # instead of k-word strings (~4x less shuffle volume at scale)
-    toks = with_shingle_hashes(
-        fanout(df).select(F.col(id_col).alias("__id"),
-                          F.col(text_col).alias("__t")),
-        "__t", shingle_k, "__sh",
-    ).select("__id", F.explode("__sh").alias("tok"))
+    toks = _shingle_hashes(fanout(df), text_col, id_col, shingle_k).select(
+        "__id", F.explode("__bh").alias("tok"))
     if max_doc_freq is not None:
         hot = (
             toks.groupBy("tok").agg(F.count("*").alias("__df"))
@@ -851,35 +859,43 @@ def _pos_ok(num: int, den: int) -> Column:
     )
 
 
-def _jaccard_candidates(pref: DataFrame, num: int, den: int) -> DataFrame:
-    """Prefix-token self-join (+ size/positional filters) → distinct
-    (id_a, id_b) candidates — shared by the sparse and dense plans."""
+def _jaccard_candidates(a: DataFrame, b: DataFrame, num: int, den: int,
+                        id_pred: Callable,
+                        ids: tuple[str, str] = _PAIR_IDS) -> DataFrame:
+    """Prefix-token join of two prefix-row frames (+ size/positional
+    filters) → distinct candidate id pairs under ``id_pred``, ids[0]
+    from ``a`` and ids[1] from ``b`` — shared by the sparse and dense
+    plans (one frame both sides, ``<``) and the index probe (batch vs
+    stored prefixes, ``!=``)."""
+    x, y = ids
     return (
-        pref.alias("a")
+        a.alias("a")
         .join(
-            pref.alias("b"),
+            b.alias("b"),
             (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.__id") < F.col("b.__id"))
+            & id_pred(F.col("a.__id"), F.col("b.__id"))
             & _size_ok(num, den) & _pos_ok(num, den),
         )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+        .select(F.col("a.__id").alias(x), F.col("b.__id").alias(y))
         .distinct()
     )
 
 
-def _jaccard_verify(cand: DataFrame, docs: DataFrame,
-                    threshold: float) -> DataFrame:
-    """Re-attach both sides' sorted token arrays and apply the true
-    float threshold — shared verify tail of the sparse and dense
-    plans."""
+def _jaccard_verify(cand: DataFrame, da: DataFrame, db: DataFrame,
+                    threshold: float,
+                    ids: tuple[str, str] = _PAIR_IDS) -> DataFrame:
+    """Re-attach both sides' sorted token arrays — ids[0] from the
+    (__id, __toks, sz) frame ``da``, ids[1] from ``db`` — and apply the
+    true float threshold: the verify tail of the sparse and dense plans
+    (one docs frame both sides) and the index probe (batch vs stored
+    docs)."""
+    x, y = ids
     return (
         cand
-        .join(docs.select(F.col("__id").alias("id_a"),
-                          F.col("__toks").alias("__ta"),
-                          F.col("sz").alias("sz_a")), "id_a")
-        .join(docs.select(F.col("__id").alias("id_b"),
-                          F.col("__toks").alias("__tb"),
-                          F.col("sz").alias("sz_b")), "id_b")
+        .join(da.select(F.col("__id").alias(x), F.col("__toks").alias("__ta"),
+                        F.col("sz").alias("sz_a")), x)
+        .join(db.select(F.col("__id").alias(y), F.col("__toks").alias("__tb"),
+                        F.col("sz").alias("sz_b")), y)
         .withColumn("inter", F.size(F.array_intersect("__ta", "__tb")))
         .withColumn(
             "jaccard",
@@ -887,7 +903,7 @@ def _jaccard_verify(cand: DataFrame, docs: DataFrame,
                          F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(x, y, "jaccard")
     )
 
 
@@ -915,9 +931,46 @@ def _jaccard_pairs_dense(docs: DataFrame, threshold: float,
                           "__id", "left_semi")
                 .localCheckpoint(eager=False))
     pref = _prefix_rows(rep_docs, num, den).repartition(p, "tok")
-    rep_pairs = _jaccard_verify(_jaccard_candidates(pref, num, den),
-                                rep_docs, threshold)
+    rep_pairs = _jaccard_verify(
+        _jaccard_candidates(pref, pref, num, den, operator.lt),
+        rep_docs, rep_docs, threshold)
     return _expand_rep_pairs(rep_pairs, reps, members, "jaccard", 1.0)
+
+
+def _jaccard_sorted_docs(toks: DataFrame, dfreq: DataFrame,
+                         max_doc_freq: int | None) -> DataFrame:
+    """(__id, __toks, sz) with each doc's tokens sorted rarest-first
+    under the (df, tok) total order of ``dfreq`` — the sorted docs of
+    the batch prefix plan (its own dfreq) and of the index legs (the
+    frozen stored dfreq). A LEFT join: tokens absent from dfreq
+    (probe-side tokens unseen at index build) rank df = 0 — they
+    extend the frozen total order without reordering any
+    stored prefix, which is what keeps incremental probes EXACT (the
+    AllPairs/PPJoin prefix theorem needs only that both sides sort
+    under one consistent total order; stored docs contain no unseen
+    tokens, so their build-time sort already agrees with the extended
+    order). ``max_doc_freq`` drops tokens whose FROZEN df exceeds the
+    cutoff — dfreq must be the UNfiltered table so a probe can tell
+    build-time-hot tokens (dropped, everywhere consistently) from
+    unseen ones (df 0, kept); sizes are computed over the reduced sets
+    so numerator and denominator stay consistent. sz is LONG — the
+    filters multiply it by the 1e6-grain threshold rationals and int32
+    would overflow under ANSI."""
+    joined = (toks.join(dfreq, "tok", "left")
+              .withColumn("__df", F.coalesce(F.col("__df"), F.lit(0))))
+    if max_doc_freq is not None:
+        joined = joined.filter(F.col("__df") <= max_doc_freq)
+    return (
+        joined
+        .groupBy("__id")
+        .agg(F.array_sort(F.collect_list(F.struct("__df", "tok")))
+             .alias("__st"))
+        .select(
+            "__id",
+            F.transform("__st", lambda s: s["tok"]).alias("__toks"),
+            F.size("__st").cast("long").alias("sz"),
+        )
+    )
 
 
 def _jaccard_prefix_filtered(toks: DataFrame, threshold: float,
@@ -930,26 +983,11 @@ def _jaccard_prefix_filtered(toks: DataFrame, threshold: float,
     ``guard``/``dense_threshold``: the dense-corpus emission guard —
     stats over the PREFIX rows (a cheap projection of the checkpointed
     docs frame), reroute to _jaccard_pairs_dense past the threshold."""
-    num = int(threshold * _JAC_DEN)
-    den = _JAC_DEN
-
+    num, den = int(threshold * _JAC_DEN), _JAC_DEN
+    # each doc's shingles sorted rarest-first under the corpus's own
+    # (df, tok) order (every token is in its own dfreq, so the left
+    # join keeps every row); max_doc_freq was already applied upstream
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("__df"))
-    # each doc's shingles sorted rarest-first (global (df, tok) order)
-    docs = (
-        toks.join(dfreq, "tok")
-        .groupBy("__id")
-        .agg(F.array_sort(F.collect_list(F.struct("__df", "tok")))
-             .alias("__st"))
-        .select(
-            "__id",
-            F.transform("__st", lambda s: s["tok"]).alias("__toks"),
-            # LONG, not the int F.size returns: the size/positional
-            # filters multiply sz by the 1e6-grain threshold rationals,
-            # and int32 overflows (ANSI abort) past ~1100 distinct
-            # shingles at t=0.95 — routine for real web documents
-            F.size("__st").cast("long").alias("sz"),
-        )
-    )
     # this subtree feeds FOUR plan sites (both prefix self-join sides +
     # both verify re-attach joins); exchange reuse only saves the
     # identical self-join sides, and AQE's broadcast of the re-attach
@@ -957,11 +995,9 @@ def _jaccard_prefix_filtered(toks: DataFrame, threshold: float,
     # (measured: 4x ~6 s at sf0.1 — the row's dominant cost). A lazy
     # localCheckpoint materializes it once, distributed (executor-local
     # blocks, MEMORY_AND_DISK), same device dedup_clusters already uses.
-    docs = docs.localCheckpoint(eager=False)
+    docs = _jaccard_sorted_docs(toks, dfreq, None).localCheckpoint(eager=False)
     pref = _prefix_rows(docs, num, den)
     if guard == "auto":
-        thresh = (_DENSE_GUARD_THRESHOLD if dense_threshold is None
-                  else dense_threshold)
         # the stats job forces docs' checkpoint materialization — work
         # every later stage needs anyway; emission is measured on the
         # PREFIX rows (what the join actually sees, so stopword-df
@@ -978,14 +1014,16 @@ def _jaccard_prefix_filtered(toks: DataFrame, threshold: float,
         # hot tokens can ALL miss a mod-16 residue, sampling the stats
         # to zero). The 455 s sparse crawl those shortcuts caused vs
         # 13.5 s guarded is the round's measured counterexample.
-        decision = _dense_decision(pref_g, ["tok"], "__gkey", thresh)
+        decision = _guard_decision(pref_g, ["tok"], "__gkey",
+                                   dense_threshold, banded=False)
         if decision == "collapse":
             return _jaccard_pairs_dense(docs, threshold, num, den)
         if decision == "pin":
             pref = pref.repartition(
                 docs.sparkSession.sparkContext.defaultParallelism, "tok")
-    return _jaccard_verify(_jaccard_candidates(pref, num, den),
-                           docs, threshold)
+    return _jaccard_verify(
+        _jaccard_candidates(pref, pref, num, den, operator.lt),
+        docs, docs, threshold)
 
 
 def simhash_fingerprint_numpy(bits: int):
@@ -1149,36 +1187,39 @@ def _simhash_validate(max_hamming: int, bands: int) -> None:
         raise ValueError(f"bands ({bands}) must be <= 63 (63-bit fingerprint)")
 
 
-def _simhash_join(banded: DataFrame, bands: int,
-                  max_hamming: int) -> DataFrame:
-    """Banded (band, key) self-join with CANONICAL-BAND emission — the
-    shared candidate+verify stage of the sparse and dense simhash
-    plans: a pair agreeing in several bands is emitted only by the
-    FIRST band whose chunks agree (= first zero chunk of the
-    fingerprint XOR — a pure bit expression), so no dropDuplicates
-    pass over the raw candidate stream is needed. The r8 shape (bucket
-    collect_list + O(k²) array-expression pair expansion + dedup
-    shuffle) built the whole k² block of a hot bucket as ONE array in
-    ONE task — at sf0.1 the largest bucket held 2642 docs = 3.5M
-    structs in a single row, and the 23.4M-row dedup shuffle followed
-    (measured 30 s; this shape is ~3 s). A join streams the same k²
-    pairs through normal task parallelism, and the hamming +
-    canonical-band filters run inside the join projection so only
-    final pairs ever materialize."""
+def _simhash_join(a: DataFrame, b: DataFrame, bands: int,
+                  max_hamming: int, id_pred: Callable,
+                  ids: tuple[str, str] = _PAIR_IDS) -> DataFrame:
+    """(band, key) join of two banded-fingerprint frames under
+    ``id_pred`` (ids[0] from ``a``, ids[1] from ``b``) with
+    CANONICAL-BAND emission — the shared candidate+verify stage of the
+    sparse and dense simhash plans (one frame both sides, ``<``) and the
+    index probe (batch vs stored bands, ``!=``): a pair agreeing in
+    several bands is emitted only by the FIRST band whose chunks agree
+    (= first zero chunk of the fingerprint XOR — a pure bit
+    expression), so no dropDuplicates pass over the raw candidate
+    stream is needed. The r8 shape (bucket collect_list + O(k²)
+    array-expression pair expansion + dedup shuffle) built the whole k²
+    block of a hot bucket as ONE array in ONE task — at sf0.1 the
+    largest bucket held 2642 docs = 3.5M structs in a single row, and
+    the 23.4M-row dedup shuffle followed (measured 30 s; this shape is
+    ~3 s). A join streams the same k² pairs through normal task
+    parallelism, and the hamming + canonical-band filters run inside
+    the join projection so only final pairs ever materialize."""
+    x, y = ids
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     hamming = F.bit_count(xor)
     return (
-        banded.alias("a")
+        a.alias("a")
         .join(
-            banded.alias("b"),
+            b.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.__id") < F.col("b.__id")),
+            & id_pred(F.col("a.__id"), F.col("b.__id")),
         )
         .filter((F.col("a.band") == _simhash_first_band(xor, bands))
                 & (hamming <= F.lit(max_hamming)))
-        .select(F.col("a.__id").alias("id_a"),
-                F.col("b.__id").alias("id_b"),
+        .select(F.col("a.__id").alias(x), F.col("b.__id").alias(y),
                 hamming.alias("hamming"))
     )
 
@@ -1202,7 +1243,8 @@ def _simhash_pairs_dense(fp: DataFrame, *, bands: int,
     banded = (_simhash_banded(rep_fp, bands)
               .localCheckpoint(eager=False)
               .repartition(p, "band", "key"))
-    rep_pairs = _simhash_join(banded, bands, max_hamming)
+    rep_pairs = _simhash_join(banded, banded, bands, max_hamming,
+                              operator.lt)
     members = fp.select(F.col("simhash").alias("__gkey"), "__id")
     reps_k = reps.select(F.col("simhash").alias("__gkey"), "__rid")
     return _expand_rep_pairs(rep_pairs, reps_k, members, "hamming", 0)
@@ -1251,12 +1293,8 @@ def simhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
         # and the group count is bounded by bands·2^chunk, so no
         # bucket subsampling either. guard="off" restores the
         # pure-lazy r11 plan.
-        thresh = (_DENSE_GUARD_THRESHOLD * 100 if dense_threshold is None
-                  else dense_threshold)
-        decision = _dense_decision(
-            banded, ["band", "key"], "simhash", thresh,
-            row_floor=(0 if dense_threshold is not None
-                       else _DENSE_GUARD_ROW_FLOOR))
+        decision = _guard_decision(banded, ["band", "key"], "simhash",
+                                   dense_threshold, scale=100)
         if decision == "collapse":
             return _simhash_pairs_dense(fp, bands=bands,
                                         max_hamming=max_hamming)
@@ -1264,7 +1302,7 @@ def simhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
             banded = banded.repartition(
                 fp.sparkSession.sparkContext.defaultParallelism,
                 "band", "key")
-    return _simhash_join(banded, bands, max_hamming)
+    return _simhash_join(banded, banded, bands, max_hamming, operator.lt)
 
 
 #: fixed-point unit for cross-engine-exact cosine: products are rounded
@@ -1308,6 +1346,14 @@ def norm_units(v: Column) -> Column:
         v, F.lit(0).cast("long"),
         lambda acc, x: acc + _prod_units(x, x),
     )
+
+
+def _vec_payload(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(__id, __v, __nu) rows: id, vector and its norm units, folded once
+    per vector before any pairwise join (see norm_units)."""
+    return df.select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
+    ).withColumn("__nu", norm_units(F.col("__v")))
 
 
 def dot_units(a: Column, b: Column) -> Column:
@@ -1357,17 +1403,19 @@ def embedding_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
     replaced shipped every pair's two vectors through Arrow — 2M pairs
     × 128 doubles = ~2 GB at sf0.1 for a 920-row result; this ships
     n×nblocks input vectors and the result (sf0.1 gate row 32.1 s ->
-    22.9 s)."""
+    22.9 s).
+
+    Rows with a null vector are dropped first: their cosine is null, so
+    they can never reach the threshold."""
     if impl not in ("expr", "block"):
         raise ValueError(f"unknown impl: {impl!r} (expected 'expr' or "
                          "'block')")
+    df = fanout(df.filter(F.col(vec_col).isNotNull()))
     if impl == "block":
-        return _embedding_pairs_block(fanout(df), vec_col, id_col,
+        return _embedding_pairs_block(df, vec_col, id_col,
                                       threshold=threshold,
                                       nblocks=nblocks)
-    v = fanout(df).select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).withColumn("__nu", norm_units(F.col("__v")))  # once per vector
+    v = _vec_payload(df, id_col, vec_col)
     pairs = (
         v.alias("a")
         .join(F.broadcast(v.alias("b")), F.col("a.__id") < F.col("b.__id"))
@@ -1469,6 +1517,31 @@ def score_units_block(A, B, ida, idb, thr):
             np.concatenate(out_c))
 
 
+def _pairs_schema(id_type) -> T.StructType:
+    """(id_a, id_b, cos) output schema of the block scorers."""
+    return T.StructType([T.StructField("id_a", id_type),
+                         T.StructField("id_b", id_type),
+                         T.StructField("cos", T.DoubleType())])
+
+
+def _score_frames(pa, pb, thr: float):
+    """(id_a, id_b, cos) pandas frame of the pairs between two
+    (__id, __v) pandas frames that pass ``thr`` — score_units_block over
+    the stacked vectors, shared by the all-pairs and LSH block
+    scorers."""
+    import numpy as np
+    import pandas as pd
+
+    if not len(pa) or not len(pb):
+        return pd.DataFrame({"id_a": pa["__id"][:0], "id_b": pb["__id"][:0],
+                             "cos": pd.Series(dtype="float64")})
+    A = np.stack([np.asarray(x, dtype=np.float64) for x in pa["__v"]])
+    B = np.stack([np.asarray(x, dtype=np.float64) for x in pb["__v"]])
+    ida, idb = pa["__id"].to_numpy(), pb["__id"].to_numpy()
+    ii, jj, cc = score_units_block(A, B, ida, idb, thr)
+    return pd.DataFrame({"id_a": ida[ii], "id_b": idb[jj], "cos": cc})
+
+
 def _embedding_pairs_block(df: DataFrame, vec_col: str, id_col: str,
                            *, threshold: float,
                            nblocks: int | None) -> DataFrame:
@@ -1489,12 +1562,6 @@ def _embedding_pairs_block(df: DataFrame, vec_col: str, id_col: str,
     loses columns."""
     import pandas as pd
 
-    id_field = df.schema[id_col]
-    out_schema = T.StructType([
-        T.StructField("id_a", id_field.dataType),
-        T.StructField("id_b", id_field.dataType),
-        T.StructField("cos", T.DoubleType()),
-    ])
     spark = df.sparkSession
     if nblocks is None:
         nblocks = max(2, spark.sparkContext.defaultParallelism)
@@ -1508,31 +1575,15 @@ def _embedding_pairs_block(df: DataFrame, vec_col: str, id_col: str,
         F.explode(F.array(*[F.lit(i) for i in range(nblocks)]))
         .alias("__blk"),
         F.lit(1).alias("__side"))
-    thr = threshold
 
     def _score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        pa = pdf[pdf["__side"] == 0]
-        pb = pdf[pdf["__side"] == 1]
-        empty = pd.DataFrame({
-            "id_a": pd.Series(dtype=pdf["__id"].dtype),
-            "id_b": pd.Series(dtype=pdf["__id"].dtype),
-            "cos": pd.Series(dtype="float64"),
-        })
-        if not len(pa) or not len(pb):
-            return empty
-        A = np.stack([np.asarray(x, dtype=np.float64) for x in pa["__v"]])
-        B = np.stack([np.asarray(x, dtype=np.float64) for x in pb["__v"]])
-        ida = pa["__id"].to_numpy()
-        idb = pb["__id"].to_numpy()
-        ii, jj, cc = score_units_block(A, B, ida, idb, thr)
-        return pd.DataFrame({"id_a": ida[ii], "id_b": idb[jj], "cos": cc})
+        return _score_frames(pdf[pdf["__side"] == 0],
+                             pdf[pdf["__side"] == 1], threshold)
 
     return (
         blocked.unionByName(everything)
         .groupBy("__blk")
-        .applyInPandas(_score, out_schema)
+        .applyInPandas(_score, _pairs_schema(df.schema[id_col].dataType))
     )
 
 
@@ -1978,11 +2029,8 @@ def _minhash_legs(df: DataFrame, text_col: str, id_col: str, path: str,
             "signature family: its stored buckets would not line up and "
             "probing it would silently miss pairs. Rebuild it into a "
             "fresh path with set_minhash_index.")
-    shingled = with_shingle_hashes(
-        fanout(df).select(F.col(id_col).alias("__id"),
-                          F.col(text_col).alias("__t")),
-        "__t", p["shingle_k"], "__bh",
-    ).select("__id", "__bh").localCheckpoint(eager=False)
+    shingled = _shingle_hashes(fanout(df), text_col, id_col,
+                               p["shingle_k"]).localCheckpoint(eager=False)
     sig = _minhash_sig(shingled, num_perm=p["num_perm"])
     return {"shingles": shingled,
             "buckets": _band_buckets(sig, num_perm=p["num_perm"],
@@ -2002,26 +2050,10 @@ def _minhash_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     # tasks; the broadcast batch reaches all of them) and a no-op at
     # real scale, where index legs always carry more splits than cores.
     idx = fanout(spark.read.parquet(f"{path}/buckets"))
-    cand = (
-        legs["buckets"].alias("n")
-        .join(idx.alias("o"), "__bucket")
-        .select(F.col("n.__id").alias("new_id"),
-                F.col("o.__id").alias("index_id"))
-        .filter(F.col("new_id") != F.col("index_id"))
-        .dropDuplicates(["new_id", "index_id"])
-    )
-    old_sh = spark.read.parquet(f"{path}/shingles")
-    s1 = cand.join(
-        legs["shingles"].select(F.col("__id").alias("new_id"),
-                                F.col("__bh").alias("__sa")), "new_id")
-    s2 = s1.join(
-        old_sh.select(F.col("__id").alias("index_id"),
-                      F.col("__bh").alias("__sb")), "index_id")
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
-    uni = (F.size("__sa") + F.size("__sb")).cast("double") - inter
-    return (s2.withColumn("jaccard", F.try_divide(inter, uni))
-            .filter(F.col("jaccard") >= p["threshold"])
-            .select("new_id", "index_id", "jaccard"))
+    cand = _minhash_candidates(legs["buckets"], idx, operator.ne, _PROBE_IDS)
+    return _minhash_verify(cand, legs["shingles"],
+                           spark.read.parquet(f"{path}/shingles"),
+                           p["threshold"], _PROBE_IDS)
 
 
 def _minhash_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
@@ -2141,25 +2173,11 @@ def _simhash_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     (band, key) — 28-byte rows either side, AQE broadcasts the batch
     when it's small — with hamming + canonical-band (exactly-once)
     filters inside the join projection."""
-    bands = p["bands"]
     # fanout: same index-leg scan-parallelism guard as _minhash_probe
-    idx = fanout(spark.read.parquet(f"{path}/banded"))
-    xor = F.col("n.simhash").bitwiseXOR(F.col("o.simhash"))
-    hamming = F.bit_count(xor)
-    return (
-        legs["banded"].alias("n")
-        .join(
-            idx.alias("o"),
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.key") == F.col("o.key"))
-            & (F.col("n.__id") != F.col("o.__id")),
-        )
-        .filter((F.col("n.band") == _simhash_first_band(xor, bands))
-                & (hamming <= F.lit(p["max_hamming"])))
-        .select(F.col("n.__id").alias("new_id"),
-                F.col("o.__id").alias("index_id"),
-                hamming.alias("hamming"))
-    )
+    return _simhash_join(legs["banded"],
+                         fanout(spark.read.parquet(f"{path}/banded")),
+                         p["bands"], p["max_hamming"], operator.ne,
+                         _PROBE_IDS)
 
 
 def _simhash_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
@@ -2233,46 +2251,8 @@ def _jaccard_batch_toks(df: DataFrame, text_col: str, id_col: str,
     legs, materialized once (localCheckpoint) so the dfreq/docs/prefix
     legs stay consistent for non-deterministic inputs — the same
     contract as _minhash_legs."""
-    return with_shingle_hashes(
-        fanout(df).select(F.col(id_col).alias("__id"),
-                          F.col(text_col).alias("__t")),
-        "__t", shingle_k, "__sh",
-    ).select("__id", F.explode("__sh").alias("tok")) \
-        .localCheckpoint(eager=False)
-
-
-def _jaccard_sorted_docs(toks: DataFrame, dfreq: DataFrame,
-                         max_doc_freq: int | None) -> DataFrame:
-    """(__id, __toks, sz) with each doc's tokens sorted rarest-first
-    under the (df, tok) total order of ``dfreq``. A LEFT join: tokens
-    absent from dfreq (probe-side tokens unseen at index build) rank
-    df = 0 — they extend the frozen total order without reordering any
-    stored prefix, which is what keeps incremental probes EXACT (the
-    AllPairs/PPJoin prefix theorem needs only that both sides sort
-    under one consistent total order; stored docs contain no unseen
-    tokens, so their build-time sort already agrees with the extended
-    order). ``max_doc_freq`` drops tokens whose FROZEN df exceeds the
-    cutoff — dfreq must be the UNfiltered table so a probe can tell
-    build-time-hot tokens (dropped, everywhere consistently) from
-    unseen ones (df 0, kept); sizes are computed over the reduced sets
-    so numerator and denominator stay consistent. sz is LONG — the
-    filters multiply it by the 1e6-grain threshold rationals and int32
-    would overflow under ANSI."""
-    joined = (toks.join(dfreq, "tok", "left")
-              .withColumn("__df", F.coalesce(F.col("__df"), F.lit(0))))
-    if max_doc_freq is not None:
-        joined = joined.filter(F.col("__df") <= max_doc_freq)
-    return (
-        joined
-        .groupBy("__id")
-        .agg(F.array_sort(F.collect_list(F.struct("__df", "tok")))
-             .alias("__st"))
-        .select(
-            "__id",
-            F.transform("__st", lambda s: s["tok"]).alias("__toks"),
-            F.size("__st").cast("long").alias("sz"),
-        )
-    )
+    return _shingle_hashes(fanout(df), text_col, id_col, shingle_k).select(
+        "__id", F.explode("__bh").alias("tok")).localCheckpoint(eager=False)
 
 
 def _jaccard_toks_legs(toks: DataFrame, dfreq: DataFrame, p: dict) -> dict:
@@ -2314,8 +2294,7 @@ def _jaccard_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     the size + positional filters in the join condition, candidate pairs
     dedup, then one join to the batch's sorted docs and one to the
     stored docs verifies with exact array_intersect."""
-    threshold = p["threshold"]
-    num, den = int(threshold * _JAC_DEN), _JAC_DEN
+    num, den = int(p["threshold"] * _JAC_DEN), _JAC_DEN
     # fanout the index prefix scan — same single-task-emission hazard
     # as _minhash_probe; on a template-dense corpus the quadratic
     # candidate emission otherwise runs on ONE task (r11: the 10x probe
@@ -2327,36 +2306,11 @@ def _jaccard_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     # stream and the emission single-cores; an unconditional
     # repartition is batch-sized, slim rows, and AQE-immune
     pref = legs["prefixes"].repartition(spark.sparkContext.defaultParallelism)
-    cand = (
-        pref.alias("a")
-        .join(
-            idx_pref.alias("b"),
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.__id") != F.col("b.__id"))
-            & _size_ok(num, den) & _pos_ok(num, den),
-        )
-        .select(F.col("a.__id").alias("new_id"),
-                F.col("b.__id").alias("index_id"))
-        .distinct()
-    )
-    idx_docs = spark.read.parquet(f"{path}/docs")
-    return (
-        cand
-        .join(legs["docs"].select(F.col("__id").alias("new_id"),
-                                  F.col("__toks").alias("__ta"),
-                                  F.col("sz").alias("sz_a")), "new_id")
-        .join(idx_docs.select(F.col("__id").alias("index_id"),
-                              F.col("__toks").alias("__tb"),
-                              F.col("sz").alias("sz_b")), "index_id")
-        .withColumn("inter", F.size(F.array_intersect("__ta", "__tb")))
-        .withColumn(
-            "jaccard",
-            F.try_divide(F.col("inter"),
-                         F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "index_id", "jaccard")
-    )
+    cand = _jaccard_candidates(pref, idx_pref, num, den, operator.ne,
+                               _PROBE_IDS)
+    return _jaccard_verify(cand, legs["docs"],
+                           spark.read.parquet(f"{path}/docs"),
+                           p["threshold"], _PROBE_IDS)
 
 
 def _jaccard_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,

@@ -16,12 +16,14 @@ centroids — same bucket-join shape.
 from __future__ import annotations
 
 import math
+import operator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rayforce_spark.datapipe.dedup import (
+    _vec_payload,
     cosine_from_units,
     dot_units,
     norm_units,
@@ -82,14 +84,20 @@ def knn_cosine(
             F.sqrt(F.col("__qn") * F.col("__cn")),
         )
     )
-    scored = F.broadcast(q).crossJoin(c).select(
+    return _top_k(F.broadcast(q).crossJoin(c).select(
         "query_id", "neighbor_id", cos_expr.alias("cos"),
-    )
+    ), k)
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, neighbor_id, cos) rows per query with
+    their 1-based rank: cos descending, ties to the smaller
+    neighbor_id — the re-rank tail of every top-k search here."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
@@ -457,35 +465,88 @@ def knn_ivf(
         # no element type and breaks _nearest — the correct result is
         # simply no neighbors, with the contract schema (dtypes derived
         # from the inputs, not hardcoded)
-        return (
-            queries.select(F.col(qid).alias("query_id")).limit(0)
-            .withColumn("neighbor_id",
-                        F.lit(None).cast(corpus.schema[id_col].dataType))
-            .withColumn("cos", F.lit(0.0))
-            .withColumn("rank", F.lit(1))
-        )
+        return _no_neighbors(queries, qid, corpus.schema[id_col].dataType)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    ).withColumn("__list", _nearest_pandas(centroids, 1)(F.col("__cv"))[0]) \
-        .withColumn("__cn", norm_units(F.col("__cv")))
+    ).withColumn("__list", _nearest_pandas(centroids, 1)(F.col("__cv"))[0])
+    return _ivf_top_k(c, queries, qid, vec_col, centroids, nprobe, k)
+
+
+def _no_neighbors(queries: DataFrame, qid: str, id_type) -> DataFrame:
+    """The zero-row (query_id, neighbor_id, cos, rank) result of a probe
+    against an index with no centroids."""
+    return (queries.select(F.col(qid).alias("query_id")).limit(0)
+            .withColumn("neighbor_id", F.lit(None).cast(id_type))
+            .withColumn("cos", F.lit(0.0))
+            .withColumn("rank", F.lit(1)))
+
+
+def _ivf_top_k(c: DataFrame, queries: DataFrame, qid: str, vec_col: str,
+               centroids: list[list[float]], nprobe: int,
+               k: int) -> DataFrame:
+    """The probe shared by knn_ivf and knn_ivf_indexed: queries explode
+    to their ``nprobe`` nearest lists and join the list-assigned corpus
+    ``c`` (neighbor_id, __cv, __list) on ``__list``; the exact
+    fixed-point cosine re-ranks the top ``k``."""
+    c = c.withColumn("__cn", norm_units(F.col("__cv")))
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv")
     ).withColumn(
         "__list", F.explode(_nearest_pandas(centroids, nprobe)(F.col("__qv")))
     ).withColumn("__qn", norm_units(F.col("__qv")))
-    cand = q.join(c, "__list").select(
+    return _top_k(q.join(c, "__list").select(
         "query_id", "neighbor_id",
         cosine_from_units(
             dot_units(F.col("__qv"), F.col("__cv")),
             F.col("__qn"), F.col("__cn"),
         ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
+    ), k)
+
+
+def _lsh_cosine_pairs(a: DataFrame, b: DataFrame, id_pred, ids, *,
+                      dim: int, planes: int, tables: int,
+                      seed: int) -> DataFrame:
+    """(ids[0], ids[1], cos) for every pair of rows of the
+    (__id, __v, __nu) payload frames ``a`` and ``b`` that share a
+    hyperplane-LSH (tbl, key) bucket and pass ``id_pred``, scored with
+    the exact fixed-point cosine — the shared stage of knn_lsh (queries
+    vs corpus, every pair) and embedding_dup_pairs_lsh (one frame both
+    sides, ``<``).
+
+    Candidate retrieval and the multi-table dropDuplicates are SLIM:
+    the vector column is pruned before the (tbl, key) join, so its
+    exchange and the pair-level dedup move only 16-byte id rows (the r7
+    minhash lesson: deduping pairs that still carry their payload
+    shuffles O(candidates × vector) bytes — measured 550 MB at sf0.1,
+    ~37× the slim plan). Vectors re-attach AFTER the dedup via one hash
+    join per side (ReusedExchange / runtime broadcast when both sides
+    are one frame), so vector bytes cross the wire O(n) per side, not
+    O(candidate pairs)."""
+    x, y = ids
+    buckets = _bucket_structs("__v", dim=dim, planes=planes, tables=tables,
+                              seed=seed)
+
+    def slim(df):
+        return (df.select("__id", F.explode(buckets).alias("bk"))
+                .select("__id", "bk.tbl", "bk.key"))
+
+    def vecs(df, out, tag):
+        return df.select(F.col("__id").alias(out),
+                         F.col("__v").alias(f"__v{tag}"),
+                         F.col("__nu").alias(f"__n{tag}"))
+
     return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        slim(a).alias("a")
+        .join(slim(b).alias("b"),
+              (F.col("a.tbl") == F.col("b.tbl"))
+              & (F.col("a.key") == F.col("b.key"))
+              & id_pred(F.col("a.__id"), F.col("b.__id")))
+        .select(F.col("a.__id").alias(x), F.col("b.__id").alias(y))
+        .dropDuplicates([x, y])
+        .join(vecs(a, x, "a"), x).join(vecs(b, y, "b"), y)
+        .select(x, y, cosine_from_units(
+            dot_units(F.col("__va"), F.col("__vb")),
+            F.col("__na"), F.col("__nb")).alias("cos"))
     )
 
 
@@ -505,49 +566,18 @@ def knn_lsh(
     """Approximate top-k: random-hyperplane LSH candidate retrieval +
     exact cosine re-rank. Each side computes ``tables`` bucket keys; the
     join is on (table, key) — a plain shuffle join Catalyst/AQE can
-    broadcast or skew-split. Candidate retrieval and the multi-table
-    dropDuplicates are SLIM (id pairs only); vectors re-attach after the
-    dedup via per-side hash joins, so vector bytes move O(n) per side,
-    not O(candidate pairs). Bucket keys are the Arrow keys (bit-equal
+    broadcast or skew-split. Candidate retrieval is SLIM (see
+    _lsh_cosine_pairs). Bucket keys are the Arrow keys (bit-equal
     to the expression fold, see _bucket_keys_pandas). Returns (query_id,
     neighbor_id, cos, rank)."""
-    qid = query_id_col or id_col
-
-    def payload(df, idc, out_id):
-        return df.select(
-            F.col(idc).alias(out_id), F.col(vec_col).alias(f"__{out_id}_v")
-        ).withColumn(f"__{out_id}_n", norm_units(F.col(f"__{out_id}_v")))
-
-    def slim_buckets(sel, out_id):
-        buckets = _bucket_structs(
-            f"__{out_id}_v", dim=dim, planes=planes, tables=tables,
-            seed=seed)
-        return sel.select(out_id, F.explode(buckets).alias("bk")) \
-                  .select(out_id, "bk.tbl", "bk.key")
-
-    qp = payload(queries, qid, "query_id")
-    cp = payload(corpus, id_col, "neighbor_id")
-    cand = (
-        slim_buckets(qp, "query_id")
-        .join(slim_buckets(cp, "neighbor_id"), ["tbl", "key"])
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .join(qp, "query_id").join(cp, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            cosine_from_units(
-                dot_units(F.col("__query_id_v"), F.col("__neighbor_id_v")),
-                F.col("__query_id_n"), F.col("__neighbor_id_n"),
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    # every bucket-sharing pair is a candidate: no id predicate, so a
+    # query that is also a corpus row ranks itself
+    cand = _lsh_cosine_pairs(
+        _vec_payload(queries, query_id_col or id_col, vec_col),
+        _vec_payload(corpus, id_col, vec_col),
+        lambda a, b: F.lit(True), ("query_id", "neighbor_id"),
+        dim=dim, planes=planes, tables=tables, seed=seed)
+    return _top_k(cand, k)
 
 
 def embedding_dup_pairs_lsh(
@@ -582,27 +612,20 @@ def embedding_dup_pairs_lsh(
     4-plane/8-table default trades a few-per-mille miss rate for ~16×
     smaller candidate buckets.
 
-    Scale: candidate generation is SLIM — the bucket self-join and the
-    multi-table dropDuplicates move only (id_a, id_b) 16-byte rows (the
-    r7 minhash lesson: deduping pairs that still carry their payload
-    shuffles O(candidates × vector) bytes — measured 550 MB at sf0.1,
-    ~37× the slim plan). Vectors re-attach AFTER the dedup via two hash
-    joins against ONE (id, vector, norm) subtree (ReusedExchange /
-    runtime broadcast), so vector bytes cross the wire O(n) — once per
-    side — not O(candidate pairs). Hot buckets ARE near-duplicate mass
-    (the pairs we want), so bucket skew is signal; AQE splits oversized
-    partitions.
+    Scale: ``expr`` candidate generation is SLIM and vectors re-attach
+    after the dedup (see _lsh_cosine_pairs). Hot buckets ARE
+    near-duplicate mass (the pairs we want), so bucket skew is signal;
+    AQE splits oversized partitions.
     """
     from rayforce_spark.datapipe.dedup import fanout
 
     if impl not in ("expr", "block"):
         raise ValueError(f"unknown impl: {impl!r} (expected 'expr' or "
                          "'block')")
-    sel = fanout(df).select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).withColumn("__nu", norm_units(F.col("__v")))
-    buckets = _bucket_structs("__v", dim=dim, planes=planes,
-                              tables=tables, seed=seed)
+    # a null or wrong-length vector has a null cosine and can never
+    # reach the threshold; dropped before bucketing
+    sel = _vec_payload(fanout(df.filter(F.size(F.col(vec_col)) == dim)),
+                       id_col, vec_col)
     if impl == "block":
         # r9: verify INSIDE each bucket with the shared numpy block
         # scorer (bit-equal fixed-point math, score_units_block) — each
@@ -615,39 +638,14 @@ def embedding_dup_pairs_lsh(
         # raises with the planes lever named (hot buckets are near-dup
         # mass, but k² inside one task has a ceiling) — same guard
         # class as pack_greedy.
+        buckets = _bucket_structs("__v", dim=dim, planes=planes,
+                                  tables=tables, seed=seed)
         return _lsh_pairs_block(sel, buckets, threshold,
                                 max_bucket_rows=500_000)
-    # slim candidate ids: the vector column is pruned before the
-    # self-join, so the (tbl, key) exchange and the pair-level
-    # dropDuplicates carry ids only
-    b = sel.select("__id", F.explode(buckets).alias("bk")) \
-           .select("__id", "bk.tbl", "bk.key")
-    cand = (
-        b.alias("a")
-        .join(
-            b.alias("b"),
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pa = sel.select(F.col("__id").alias("id_a"), F.col("__v").alias("__va"),
-                    F.col("__nu").alias("__na"))
-    pb = sel.select(F.col("__id").alias("id_b"), F.col("__v").alias("__vb"),
-                    F.col("__nu").alias("__nb"))
-    return (
-        cand.join(pa, "id_a").join(pb, "id_b")
-        .select(
-            "id_a", "id_b",
-            cosine_from_units(
-                dot_units(F.col("__va"), F.col("__vb")),
-                F.col("__na"), F.col("__nb"),
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
+    return (_lsh_cosine_pairs(sel, sel, operator.lt, ("id_a", "id_b"),
+                              dim=dim, planes=planes, tables=tables,
+                              seed=seed)
+            .filter(F.col("cos") >= threshold))
 
 
 def _lsh_pairs_block(sel: DataFrame, buckets, threshold: float,
@@ -660,40 +658,23 @@ def _lsh_pairs_block(sel: DataFrame, buckets, threshold: float,
     each — final-pair dedup is tiny)."""
     import pandas as pd
 
-    from rayforce_spark.datapipe.dedup import score_units_block
+    from rayforce_spark.datapipe.dedup import _pairs_schema, _score_frames
 
-    id_type = sel.schema["__id"].dataType
-    out_schema = T.StructType([
-        T.StructField("id_a", id_type),
-        T.StructField("id_b", id_type),
-        T.StructField("cos", T.DoubleType()),
-    ])
     b = (sel.select("__id", "__v", F.explode(buckets).alias("bk"))
          .select("__id", "__v", "bk.tbl", "bk.key"))
-    thr = threshold
-    limit = max_bucket_rows
 
     def _score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        if len(pdf) > limit:
+        if len(pdf) > max_bucket_rows:
             raise ValueError(
                 f"embedding_dup_pairs_lsh[block]: bucket holds "
-                f"{len(pdf)} vectors > max_bucket_rows={limit}; raise "
-                "planes= (halves expected bucket size per plane) or "
+                f"{len(pdf)} vectors > max_bucket_rows={max_bucket_rows}; "
+                "raise planes= (halves expected bucket size per plane) or "
                 "use impl='expr' (streams pairs instead of "
                 "materializing the bucket)")
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": pdf["__id"][:0],
-                                 "id_b": pdf["__id"][:0],
-                                 "cos": pd.Series(dtype="float64")})
-        A = np.stack([np.asarray(x, dtype=np.float64)
-                      for x in pdf["__v"]])
-        ids = pdf["__id"].to_numpy()
-        ii, jj, cc = score_units_block(A, A, ids, ids, thr)
-        return pd.DataFrame({"id_a": ids[ii], "id_b": ids[jj], "cos": cc})
+        return _score_frames(pdf, pdf, threshold)
 
-    return (b.groupBy("tbl", "key").applyInPandas(_score, out_schema)
+    return (b.groupBy("tbl", "key")
+            .applyInPandas(_score, _pairs_schema(sel.schema["__id"].dataType))
             .dropDuplicates(["id_a", "id_b"]))
 
 
@@ -765,27 +746,6 @@ def knn_ivf_indexed(
     union cleanly."""
     centroids = load_ivf_centroids(spark, path)
     if not centroids:
-        return (queries.select(F.col(query_id_col).alias("query_id"))
-                .limit(0)
-                .withColumn("neighbor_id", F.lit(None).cast(id_type))
-                .withColumn("cos", F.lit(0.0))
-                .withColumn("rank", F.lit(1)))
-    c = spark.read.parquet(f"{path}/data").withColumn(
-        "__cn", norm_units(F.col("__cv")))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    ).withColumn(
-        "__list", F.explode(_nearest_pandas(centroids, nprobe)(F.col("__qv")))
-    ).withColumn("__qn", norm_units(F.col("__qv")))
-    cand = q.join(c, "__list").select(
-        "query_id", "neighbor_id",
-        cosine_from_units(
-            dot_units(F.col("__qv"), F.col("__cv")),
-            F.col("__qn"), F.col("__cn"),
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+        return _no_neighbors(queries, query_id_col, id_type)
+    return _ivf_top_k(spark.read.parquet(f"{path}/data"), queries,
+                      query_id_col, vec_col, centroids, nprobe, k)

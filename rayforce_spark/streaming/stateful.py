@@ -261,8 +261,13 @@ def stream_neardup(
     document that near-duplicates one seen EARLIER in the stream, at
     ingest time, without a batch all-corpus pass.
 
-    Plan: the minhash signature and band buckets are the SAME pure-JVM
-    expressions as the batch operator (scan stage, no Python), then one
+    Plan: the minhash signature is the SAME pure-JVM expression as the
+    batch operator (scan stage, no Python). The band buckets are NOT:
+    each band slice is keyed by Spark's 32-bit ``F.hash`` with the band
+    index mixed in, where the batch ``_band_buckets`` (and so every
+    persisted minhash index) uses xxhash64 — a streamed bucket never
+    equals a batch or index bucket, and the stream's state is keyed by
+    the 32-bit value. Then one
     applyInPandasWithState keyed by band bucket holds the recent
     signatures seen per bucket. Each new document is scored against its
     bucket's buffer by signature agreement — the standard MinHash

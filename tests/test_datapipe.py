@@ -1936,6 +1936,36 @@ def test_arrow_paths_on_empty_and_all_null_inputs(spark):
     assert [tuple(r.m) for r in m.collect()] == [(0.0, 0.0, True)] * 4
 
 
+def test_embedding_block_scorers_skip_null_vectors(spark):
+    """A null vector (and, for the LSH pairs, one whose length is not
+    ``dim``) has a null cosine, so it can never pass the threshold: both
+    block scorers drop such rows before blocking/bucketing and return
+    exactly the expr pairs, where they used to raise."""
+    from rayforce_spark.datapipe.similarity import embedding_dup_pairs_lsh
+
+    vs = "vec_id long, embedding array<double>"
+    e = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, -0.05 * i]) for i in range(6)]
+        + [(6, None), (7, None)], vs)
+
+    def pairs(df):
+        return {(r.id_a, r.id_b): r.cos for r in df.collect()}
+
+    ex = pairs(embedding_dup_pairs(e, "embedding", "vec_id", threshold=-2.0,
+                                   impl="expr"))
+    assert len(ex) == 15
+    assert pairs(embedding_dup_pairs(e, "embedding", "vec_id",
+                                     threshold=-2.0, impl="block",
+                                     nblocks=3)) == ex
+    e = e.unionByName(spark.createDataFrame([(8, [1.0, 0.0])], vs))
+    kw = dict(threshold=-2.0, dim=3, planes=1, tables=16)
+    lx = pairs(embedding_dup_pairs_lsh(e, "embedding", "vec_id",
+                                       impl="expr", **kw))
+    assert lx and lx.items() <= ex.items()
+    assert pairs(embedding_dup_pairs_lsh(e, "embedding", "vec_id",
+                                         impl="block", **kw)) == lx
+
+
 def test_embedding_pandas_impl_bit_equal(tables):
     """The numpy block scorer is BIT-identical to the JVM fixed-point
     fold — over EVERY all-pairs cosine (threshold -2 keeps all), not
@@ -2153,6 +2183,38 @@ def test_pack_greedy_slim_arrow_batch(spark):
     fmg = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandas" in ln]
     assert fmg, plan
     assert all("text" not in ln for ln in fmg), fmg
+
+
+def test_python_stages_on_zero_rows(spark):
+    """Zero-row inputs through the packing and iterate Python stages:
+    each returns zero rows with its declared schema."""
+    import pandas as pd
+
+    from rayforce_spark.datapipe import pack_greedy, pack_offsets
+    from rayforce_spark.operators.iterate import apply_grouped, apply_rows
+
+    d = spark.createDataFrame([], "doc_id long, text string").repartition(3)
+    off = pack_offsets(d, "text", "doc_id", budget=8, shards=3)
+    assert off.collect() == [] and off.columns == [
+        "doc_id", "text", "shard", "n_tok", "tok_start", "pack_first",
+        "pack_last"]
+    grd = pack_greedy(d, "text", "doc_id", budget=8, shards=3)
+    assert grd.collect() == [] and grd.dtypes == [
+        ("doc_id", "bigint"), ("text", "string"), ("shard", "bigint"),
+        ("n_tok", "int"), ("pack", "bigint")]
+
+    def lengths(pdf):
+        return pd.DataFrame({"doc_id": pdf["doc_id"],
+                             "n": pdf["text"].str.len()})
+
+    want = [("doc_id", "bigint"), ("n", "bigint")]
+    for impl in ("spark", "batched"):
+        out = apply_grouped(d, ["doc_id"], lengths, "doc_id long, n long",
+                            impl=impl)
+        assert out.collect() == [] and out.dtypes == want, impl
+    out = apply_rows(d, lambda it: (lengths(p) for p in it),
+                     "doc_id long, n long")
+    assert out.collect() == [] and out.dtypes == want
 
 
 def test_curate_quality_global_window_optin(tables):

@@ -231,3 +231,31 @@ def test_load_tables_pins_confs_on_every_call(spark, tmp_path):
         assert {k: ext.conf.get(k) for k in pins} == pins
         assert first is None or got is first
         first = got
+
+
+def test_load_tables_ts_micros_and_nanos_agree(spark, tmp_path):
+    """Parquet timestamp drift: one events table written as
+    TIMESTAMP(MICROS) and as TIMESTAMP(NANOS) loads to the same LongType
+    i64-ns ``ts``, pre-1970 instants included."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    from rayforce_spark.session import load_tables
+
+    us = [-86_400_000_001, -1, 0, 1_700_000_000_123_456]
+    got = {}
+    for unit in ("us", "ns"):
+        d = tmp_path / unit
+        d.mkdir()
+        pq.write_table(pa.table({
+            "event_id": pa.array(range(len(us)), pa.int64()),
+            "ts": pa.array(us, pa.timestamp("us")).cast(pa.timestamp(unit)),
+        }), d / "events.parquet")
+        stored = pq.ParquetFile(d / "events.parquet").schema.column(1)
+        assert {"us": "micro", "ns": "nano"}[unit] in str(
+            stored.logical_type).lower()
+        ev = load_tables(spark, str(d), ["events"])["events"]
+        assert ev.schema["ts"].dataType == LongType()
+        got[unit] = [r.ts for r in ev.orderBy("event_id").collect()]
+    assert got["us"] == got["ns"] == [u * 1000 for u in us]
