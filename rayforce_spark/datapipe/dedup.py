@@ -270,9 +270,18 @@ def _predicted_emission(b: DataFrame, keys: list[str]) -> int:
 _DENSE_GUARD_ROW_FLOOR = 2_000_000
 
 
+def _below_row_floor(bucket_rows: int) -> bool:
+    """The guard's row-floor rule: a banded (docs×bands) layout with
+    fewer bucket rows than _DENSE_GUARD_ROW_FLOOR is always "sparse".
+    _guard_decision skips it for unbanded layouts and when
+    ``dense_threshold`` is passed explicitly; the index ingest applies
+    it to a batch's known row count (_minhash_intra)."""
+    return bucket_rows < _DENSE_GUARD_ROW_FLOOR
+
+
 def _dense_decision(b: DataFrame, keys: list[str], gkey: str,
                     thresh: int, *, mod_col: str | None = None,
-                    sample_mod: int = 16, row_floor: int = 0) -> str:
+                    sample_mod: int = 16) -> str:
     """Pick the candidate-join plan from the bucket-size distribution:
 
     - "sparse"   — predicted emission Σ n·(n−1)/2 ≤ ``thresh``: the r11
@@ -322,8 +331,6 @@ def _dense_decision(b: DataFrame, keys: list[str], gkey: str,
     rep·2 ≤ raw TRUE there — measured: collapsing it cost 2.6 s vs
     1.2 s sparse), so simhash's default is 100x the base and ordinary
     corpora stay on the sparse plan."""
-    if row_floor and b.count() < row_floor:
-        return "sparse"
     scale = 1
     if mod_col is not None and sample_mod > 1:
         b = b.filter(F.pmod(F.col(mod_col), F.lit(sample_mod)) == 0)
@@ -351,15 +358,16 @@ def _guard_decision(b: DataFrame, keys: list[str], gkey: str,
                     mod_col: str | None = None) -> str:
     """The dense guard of one pair generator: resolve its threshold
     (``dense_threshold``, else ``scale`` × _DENSE_GUARD_THRESHOLD) and
-    its row floor (_DENSE_GUARD_ROW_FLOOR for ``banded`` docs×bands
-    layouts, unless a threshold was passed explicitly — that forces the
-    stats job on a small corpus), then _dense_decision."""
+    its row floor (_below_row_floor, one count() job, for ``banded``
+    docs×bands layouts, unless a threshold was passed explicitly — that
+    forces the stats job on a small corpus), then _dense_decision."""
     if dense_threshold is not None:
         return _dense_decision(b, keys, gkey, dense_threshold,
                                mod_col=mod_col)
-    return _dense_decision(
-        b, keys, gkey, scale * _DENSE_GUARD_THRESHOLD, mod_col=mod_col,
-        row_floor=_DENSE_GUARD_ROW_FLOOR if banded else 0)
+    if banded and _below_row_floor(b.count()):
+        return "sparse"
+    return _dense_decision(b, keys, gkey, scale * _DENSE_GUARD_THRESHOLD,
+                           mod_col=mod_col)
 
 
 def _expand_rep_pairs(rep_pairs: DataFrame, reps: DataFrame,
@@ -1528,18 +1536,26 @@ def _score_frames(pa, pb, thr: float):
     """(id_a, id_b, cos) pandas frame of the pairs between two
     (__id, __v) pandas frames that pass ``thr`` — score_units_block over
     the stacked vectors, shared by the all-pairs and LSH block
-    scorers."""
+    scorers. Only same-length pairs are scored: the ``expr`` fold gives
+    a cross-length pair a null cosine, which never passes ``thr``."""
     import numpy as np
     import pandas as pd
 
-    if not len(pa) or not len(pb):
-        return pd.DataFrame({"id_a": pa["__id"][:0], "id_b": pb["__id"][:0],
-                             "cos": pd.Series(dtype="float64")})
-    A = np.stack([np.asarray(x, dtype=np.float64) for x in pa["__v"]])
-    B = np.stack([np.asarray(x, dtype=np.float64) for x in pb["__v"]])
-    ida, idb = pa["__id"].to_numpy(), pb["__id"].to_numpy()
-    ii, jj, cc = score_units_block(A, B, ida, idb, thr)
-    return pd.DataFrame({"id_a": ida[ii], "id_b": idb[jj], "cos": cc})
+    la, lb = pa["__v"].map(len), pb["__v"].map(len)
+    out_a, out_b = [pa["__id"].to_numpy()[:0]], [pb["__id"].to_numpy()[:0]]
+    out_c = [np.empty(0, dtype=np.float64)]
+    for d in set(la) & set(lb):
+        a, b = pa[la == d], pb[lb == d]
+        A = np.stack([np.asarray(x, dtype=np.float64) for x in a["__v"]])
+        B = np.stack([np.asarray(x, dtype=np.float64) for x in b["__v"]])
+        ida, idb = a["__id"].to_numpy(), b["__id"].to_numpy()
+        ii, jj, cc = score_units_block(A, B, ida, idb, thr)
+        out_a.append(ida[ii])
+        out_b.append(idb[jj])
+        out_c.append(cc)
+    return pd.DataFrame({"id_a": np.concatenate(out_a),
+                         "id_b": np.concatenate(out_b),
+                         "cos": np.concatenate(out_c)})
 
 
 def _embedding_pairs_block(df: DataFrame, vec_col: str, id_col: str,
@@ -1715,8 +1731,9 @@ class _IndexFamily:
     override); ``probe_params(meta, **overrides)`` resolves and
     validates call-site overrides; ``probe(spark, path, legs, params)``
     returns verified (new_id, index_id, metric) rows; and
-    ``intra_pairs(batch, text_col, id_col, params, legs)`` returns the
-    batch's own (id_a, id_b, metric) pairs for the ingest."""
+    ``intra_pairs(batch, text_col, id_col, params, legs, rows)`` returns
+    the batch's own (id_a, id_b, metric) pairs for the ingest, given its
+    ``rows`` count."""
 
     name: str
     format: int
@@ -1732,11 +1749,64 @@ class _IndexFamily:
 _META_CASTS = {"int": int, "double": float, "string": str}
 
 
+def _index_handle(spark, path: str) -> dict:
+    """This session's handle on the index at ``path``: ``{"stamp",
+    "meta", "schemas"}`` — the raw ``_meta`` row and each stored leg's
+    inferred schema, filled on first read. Like RayforceDB's splayed
+    ``.d`` schema file, ``_meta`` is the index's shape: the handle is
+    keyed by a stamp of ``_meta``'s files (sorted name, mtime, length
+    from one Hadoop ``listStatus``, no Spark job), so a rebuild in
+    place, ``stamp_index_format`` or any other ``_meta`` rewrite starts
+    a fresh handle that re-reads everything. Appends never change a
+    leg's schema, so they keep the handle.
+
+    Held on the session object, as ``session._resolved`` holds its
+    tables: collected with the session, and ``spark.newSession()``
+    starts empty (an ingest hands its own handles to every
+    micro-batch's session wrapper, see _index_ingest). Without a
+    ``_meta`` there is nothing to cache: the handle is a throwaway, and
+    the ``_meta`` read raises as it always did."""
+    from rayforce_spark.sources._sidecar import _fs_path
+
+    fs, p = _fs_path(spark, f"{path}/_meta")
+    if not fs.exists(p):
+        return {"stamp": None, "meta": None, "schemas": {}}
+    # stamp BEFORE reading: a _meta rewritten mid-read leaves an older
+    # stamp, so the next call re-reads rather than keeping it
+    stamp = sorted((f.getPath().getName(), f.getModificationTime(),
+                    f.getLen()) for f in fs.listStatus(p))
+    # qualified index path -> handle
+    handles = getattr(spark, "_rayforce_index_handles", None)
+    if handles is None:
+        handles = spark._rayforce_index_handles = {}
+    key = fs.makeQualified(p).getParent().toString()
+    h = handles.get(key)
+    if h is None or h["stamp"] != stamp:
+        h = handles[key] = {"stamp": stamp, "meta": None, "schemas": {}}
+    return h
+
+
+def _read_leg(spark, path: str, leg: str) -> DataFrame:
+    """A stored leg of the index at ``path``: the first read per handle
+    infers its schema (one Spark job), every later read passes it."""
+    h = _index_handle(spark, path)
+    schema = h["schemas"].get(leg)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(f"{path}/{leg}")
+    df = spark.read.parquet(f"{path}/{leg}")
+    h["schemas"][leg] = df.schema
+    return df
+
+
 def _read_meta(spec: _IndexFamily, spark, path: str) -> dict:
     """The stored build parameters, behind the format gate: mismatched
     on-disk hash/bucket families don't error at probe time, they return
-    empty results, so the version check is the only loud failure."""
-    meta = spark.read.parquet(f"{path}/_meta").collect()[0].asDict()
+    empty results, so the version check is the only loud failure. The
+    row is read once per index handle; the gate runs on every call."""
+    h = _index_handle(spark, path)
+    if h["meta"] is None:
+        h["meta"] = spark.read.parquet(f"{path}/_meta").collect()[0].asDict()
+    meta = dict(h["meta"])
     got = meta.pop("format", None)
     if got != spec.format:
         raise ValueError(
@@ -1828,7 +1898,7 @@ def _extend_index(spec: _IndexFamily, new_df: DataFrame, path: str,
                 "append")
 
 
-def _compact_leg(spark, leg_path: str) -> tuple[int, int]:
+def _compact_leg(spark, path: str, leg: str) -> tuple[int, int]:
     """Compact ONE index leg directory in place: read it, collapse
     exact-duplicate rows (only torn/replayed appends produce them —
     every index-leg row kind is semantically idempotent, and the probes
@@ -1848,6 +1918,7 @@ def _compact_leg(spark, leg_path: str) -> tuple[int, int]:
     driver-collected)."""
     from rayforce_spark.sources._sidecar import _fs_path
 
+    leg_path = f"{path}/{leg}"
     fs, p = _fs_path(spark, leg_path)
     # data files only: Spark ignores _*/.* (markers, _SUCCESS), and the
     # append below REwrites _SUCCESS at the same name — deleting it from
@@ -1864,7 +1935,7 @@ def _compact_leg(spark, leg_path: str) -> tuple[int, int]:
     # floor would UNDO compaction for any leg smaller than
     # cores x 128 MB (measured: it re-fragmented toy legs)
     target_files = int(total_bytes // (128 << 20)) + 1
-    data = (spark.read.parquet(leg_path).dropDuplicates()
+    data = (_read_leg(spark, path, leg).dropDuplicates()
             .repartition(target_files)
             .localCheckpoint(eager=True))
     data.write.mode("append").parquet(leg_path)
@@ -1892,7 +1963,7 @@ def _compact_index(spec: _IndexFamily, spark, path: str) -> dict:
     fs.mkdirs(jp)  # idempotent — a re-run after a crash re-takes it
     out = {
         leg: dict(zip(("files_before", "files_after"),
-                      _compact_leg(spark, f"{path}/{leg}")))
+                      _compact_leg(spark, path, leg)))
         for leg in spec.legs
     }
     fs.delete(jp, True)
@@ -1944,11 +2015,16 @@ def _index_ingest(spec: _IndexFamily, index_path: str, pairs_path: str,
                   **overrides) -> Callable[[DataFrame, int], None]:
     """The foreachBatch ingest every stream_*_index_ingest returns (the
     idempotency contract is documented on
-    streaming.ops.stream_minhash_index_ingest): marker-skip, one eager
-    localCheckpoint of the micro-batch, ONE ``_meta`` read and ONE
-    build of the batch's legs — shared by the probe, the intra-batch
-    pairs (minhash reuses the shingle leg) and the append — then the
-    overwrite pair partition, the append and the commit marker last.
+    streaming.ops.stream_minhash_index_ingest): marker-skip, one lazy
+    localCheckpoint of the micro-batch materialized by its row count
+    (the only pass over the source), the ``_meta`` row and the stored
+    legs' schemas from the session's index handle (no Spark job while
+    ``_meta`` is unchanged — see _index_handle), and ONE build of the
+    batch's legs — shared by the probe, the intra-batch pairs (below
+    the dense guard's row floor minhash builds them from the batch's
+    bucket and shingle legs instead of re-signing through
+    minhash_lsh_pairs) and the append — then the overwrite pair
+    partition, the append and the commit marker last.
 
     ``compact_every``: compact after every N-th committed batch.
     foreachBatch is the ONE place auto-compaction is safe by
@@ -1958,8 +2034,16 @@ def _index_ingest(spec: _IndexFamily, index_path: str, pairs_path: str,
     BEFORE touching the index and re-runs the compaction to completion,
     self-healing instead of wedging the stream on the lease error."""
 
+    # PySpark hands each foreachBatch micro-batch a NEW Python
+    # SparkSession object over the query's one JVM session: every batch
+    # gets this ingest's one handles dict, so a stream's batches share
+    # them as direct calls on one session do (a handle depends only on
+    # the index files, which its stamp tracks, not on the session)
+    handles: dict = {}
+
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        spark._rayforce_index_handles = handles
         fs, lease = _lease(spark, index_path)
         if fs.exists(lease):  # crashed compaction — finish it first
             _compact_index(spec, spark, index_path)
@@ -1969,9 +2053,11 @@ def _index_ingest(spec: _IndexFamily, index_path: str, pairs_path: str,
             return  # fully committed before a restart — replay is a no-op
         # freeze the micro-batch once: the probe, the intra-batch pairs,
         # the id anti-join and the append are separate Spark jobs, and
-        # re-reading the source per job would re-pay the scan each time
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.count() > 0:
+        # re-reading the source per job would re-pay the scan each time.
+        # The row count is the job that materializes the lazy checkpoint
+        batch_df = batch_df.localCheckpoint(eager=False)
+        n = batch_df.count()
+        if n > 0:
             meta = _read_meta(spec, spark, index_path)
             params = spec.probe_params(meta, **overrides)
             legs = spec.batch_legs(batch_df, text_col, id_col, index_path,
@@ -1989,7 +2075,7 @@ def _index_ingest(spec: _IndexFamily, index_path: str, pairs_path: str,
             )
             if intra_batch:
                 pairs = pairs.unionByName(spec.intra_pairs(
-                    batch_df, text_col, id_col, params, legs))
+                    batch_df, text_col, id_col, params, legs, n))
             pairs.write.mode("overwrite").parquet(
                 f"{pairs_path}/batch={batch_id}")
             _check_compaction_lease(spark, index_path, spec.name)
@@ -2010,7 +2096,8 @@ def _minhash_legs(df: DataFrame, text_col: str, id_col: str, path: str,
                   p: dict) -> dict:
     """``shingles`` (__id, __bh) and ``buckets`` (__id, __bucket) of a
     batch, derived from ONE materialized shingle pass: the two legs feed
-    independent Spark jobs (two writes, or a write and a join), and
+    independent Spark jobs (two writes, or a write and a join — in the
+    ingest also the intra-batch bucket self-join, see _minhash_intra), and
     recomputing the shingles per job would persist INCONSISTENT legs for
     a non-deterministic input (sampled / rand-keyed / mutated-between-
     jobs sources) — a silent corruption of the exact-Jaccard verify, not
@@ -2049,17 +2136,28 @@ def _minhash_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     # widening is skew-free here (index-side hot buckets spread across
     # tasks; the broadcast batch reaches all of them) and a no-op at
     # real scale, where index legs always carry more splits than cores.
-    idx = fanout(spark.read.parquet(f"{path}/buckets"))
+    idx = fanout(_read_leg(spark, path, "buckets"))
     cand = _minhash_candidates(legs["buckets"], idx, operator.ne, _PROBE_IDS)
     return _minhash_verify(cand, legs["shingles"],
-                           spark.read.parquet(f"{path}/shingles"),
+                           _read_leg(spark, path, "shingles"),
                            p["threshold"], _PROBE_IDS)
 
 
 def _minhash_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
-                   legs: dict) -> DataFrame:
-    # the batch's shingle leg serves the signature AND verify sides:
-    # the batch is shingled once for the probe, the pairs and the append
+                   legs: dict, rows: int) -> DataFrame:
+    # bucket rows are exactly rows x bands: below the dense guard's row
+    # floor its answer is always "sparse", so the pairs are that plan
+    # over the batch's own legs — the bucket projection the probe and
+    # the append use, with no minhash_lsh_pairs re-signing, no second
+    # checkpoint and no guard count job
+    if _below_row_floor(rows * p["bands"]):
+        sh = legs["shingles"]
+        return _minhash_verify(
+            _minhash_candidates(legs["buckets"], legs["buckets"],
+                                operator.lt),
+            sh, sh, p["threshold"])
+    # at or above it the guard protects a dense batch; the shingle leg
+    # still serves its signature and verify sides
     return minhash_lsh_pairs(
         batch, text_col, id_col, threshold=p["threshold"],
         num_perm=p["num_perm"], bands=p["bands"],
@@ -2175,13 +2273,13 @@ def _simhash_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     filters inside the join projection."""
     # fanout: same index-leg scan-parallelism guard as _minhash_probe
     return _simhash_join(legs["banded"],
-                         fanout(spark.read.parquet(f"{path}/banded")),
+                         fanout(_read_leg(spark, path, "banded")),
                          p["bands"], p["max_hamming"], operator.ne,
                          _PROBE_IDS)
 
 
 def _simhash_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
-                   legs: dict) -> DataFrame:
+                   legs: dict, rows: int) -> DataFrame:
     return simhash_dup_pairs(batch, text_col, id_col,
                              max_hamming=p["max_hamming"], bands=p["bands"],
                              token_hash=p["token_hash"])
@@ -2273,7 +2371,7 @@ def _jaccard_legs(df: DataFrame, text_col: str, id_col: str, path: str,
     # build dropped)
     return _jaccard_toks_legs(
         _jaccard_batch_toks(df, text_col, id_col, p["shingle_k"]),
-        df.sparkSession.read.parquet(f"{path}/dfreq"), p)
+        _read_leg(df.sparkSession, path, "dfreq"), p)
 
 
 def _jaccard_probe_params(meta: dict, threshold: float | None = None) -> dict:
@@ -2299,7 +2397,7 @@ def _jaccard_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     # as _minhash_probe; on a template-dense corpus the quadratic
     # candidate emission otherwise runs on ONE task (r11: the 10x probe
     # was single-core for minutes)
-    idx_pref = fanout(spark.read.parquet(f"{path}/prefixes"))
+    idx_pref = fanout(_read_leg(spark, path, "prefixes"))
     # the batch pref side inherits the sorted-docs aggregate's
     # AQE-coalesced partitioning (ONE partition for a small batch) —
     # if AQE broadcasts the index side instead, the batch becomes the
@@ -2309,12 +2407,12 @@ def _jaccard_probe(spark, path: str, legs: dict, p: dict) -> DataFrame:
     cand = _jaccard_candidates(pref, idx_pref, num, den, operator.ne,
                                _PROBE_IDS)
     return _jaccard_verify(cand, legs["docs"],
-                           spark.read.parquet(f"{path}/docs"),
+                           _read_leg(spark, path, "docs"),
                            p["threshold"], _PROBE_IDS)
 
 
 def _jaccard_intra(batch: DataFrame, text_col: str, id_col: str, p: dict,
-                   legs: dict) -> DataFrame:
+                   legs: dict, rows: int) -> DataFrame:
     return jaccard_dup_pairs(batch, text_col, id_col,
                              shingle_k=p["shingle_k"],
                              threshold=p["threshold"],

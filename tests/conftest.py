@@ -64,3 +64,16 @@ def assert_matches_duckdb(sdf, duck, sql, *, float_tol=1e-9):
                 assert a == pytest.approx(b, rel=float_tol, abs=1e-9), (sr, dr)
             else:
                 assert a == b, (sr, dr)
+
+
+def jobs_of(spark, fn, group):
+    """(fn's result, the Spark job ids it launched under ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it before asking
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

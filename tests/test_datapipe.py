@@ -536,6 +536,81 @@ def test_minhash_index_other_sig_family_fails_loudly(spark, tmp_path):
             call()
 
 
+def test_index_handle_second_probe_build_reads_no_metadata(spark, tmp_path):
+    """Each index has a per-session handle holding its ``_meta`` row and
+    its stored legs' schemas, keyed by a stamp of ``_meta``'s files:
+    building a second probe DataFrame on an unchanged index reads no
+    index metadata, and gives the same pairs. For minhash and simhash
+    that build launches no Spark job at all. For jaccard it does not
+    reach zero: its sorted-docs leg is a lazy localCheckpoint over a
+    join and an aggregate, and under AQE that call runs its exchange
+    stages at once, so the build still launches the jobs of building
+    the batch's legs alone, and this test pins only that. A new session
+    starts with no handles, so its first build reads again."""
+    from rayforce_spark.datapipe import (
+        jaccard_index_pairs,
+        minhash_index_pairs,
+        set_jaccard_index,
+        set_minhash_index,
+        set_simhash_index,
+        simhash_index_pairs,
+    )
+    from rayforce_spark.datapipe import dedup as D
+    from tests.conftest import jobs_of
+
+    rows = [(1, "aa bb cc dd ee"), (2, "aa bb cc dd ff"), (3, "xx yy zz")]
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(rows, schema)
+    other = spark.newSession()
+    other_docs = other.createDataFrame(rows, schema)
+    for fam, spec, set_fn, probe_fn in [
+        ("minhash", D._MINHASH, set_minhash_index, minhash_index_pairs),
+        ("simhash", D._SIMHASH, set_simhash_index, simhash_index_pairs),
+        ("jaccard", D._JACCARD, set_jaccard_index, jaccard_index_pairs),
+    ]:
+        path = str(tmp_path / fam)
+        set_fn(docs, path, "text", "doc_id")
+        first, first_jobs = jobs_of(
+            spark, lambda: probe_fn(path, docs, "text", "doc_id"),
+            f"handle-{fam}-first")
+        again, again_jobs = jobs_of(
+            spark, lambda: probe_fn(path, docs, "text", "doc_id"),
+            f"handle-{fam}-again")
+        _, legs_jobs = jobs_of(
+            spark, lambda: spec.batch_legs(
+                docs, "text", "doc_id", path,
+                D._read_meta(spec, spark, path)),
+            f"handle-{fam}-legs")
+        assert first_jobs, fam
+        assert len(again_jobs) == len(legs_jobs), fam
+        assert fam == "jaccard" or again_jobs == [], fam
+        assert sorted(again.collect()) == sorted(first.collect()), fam
+        _, other_jobs = jobs_of(
+            other, lambda: probe_fn(path, other_docs, "text", "doc_id"),
+            f"handle-{fam}-other")
+        assert other_jobs, fam
+
+
+def test_embedding_block_scorer_mixed_vector_lengths(spark):
+    """Vectors of different lengths have a null ``expr`` cosine, so they
+    never pair: the block scorer scores each length's vectors among
+    themselves and returns exactly the expr pairs, where stacking them
+    together used to raise."""
+    e = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, -0.05 * i]) for i in range(4)]
+        + [(4, [1.0, 0.2]), (5, [0.9, 0.3])],
+        "vec_id long, embedding array<double>")
+
+    def pairs(impl, **kw):
+        return {(r.id_a, r.id_b): r.cos for r in embedding_dup_pairs(
+            e, "embedding", "vec_id", threshold=-2.0, impl=impl,
+            **kw).collect()}
+
+    ex = pairs("expr")
+    assert len(ex) == 6 + 1 and (4, 5) in ex
+    assert pairs("block", nblocks=3) == ex
+
+
 def test_arrow_default_fails_fast_when_missing(spark, monkeypatch):
     """The LSH keys, IVF assignment, simhash fingerprint and repetition
     stats run only as Arrow UDFs; with pyarrow absent they must fail

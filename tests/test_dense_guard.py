@@ -213,6 +213,65 @@ def test_stream_ingest_auto_compaction(tables, tmp_path, spark):
     assert fs.exists(jp(f"{path}/_batches/batch-2"))
 
 
+def test_minhash_ingest_row_floor_parity(tables, tmp_path, spark,
+                                         monkeypatch):
+    """Below the dense guard's row floor (bucket rows = docs x bands)
+    the guard always answers "sparse", so the ingest builds its
+    intra-batch MinHash pairs from the batch's own bucket and shingle
+    legs; at or above it the ingest calls the guarded
+    minhash_lsh_pairs. With the floor patched to 0 the same ingest
+    takes the guarded path, and both write identical pair partitions
+    and index rows."""
+    from rayforce_spark.datapipe import set_minhash_index
+    from rayforce_spark.streaming.ops import stream_minhash_index_ingest
+
+    docs = tables["documents"].select("doc_id", "text")
+    old = docs.filter(F.col("doc_id") % 3 == 0)
+    # each batch carries near-dup variants of its own docs, so the
+    # intra-batch pairs are not empty
+    batches = []
+    for k in (1, 2):
+        b = docs.filter(F.col("doc_id") % 3 == k)
+        variants = b.limit(5).select(
+            (F.col("doc_id") + 10_000_000).alias("doc_id"),
+            F.concat("text", F.lit(" variant")).alias("text"))
+        batches.append(b.unionByName(variants).localCheckpoint())
+    calls = []
+    real = dd.minhash_lsh_pairs
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(dd, "minhash_lsh_pairs", spy)
+
+    def run(tag):
+        idx, pairs = str(tmp_path / tag / "idx"), str(tmp_path / tag / "p")
+        set_minhash_index(old, idx, "text", "doc_id",
+                          num_perm=32, bands=16, shingle_k=1)
+        fn = stream_minhash_index_ingest(idx, pairs, "text", "doc_id",
+                                         threshold=0.5)
+        for i, b in enumerate(batches):
+            fn(b, i)
+        got = sorted(tuple(r) for r in spark.read.parquet(pairs).select(
+            "batch", "id_a", "id_b", "jaccard").collect())
+        legs = (sorted((r[0], tuple(sorted(r[1]))) for r in
+                       spark.read.parquet(f"{idx}/shingles").collect()),
+                sorted(tuple(r) for r in
+                       spark.read.parquet(f"{idx}/buckets").collect()))
+        return got, legs
+
+    from_legs = run("legs")
+    assert calls == []
+    monkeypatch.setattr(dd, "_DENSE_GUARD_ROW_FLOOR", 0)
+    guarded = run("guarded")
+    assert len(calls) == len(batches)
+    assert guarded == from_legs
+    # every variant pairs with its source inside its own batch
+    intra = [p for p in from_legs[0] if p[2] - p[1] == 10_000_000]
+    assert len(intra) == 2 * 5, intra
+
+
 def test_stamp_index_format_migrates_preversioning(tables, tmp_path, spark):
     """An unversioned simhash/jaccard _meta (written before format
     versioning existed) is unreadable by design; stamp_index_format

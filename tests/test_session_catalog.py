@@ -7,6 +7,7 @@ import os
 from pyspark.sql import functions as F
 
 from rayforce_spark import A, Session, insert, update
+from tests.conftest import jobs_of as _jobs_of
 
 
 def test_named_table_mutation(spark, tables):
@@ -98,19 +99,6 @@ def _write(path, keys):
     import pyarrow.parquet as pq
 
     pq.write_table(pa.table({"k": keys}), str(path))
-
-
-def _jobs_of(spark, fn, group):
-    """(fn's result, the Spark job ids it launched under ``group``)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "load_tables job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed by the listener bus: drain it before asking
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_load_tables_hit_returns_same_frames_without_jobs(spark, tmp_path):

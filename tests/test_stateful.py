@@ -391,3 +391,34 @@ def test_minhash_index_ingest_idempotent_replay(spark, tmp_path, family):
     out = spark.read.parquet(pairs).filter(F.col("batch") == 8)
     rows = [tuple(r) for r in out.select("id_a", "id_b").collect()]
     assert len(rows) == len(set(rows)) and rows
+
+
+def test_index_ingest_carries_handles_across_batch_sessions(spark, tmp_path):
+    """PySpark hands each foreachBatch micro-batch a new Python
+    SparkSession object over the query's one JVM session. The ingest
+    hands its one set of index handles to every wrapper, so a batch
+    on a fresh wrapper launches exactly the jobs of the same batch on
+    the first batch's session object: no ``_meta`` re-read and no leg
+    schema inference."""
+    from pyspark.sql import SparkSession
+
+    from rayforce_spark.datapipe import set_minhash_index
+    from rayforce_spark.streaming.ops import stream_minhash_index_ingest
+    from tests.conftest import jobs_of
+
+    schema = "doc_id long, text string"
+    docs = [(i, f"alpha beta gamma delta doc{i % 3}") for i in range(6)]
+    old = spark.createDataFrame(docs[:4], schema)
+    counts = []
+    for tag, wrap in (("same", False), ("fresh", True)):
+        idx = str(tmp_path / tag / "idx")
+        set_minhash_index(old, idx, "text", "doc_id", num_perm=16, bands=8)
+        fn = stream_minhash_index_ingest(idx, str(tmp_path / tag / "p"),
+                                         "text", "doc_id", threshold=0.5)
+        fn(spark.createDataFrame(docs[4:5], schema), 0)
+        s2 = (SparkSession(spark.sparkContext, spark._jsparkSession)
+              if wrap else spark)
+        batch = s2.createDataFrame(docs[5:], schema)
+        _, jobs = jobs_of(spark, lambda: fn(batch, 1), f"carry-{tag}")
+        counts.append(len(jobs))
+    assert counts[0] == counts[1], counts
